@@ -289,10 +289,20 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     DIRECTED input too: a source-only node keeps voting with its own
     label instead of dropping out of the state after round 1.
 
-    Scale shape: per round one edge⋈label join (state broadcast —
-    one BIGINT per node) + one (v, label) count aggregate + one
-    per-v argmax aggregate + one node-keyed carry-forward left join;
-    lineage truncated per round with an eager localCheckpoint.
+    Scale shape: with ``broadcast_state`` (default) the (s, d) edge
+    list is checkpointed ONCE hash-partitioned on ``d`` — one
+    edge-sized exchange before the loop. Invariant: the edge⋈label
+    join broadcasts the label state (one BIGINT per node), so it
+    keeps the edges' hashpartitioning(d), which already satisfies the
+    (d, label) count aggregate and the per-v argmax aggregate; the
+    carry-forward left join broadcasts the winners. Rounds therefore
+    run with no shuffle exchange, each truncated by an eager
+    localCheckpoint. The layout checkpoint runs inside
+    ``loop_materialization_conf`` because an AQE-planned checkpoint
+    reports UnknownPartitioning (so $SPARK_GRAFT_LOOP_AQE=1 brings
+    the per-round vote shuffles back). With ``broadcast_state=False``
+    the s-keyed shuffle join would destroy the layout, so that path
+    keeps a plain checkpoint and two vote exchanges per round.
 
     r14 note — tried and REVERTED: folding the carry-forward join
     into the count aggregate as a zero-weight SELF-VOTE per node
@@ -305,14 +315,6 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     more than the node-sized broadcast probe it replaces, because
     votes dominate the aggregate and the carry join is cheap. Keep
     the join form; don't retry without new evidence."""
-    e = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-         .localCheckpoint())
-    maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
-    labels = (e.select(F.col("s").alias("v"))
-              .unionByName(e.select(F.col("d").alias("v")))
-              .distinct()
-              .select("v", F.col("v").alias("label"))
-              .localCheckpoint())
     # rounds run with AQE scoped off — strategies pinned by maybe_bc,
     # re-planning per stage is pure driver overhead (see pagerank_integer)
     from flight_data_pipeline_spark.session import (
@@ -321,6 +323,20 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     )
 
     spark = edges.sparkSession
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    if broadcast_state:
+        # dst-partitioned edge layout (see Scale shape) — checkpointed
+        # under the loop scope so it keeps hashpartitioning(d)
+        with loop_materialization_conf(spark):
+            e = e.repartition("d").localCheckpoint()
+    else:
+        e = e.localCheckpoint()
+    maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
+    labels = (e.select(F.col("s").alias("v"))
+              .unionByName(e.select(F.col("d").alias("v")))
+              .distinct()
+              .select("v", F.col("v").alias("label"))
+              .localCheckpoint())
     for it in range(iters):
         with loop_materialization_conf(spark):
             votes = (
@@ -358,7 +374,8 @@ def min_plus_shortest_paths(edges: DataFrame, source: DataFrame,
                             weight: str = "w", iters: int = 3,
                             inf: int = 10**15,
                             broadcast_state: bool = True,
-                            materialize_edges: bool = True) -> DataFrame:
+                            edges_prematerialized: bool = False
+                            ) -> DataFrame:
     """Single-source shortest paths by ``iters`` rounds of BELLMAN-FORD
     relaxation over the (min, +) TROPICAL semiring → (v, dist) with
     dist = ``inf`` when no ≤``iters``-hop path exists. Where PageRank
@@ -380,13 +397,14 @@ def min_plus_shortest_paths(edges: DataFrame, source: DataFrame,
     carry-forward LEFT join and its broadcast build removed; the same
     partitioning every round; localCheckpoint truncates lineage.
 
-    ``materialize_edges=False`` skips the operator's own edge
-    checkpoint when the CALLER already materialized the edge frame
-    (copurchase_shortest_paths checkpoints ``ew`` for its source
-    aggregate — r13 double-materialized the same rows)."""
+    ``edges_prematerialized=True`` is the caller's promise that
+    ``edges`` is already materialized (checkpointed or cached), so the
+    operator skips its own edge checkpoint (copurchase_shortest_paths
+    checkpoints ``ew`` for its source aggregate — r13
+    double-materialized the same rows)."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"),
                      F.col(weight).cast("long").alias("w"))
-    if materialize_edges:
+    if not edges_prematerialized:
         e = e.localCheckpoint()
     maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
     # node set from src UNION dst: on directed input a sink (dst-only)

@@ -5407,10 +5407,12 @@ def copurchase_label_communities(spark: SparkSession,
     min-member and member-id checksum pinning MEMBERSHIP, not just
     sizes.
 
-    Plan: per round one edge⋈label join (label state broadcast — one
-    BIGINT per node) + one (v, label) count + a per-v argmax window;
-    localCheckpoint truncates lineage per round (operators/graph.
-    label_propagation_integer)."""
+    Plan: the edge list is checkpointed once hash-partitioned on the
+    vote target; per round one edge⋈label join (label state broadcast
+    — one BIGINT per node) + one (v, label) count aggregate + one per-v
+    argmax aggregate, both reusing that layout, so rounds run without
+    a shuffle exchange; localCheckpoint truncates lineage per round
+    (operators/graph.label_propagation_integer)."""
     from flight_data_pipeline_spark.operators.graph import (
         label_propagation_integer,
     )
@@ -5577,7 +5579,7 @@ def copurchase_shortest_paths(spark: SparkSession,
     # materialization would store the same rows a second time (r14)
     dist = min_plus_shortest_paths(ew, source, src="s", dst="d",
                                    weight="w", iters=3,
-                                   materialize_edges=False)
+                                   edges_prematerialized=True)
     w = Window.orderBy("dist", "v")
     return (
         dist.orderBy("dist", "v").limit(15)

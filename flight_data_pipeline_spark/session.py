@@ -172,12 +172,15 @@ def loop_materialization_conf(spark: SparkSession):
         return
     old = spark.conf.get("spark.sql.adaptive.enabled", "true")
     _LOOP_CONF_DEPTH = 1
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # exception-safe: the depth is back to 0 and the captured value is
+    # written back even when the entry set or the body raises; a
+    # failing restore still propagates, but cannot leave the depth set
     try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
         _LOOP_CONF_DEPTH = 0
+        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def dump_loop_plan(frame, name: str) -> None:

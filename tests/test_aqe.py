@@ -6,6 +6,7 @@ actually get those behaviors — not just that the configs are set."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_aqe_splits_skewed_sort_merge_join(spark):
@@ -84,3 +85,66 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
             conf.unset("spark.sql.adaptive.enabled")
         else:
             conf.set("spark.sql.adaptive.enabled", old_en)
+
+
+def _failing_conf_set(spark, monkeypatch, fail_on: str):
+    """Make ``spark.conf.set`` raise once when it is asked to write
+    ``fail_on`` to the AQE key; every other call goes through."""
+    real_set = spark.conf.set
+    state = {"failed": False}
+
+    def flaky(key, value):
+        if (key == "spark.sql.adaptive.enabled" and value == fail_on
+                and not state["failed"]):
+            state["failed"] = True
+            raise RuntimeError("conf.set failed")
+        real_set(key, value)
+
+    monkeypatch.setattr(spark.conf, "set", flaky)
+    return state
+
+
+def test_loop_conf_scope_survives_failing_set_on_entry(spark, monkeypatch):
+    """A raising ``conf.set`` on entry must not leave the reentrancy
+    depth set (a leaked depth would make every later scope a no-op
+    inner scope) nor change the session's AQE value."""
+    from flight_data_pipeline_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    state = _failing_conf_set(spark, monkeypatch, "false")
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with session.loop_materialization_conf(spark):
+            pass
+    assert state["failed"]
+    assert session._LOOP_CONF_DEPTH == 0
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prior
+    # the scope still works afterwards
+    with session.loop_materialization_conf(spark):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prior
+
+
+def test_loop_conf_scope_survives_failing_set_on_restore(spark,
+                                                         monkeypatch):
+    """A raising restore propagates to the caller, but the depth is back
+    to 0: the next scope is an outermost one again, which captures and
+    restores the session's value itself."""
+    from flight_data_pipeline_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    assert prior != "false"
+    state = _failing_conf_set(spark, monkeypatch, prior)
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with session.loop_materialization_conf(spark):
+            pass
+    assert state["failed"]
+    assert session._LOOP_CONF_DEPTH == 0
+    # the failed write left AQE off; the caller that saw the error
+    # repairs it
+    spark.conf.set("spark.sql.adaptive.enabled", prior)
+    with session.loop_materialization_conf(spark):
+        assert session._LOOP_CONF_DEPTH == 1
+    assert session._LOOP_CONF_DEPTH == 0
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prior

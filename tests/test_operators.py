@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 from flight_data_pipeline_spark.operators.dedup import exact_dedup, first_per_bucket
 from flight_data_pipeline_spark.operators.relational import asof_join
@@ -873,6 +874,97 @@ class TestLabelPropagationInteger:
         assert l2 == {1: 1, 2: 1, 3: 1}
 
 
+def _lpa_reference(edges, iters):
+    """Plain-Python synchronous LPA with the operator's contract:
+    labels seeded from src ∪ dst, each round every node takes its
+    most-voted in-neighbor label (one vote per edge, duplicates
+    included), ties to the smallest label, carry-forward without
+    in-votes."""
+    labels = {v: v for e in edges for v in e}
+    for _ in range(iters):
+        votes = {}
+        for s, d in edges:
+            c = votes.setdefault(d, {})
+            c[labels[s]] = c.get(labels[s], 0) + 1
+        labels = {v: min(votes[v].items(), key=lambda kv: (-kv[1], kv[0]))[0]
+                  if v in votes else lab
+                  for v, lab in labels.items()}
+    return labels
+
+
+def _random_multigraph(seed):
+    """Seeded directed multigraph over a few dozen nodes: duplicate
+    edges (vote counts > 1), self-loops, source-only nodes (no
+    in-edges), and — small degrees — plenty of tied votes."""
+    import random
+
+    rng = random.Random(seed)
+    n = 30
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(90)]
+    edges += rng.sample(edges, 15)                      # duplicates
+    edges += [(v, v) for v in rng.sample(range(n), 5)]  # self-loops
+    edges += [(n + k, rng.randrange(n)) for k in range(6)]  # no in-edges
+    rng.shuffle(edges)
+    return edges
+
+
+class TestLabelPropagationDstLayout:
+    """Pins for the dst-partitioned edge layout: with broadcast_state
+    the edge list is checkpointed hash-partitioned on dst and each
+    round's vote count and argmax reuse that layout instead of
+    shuffling. Both state paths must equal the plain-Python LPA.
+    Every test runs at 8 shuffle partitions, twice the session's 4
+    cores, so the layout spans more partitions than tasks run at
+    once (other get_spark callers may have reset the session value)."""
+
+    @pytest.fixture(autouse=True)
+    def _eight_shuffle_partitions(self, spark):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        yield
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    @pytest.mark.parametrize("broadcast_state", [True, False])
+    @pytest.mark.parametrize("seed", [7, 11, 23])
+    def test_matches_python_reference(self, spark, seed, broadcast_state):
+        from flight_data_pipeline_spark.operators.graph import (
+            label_propagation_integer,
+        )
+
+        und = _random_multigraph(seed)
+        edges = spark.createDataFrame(und, "src long, dst long")
+        got = {r.v: r.label
+               for r in label_propagation_integer(
+                   edges, iters=3,
+                   broadcast_state=broadcast_state).collect()}
+        assert got == _lpa_reference(und, 3)
+
+    def test_round_plan_has_no_shuffle_exchange(self, spark, tmp_path,
+                                                monkeypatch):
+        """The round-1 plan of the default path carries only broadcast
+        exchanges; the broadcast_state=False path still shuffles the
+        votes, which shows the check can see an Exchange at all."""
+        import re
+
+        from flight_data_pipeline_spark.operators.graph import (
+            label_propagation_integer,
+        )
+
+        shuffle = re.compile(r"(?<!Broadcast)Exchange\b")
+        edges = spark.createDataFrame(_random_multigraph(3),
+                                      "src long, dst long")
+        plans = {}
+        for bc in (True, False):
+            d = tmp_path / str(bc)
+            monkeypatch.setenv("SPARK_GRAFT_LOOP_PLAN_DIR", str(d))
+            label_propagation_integer(edges, iters=1,
+                                      broadcast_state=bc).collect()
+            plans[bc] = (d / "label_propagation_round1.txt").read_text()
+        assert "BroadcastExchange" in plans[True]
+        assert not shuffle.search(plans[True]), plans[True]
+        assert shuffle.search(plans[False])
+
+
 class TestMinPlusShortestPaths:
     EDGES = [
         # diamond where the 2-hop detour beats the direct edge
@@ -963,7 +1055,7 @@ class TestIterativeRoundRestructureR14:
         assert l2[8] == 7
 
     def test_min_plus_materialize_edges_false_identical(self, spark):
-        """materialize_edges=False (caller already checkpointed the
+        """edges_prematerialized=True (caller already checkpointed the
         edge frame) must yield the identical distance vector."""
         from flight_data_pipeline_spark.operators.graph import (
             min_plus_shortest_paths,
@@ -979,7 +1071,7 @@ class TestIterativeRoundRestructureR14:
         got = {r.v: r.dist
                for r in min_plus_shortest_paths(
                    edges.localCheckpoint(), source, iters=3,
-                   materialize_edges=False).collect()}
+                   edges_prematerialized=True).collect()}
         assert got == want
 
     def test_pagerank_integer_shuffle_state_matches_broadcast(

@@ -26,6 +26,7 @@ from flight_data_pipeline_spark.operators.relational import (
 )
 from flight_data_pipeline_spark.functions.scalars import to_units
 from flight_data_pipeline_spark.plans.registry import query
+from flight_data_pipeline_spark.session import cpu_dense_partitions
 from flight_data_pipeline_spark.tables import load_table
 
 CUTOFF = "1998-09-01"  # lineitem shipdate cutoff (Q1-style), pinned literal
@@ -4418,6 +4419,42 @@ def expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 BFS_SOURCE_PART = 1  # pinned BFS origin (exists at every fixture sf)
 
 
+def _copurchase_pairs(li: DataFrame) -> DataFrame:
+    """Co-purchase part pairs ``(u, v)`` with ``u < v``: one row per
+    order that holds both parts (repeated ``(o, p)`` lines count once).
+    Consumers add ``.distinct()`` for the edge set, or count rows per
+    ``(u, v)`` for the co-order support.
+
+    Plan: one o-keyed exchange, then a sorted ``collect_set`` per order
+    exploded in-row into its pairs, so per-order work is bounded by
+    basket width squared."""
+    return (
+        li.select(F.col("l_orderkey").alias("o"),
+                  F.col("l_partkey").alias("p"))
+        # repartition BEFORE the o-keyed aggregate, or Catalyst elides
+        # it and AQE coalesces the pair explode onto one task
+        # (OPTIMIZATION_r14.md §8)
+        .repartition(cpu_dense_partitions(li.sparkSession), "o")
+        .groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
+        .select(F.explode(F.expr(
+            "flatten(transform(ps, (x, i) ->"
+            " transform(slice(ps, i + 2, size(ps) - i - 1),"
+            "           y -> named_struct('u', x, 'v', y))))")).alias("z"))
+        .select("z.u", "z.v")
+    )
+
+
+def _both_ways(half: DataFrame, *carry: str) -> DataFrame:
+    """Directed ``(s, d, *carry)`` edges from a ``u < v`` pair frame:
+    each pair once per direction. A distinct ``half`` gives a distinct
+    result, since no mirrored row can equal an original."""
+    return (
+        half.select(F.col("u").alias("s"), F.col("v").alias("d"), *carry)
+        .unionByName(half.select(F.col("v").alias("s"),
+                                 F.col("u").alias("d"), *carry))
+    )
+
+
 @query(
     "copurchase_graph_levels",
     oracle=f"""
@@ -4796,46 +4833,7 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flight_data_pipeline_spark.operators.graph import pagerank_integer
 
     li = load_table(spark, "lineitem", sf_dir)
-    # build the DISTINCT symmetric edge set at half cost: dedup only
-    # the u<v half (the oracle's a.p <> b.p DISTINCT), then mirror —
-    # (u,v) distinct implies (v,u) distinct, so the union is distinct
-    # by construction and the mirror leg is map-side.
-    # r13: pairs come from ONE o-keyed aggregate (collect_set dedups
-    # (o, p) map-side) + an in-row sorted-array pair explode, instead
-    # of items.distinct + an o-keyed self-join — one exchange and a
-    # join fewer for the same u<v pair stream (guide §2.4); per-order
-    # state is bounded by order width exactly like the join's k² was.
-    from flight_data_pipeline_spark.session import cpu_dense_partitions
-
-    und = (
-        li.select(F.col("l_orderkey").alias("o"),
-                  F.col("l_partkey").alias("p"))
-        # repartition BEFORE the aggregate (r14): placed after it, the
-        # repartition was silently ELIDED as redundant with the
-        # aggregate's own o-keyed exchange — whose ENSURE_REQUIREMENTS
-        # partitioning AQE then byte-coalesced, serializing the k²
-        # pair explode the r13 pin was meant to widen. Ahead of the
-        # groupBy, the REPARTITION_BY_NUM exchange survives, the
-        # aggregate reuses its partitioning (one exchange total), and
-        # the explode runs at the cpu-dense width (warm A/B at sf0.1:
-        # 0.97/1.37 s vs 1.44/1.99 s for the edge build alone). Trade:
-        # raw (o, p) rows cross instead of map-side-combined sets —
-        # (o, p) is near-distinct in lineitem, so the combine saved
-        # nothing here.
-        .repartition(cpu_dense_partitions(spark), "o")
-        .groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) ->"
-            " transform(slice(ps, i + 2, size(ps) - i - 1),"
-            "           y -> named_struct('u', x, 'v', y))))")).alias("z"))
-        .select("z.u", "z.v")
-        .distinct()
-    )
-    edges = (
-        und.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .unionByName(und.select(F.col("v").alias("s"),
-                                F.col("u").alias("d")))
-    )
+    edges = _both_ways(_copurchase_pairs(li).distinct())
     ranks = pagerank_integer(edges, src="s", dst="d", iters=3)
     top = ranks.orderBy(F.desc("rank"), "v").limit(15)
     w = Window.orderBy(F.desc("rank"), "v")
@@ -5009,29 +5007,21 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     That is the difference between "works on any graph" and "dies on
     the first power-law vertex" at 100 TB.
 
-    Plan: incidence-list distinct, one self-join to edges, two
-    degree joins (deg is node-sized, broadcastable), then the wedge
-    equi-join closed by an equi-join on the edge set itself — all
-    shuffle-partitioned on graph keys, no cartesian anywhere.
+    Plan: the shared co-purchase pair build (_copurchase_pairs) and one
+    distinct to edges, two degree joins (deg is node-sized,
+    broadcastable), then the wedge equi-join closed by an equi-join on
+    the edge set itself — all shuffle-partitioned on graph keys, no
+    cartesian anywhere.
     clustering_permille = 3*triangles*1000 div wedges, exact integer
     division on both engines."""
     li = load_table(spark, "lineitem", sf_dir)
-    items = (
-        li.where(F.col("l_partkey") < TRI_PART_CAP)
-        .select(F.col("l_orderkey").alias("o"),
-                F.col("l_partkey").alias("p"))
-        .distinct()
-    )
     # und/oriented feed four output branches (edges, degrees, wedges,
     # triangle join x3 aliases) — lazy localCheckpoint computes each
     # ONCE in the first job touching it and serves every other branch
     # from the cached partitions (the curation_stages diamond pattern)
-    # instead of re-running the incidence self-join per branch.
+    # instead of re-running the pair build per branch.
     und = (
-        items.alias("a")
-        .join(items.alias("b"),
-              (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+        _copurchase_pairs(li.where(F.col("l_partkey") < TRI_PART_CAP))
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -5277,10 +5267,11 @@ def copurchase_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-co-purchase noise pairs that dominate raw cosine — the
     standard support floor.
 
-    Plan shape: the same distinct incidence self-join as the graph
-    family, aggregated to the co-occurrence matrix (one shuffle on
-    the pair key, map-side combine), two broadcast joins of the
-    node-sized occurrence counts, TakeOrderedAndProject for the cut.
+    Plan shape: the graph family's shared pair build
+    (_copurchase_pairs) aggregated to the co-occurrence matrix (one
+    shuffle on the pair key, map-side combine), two broadcast joins of
+    the node-sized occurrence counts, TakeOrderedAndProject for the
+    cut.
     At 100 TB the co-matrix is the heavy object; the support floor
     and per-item top-k (a window over pa) are the standard ways to
     bound it, both expressible on this exact plan."""
@@ -5289,10 +5280,8 @@ def copurchase_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("l_partkey").alias("p")).distinct()
     occ = items.groupBy("p").agg(F.count("*").alias("c"))
     co = (
-        items.alias("a")
-        .join(items.alias("b"),
-              (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("pa"), F.col("b.p").alias("pb"))
+        _copurchase_pairs(li)
+        .groupBy(F.col("u").alias("pa"), F.col("v").alias("pb"))
         .agg(F.count("*").alias("cab"))
         .where(F.col("cab") >= 3)
     )
@@ -5417,32 +5406,8 @@ def copurchase_label_communities(spark: SparkSession,
         label_propagation_integer,
     )
 
-    from flight_data_pipeline_spark.session import cpu_dense_partitions
-
     li = load_table(spark, "lineitem", sf_dir)
-    # r13: same aggregate-then-explode edge build as copurchase_pagerank
-    # (one o-keyed collect_set aggregate + in-row pair explode instead
-    # of items.distinct + an o-keyed self-join — one exchange and a
-    # join fewer for the identical u<v pair stream)
-    und = (
-        li.select(F.col("l_orderkey").alias("o"),
-                  F.col("l_partkey").alias("p"))
-        # repartition BEFORE the aggregate — see copurchase_pagerank
-        # (r14: the post-aggregate form was elided and AQE-coalesced)
-        .repartition(cpu_dense_partitions(spark), "o")
-        .groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) ->"
-            " transform(slice(ps, i + 2, size(ps) - i - 1),"
-            "           y -> named_struct('u', x, 'v', y))))")).alias("z"))
-        .select("z.u", "z.v")
-        .distinct()
-    )
-    edges = (
-        und.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .unionByName(und.select(F.col("v").alias("s"),
-                                F.col("u").alias("d")))
-    )
+    edges = _both_ways(_copurchase_pairs(li).distinct())
     labels = label_propagation_integer(edges, src="s", dst="d", iters=3)
     comm = labels.groupBy(F.col("label").alias("community")).agg(
         F.count("*").alias("n_members"),
@@ -5543,40 +5508,20 @@ def copurchase_shortest_paths(spark: SparkSession,
         min_plus_shortest_paths,
     )
 
-    from flight_data_pipeline_spark.session import cpu_dense_partitions
-
     li = load_table(spark, "lineitem", sf_dir)
-    # r13: aggregate-then-explode edge build (see copurchase_pagerank)
-    # — collect_set dedups (o, p) map-side, so each (o, u, v) pair
-    # appears once in the explode and COUNT(*) IS the co-order
-    # support, exactly as the oracle's joined-once comment says
-    half = (
-        li.select(F.col("l_orderkey").alias("o"),
-                  F.col("l_partkey").alias("p"))
-        # repartition BEFORE the aggregate — see copurchase_pagerank
-        # (r14: the post-aggregate form was elided and AQE-coalesced)
-        .repartition(cpu_dense_partitions(spark), "o")
-        .groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) ->"
-            " transform(slice(ps, i + 2, size(ps) - i - 1),"
-            "           y -> named_struct('u', x, 'v', y))))")).alias("z"))
-        .groupBy(F.col("z.u").alias("u"), F.col("z.v").alias("v"))
-        .agg(F.count("*").alias("co"))
-    )
+    half = _copurchase_pairs(li).groupBy("u", "v").agg(
+        F.count("*").alias("co"))
     ew = (
-        half.select(F.col("u").alias("s"), F.col("v").alias("d"), "co")
-        .unionByName(half.select(F.col("v").alias("s"),
-                                 F.col("u").alias("d"), "co"))
+        _both_ways(half, "co")
         .select("s", "d", (F.lit(1) + F.expr("1000 DIV co")).alias("w"))
         # materialize ONCE: the source aggregate below and the
         # operator's per-round joins otherwise each re-run the whole
-        # self-join edge build (measured 37.7 s -> ~7 s at sf0.1)
+        # pair build (measured 37.7 s -> ~7 s at sf0.1)
         .localCheckpoint()
     )
     source = ew.agg(F.min("s").alias("v"))
     # ew is already checkpointed above — the operator's own edge
-    # materialization would store the same rows a second time (r14)
+    # materialization would store the same rows a second time
     dist = min_plus_shortest_paths(ew, source, src="s", dst="d",
                                    weight="w", iters=3,
                                    edges_prematerialized=True)

@@ -616,3 +616,78 @@ def test_html_and_warc_extraction_share_the_scan_discipline(spark):
                 in plan), q
         assert "ReadSchema: struct<doc_id:bigint>" in plan, q
         assert "text" not in plan.split("ReadSchema")[1][:200], q
+
+
+# --- _copurchase_pairs: the one co-purchase pair build -----------------------
+# (order, part) lines: order 1 repeats part 10 and part 20, order 2 holds
+# one part, order 3 is the wide basket, parts 10/20/30 recur across orders
+PAIR_LINES = [(1, 10), (1, 20), (1, 10), (1, 20), (1, 30),
+              (2, 10),
+              (3, 10), (3, 20), (3, 30), (3, 40), (3, 50), (3, 60), (3, 70),
+              (4, 30), (4, 20), (4, 30),
+              (5, 70), (5, 10),
+              (6, 40), (6, 40)]
+
+
+def pair_lineitem(spark):
+    return spark.createDataFrame(PAIR_LINES, "l_orderkey long, l_partkey long")
+
+
+def test_copurchase_pairs_count_orders_holding_both_parts(spark):
+    from collections import Counter
+    from itertools import combinations
+
+    from flight_data_pipeline_spark.plans.relational_queries import (
+        _copurchase_pairs,
+    )
+
+    baskets = {}
+    for o, p in PAIR_LINES:
+        baskets.setdefault(o, set()).add(p)
+    expect = Counter(pair for parts in baskets.values()
+                     for pair in combinations(sorted(parts), 2))
+    got = Counter((r.u, r.v) for r in
+                  _copurchase_pairs(pair_lineitem(spark)).collect())
+    assert got == expect
+    assert expect[(10, 20)] == 2 and expect[(20, 30)] == 3
+
+
+def test_copurchase_pairs_distinct_equals_items_self_join(spark):
+    import pyspark.sql.functions as F
+
+    from flight_data_pipeline_spark.plans.relational_queries import (
+        _copurchase_pairs,
+    )
+
+    li = pair_lineitem(spark)
+    items = li.select(F.col("l_orderkey").alias("o"),
+                      F.col("l_partkey").alias("p")).distinct()
+    self_join = {
+        (r.u, r.v) for r in
+        items.alias("a")
+        .join(items.alias("b"),
+              (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
+        .select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+        .distinct().collect()
+    }
+    rows = _copurchase_pairs(li).distinct().collect()
+    assert len(rows) == len(self_join)
+    assert {(r.u, r.v) for r in rows} == self_join
+
+
+def test_copurchase_pairs_repartition_precedes_order_aggregate(spark):
+    # the width pin must be the ONLY o-keyed exchange: placed after the
+    # groupBy it is elided and the aggregate's own ENSURE_REQUIREMENTS
+    # exchange (which AQE may coalesce) takes its place
+    import re
+
+    from flight_data_pipeline_spark.plans.relational_queries import (
+        _copurchase_pairs,
+    )
+    from flight_data_pipeline_spark.tables import load_table
+
+    df = _copurchase_pairs(load_table(spark, "lineitem", SF_DIR))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    modes = re.findall(r"Exchange hashpartitioning\(o#\d+L?, \d+\), (\w+)",
+                       plan)
+    assert modes == ["REPARTITION_BY_NUM"], plan

@@ -1693,7 +1693,7 @@ def test_stream_bm25_index_matches_batch_scorer(spark, tmp_path):
 
     served = {r.doc_id: (r.bm25_u, r.n_terms)
               for r in bm25_topk_from_index(
-                  spark, idx, BM25_TERMS, k=10**9).collect()}
+                  spark, idx, BM25_TERMS, k=len(rows)).collect()}
     batch = {r.doc_id: (r.bm25_u, r.n_terms)
              for r in bm25_doc_scores(spark, SF_DIR).collect()}
     assert served == batch
@@ -1704,7 +1704,7 @@ def test_stream_bm25_index_matches_batch_scorer(spark, tmp_path):
     assert apply_posting_delta(idx, extra, 0) is False
     assert {r.doc_id: (r.bm25_u, r.n_terms)
             for r in bm25_topk_from_index(
-                spark, idx, BM25_TERMS, k=10**9).collect()} == served
+                spark, idx, BM25_TERMS, k=len(rows)).collect()} == served
 
 
 def test_stream_pagerank_maintenance_converges_to_batch(spark, tmp_path):

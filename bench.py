@@ -4,10 +4,10 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {top-12},
-     "queries_total_n": 56, "sf": ..., "errors": 0, "flags": 0,
-     "regressions": [...<=6], "detail": "BENCH_DETAIL.json"}
+     "queries_total_n": 63, "sf": ..., "errors": 0, "cal": {...},
+     "flags": 0, "regressions": [...<=6], "detail": "BENCH_DETAIL.json"}
 
-Full per-query timings + all regression entries go to the
+Full per-query timings, counters + all regression entries go to the
 BENCH_DETAIL.json sidecar; the printed line stays under ~1.5 KB so the
 round driver's stdout tail capture (~2.3 KB) always holds the whole
 line (round 6's full 56-query line overflowed it and the official
@@ -19,6 +19,14 @@ most of the work. Warmup queries amortize JVM/codegen startup and
 first-touch parquet IO; each headline query is timed as the best of
 two runs so a single scheduler hiccup doesn't masquerade as a plan
 regression (run-to-run totals varied ±1.5 s single-shot).
+
+The regression signal is Spark counters, not wall time. Each timed run
+carries the job group ``bench:<query>:<run>``; after a query's runs,
+outside the timers, its jobs, stages and shuffle-write bytes are read
+back from the Spark REST API (``perfbench.counters``) and gated against
+the per-query pins in BENCH_BASELINE.json for this (sf, cpus). Wall
+time on a shared host moves 1.3-3.5× between windows while these
+counters stay put, so wall time is reported, not gated.
 """
 
 from __future__ import annotations
@@ -31,6 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flight_data_pipeline_spark.session import get_spark  # noqa: E402
+from perfbench.counters import RestReader, job_counters  # noqa: E402
 
 # Representative spread: scan-agg, multi-way join, top-k, outer join,
 # window, as-of, sessionization, dedup, text, vectors. (minhash is
@@ -184,59 +193,45 @@ HEADLINE = [
 ]
 
 
-def load_baseline(repo: str) -> dict[str, float]:
-    """Per-query baseline for the regression tripwire.
+# Best-of-2: the methodology every recorded wall total used.
+RUNS = 2
+# The counters the gate reads per run (the job group's jobs, their
+# executed stages, and the shuffle bytes those stages wrote).
+COUNTERS = ("jobs", "stages", "shuffle_bytes")
+# Fraction by which a query's shuffle bytes may exceed its pin before
+# it is flagged; jobs and stages may not exceed theirs at all. Set above
+# the largest run-to-run spread over the recorded sessions: 15%, where
+# an AQE decision flips between runs (BASELINE.md, 2026-10-17 note).
+SHUFFLE_SLACK = 0.2
 
-    Primary source: BENCH_BASELINE.json — a deliberately-recorded
-    {query: sec} file from a dedicated steady-state session under the
-    engine's sized driver heap (scripts/record_baseline.py). All the
-    organically-accumulated BENCH_r*.json baselines predate the 24 GiB
-    heap fix, so comparing against them flagged ~19 untouched queries
-    in round 6; a pinned file makes the tripwire compare plans against
-    plans, not heap configs against heap configs.
 
-    Fallback (baseline file absent): newest float timing per query
-    across BENCH_r*.json artifacts, as before."""
-    pinned = os.path.join(repo, "BENCH_BASELINE.json")
+def read_baseline(repo: str) -> dict:
+    """BENCH_BASELINE.json, or {} when it is missing or unreadable."""
     try:
-        with open(pinned) as f:
-            rec = json.load(f)
-        return {k: float(v) for k, v in rec.get("queries", rec).items()
-                if isinstance(v, (int, float))}
+        with open(os.path.join(repo, "BENCH_BASELINE.json")) as f:
+            return json.load(f)
     except (OSError, json.JSONDecodeError):
-        pass
+        return {}
 
-    import glob
-    import re
 
-    baseline: dict[str, float] = {}
-    paths = sorted(
-        glob.glob(os.path.join(repo, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
-    )
-    for path in paths:
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        # the round driver wraps bench's JSON line under "parsed"
-        rec = rec.get("parsed") or rec
-        for name, sec in (rec.get("queries") or {}).items():
-            if isinstance(sec, (int, float)):
-                baseline[name] = float(sec)
-    return baseline
+def load_baseline(repo: str, sf: str, cpus: int) -> dict | None:
+    """Per-query counter pins ``{query: {counter: n}}`` for (sf, cpus)
+    from BENCH_BASELINE.json's ``counters[sf][cpus]``, recorded by
+    scripts/record_baseline.py; None when no pin exists for the pair.
+    Jobs and stages depend on the plan, the data and local[N]'s
+    partition counts, not on host speed, so a pin holds across
+    windows and hosts."""
+    return read_baseline(repo).get("counters", {}).get(str(sf), {}).get(
+        str(cpus))
 
 
 def calibration_sec(spark) -> float:
     """Machine-speed probe: a fixed CPU-bound JVM workload (1.2 G-row
     xxhash64 fold across 32 range partitions — pure whole-stage
     codegen, no IO, no shuffle), 1 discard run for codegen/JIT then
-    best-of-3. The host this VM shares drifts 1.3-1.5× between
-    sessions (measured: identical code, 74 s vs 109 s full passes),
-    so raw per-query baselines flag host-speed windows, not plans;
-    the tripwire scales the pinned baseline by cal_now/cal_base so it
-    compares plans against plans."""
+    best-of-3. Reported only (``cal.x`` against the pinned
+    ``cal_sec``), so wall totals from different host windows can be
+    read side by side; it gates nothing."""
     probe = lambda: spark.range(0, 1_200_000_000, 1, 32).selectExpr(
         "sum(xxhash64(id) % 1000000) s").collect()
     probe()  # discard: codegen compile + JIT tiering
@@ -248,128 +243,60 @@ def calibration_sec(spark) -> float:
     return round(best, 4)
 
 
-def calibration_mem_sec() -> float:
-    """Memory-BANDWIDTH probe: best-of-3 timing of repeated large
-    numpy buffer copies (2×128 MiB buffers, 6 copies per rep — see
-    the footprint note below).
-    The CPU probe above is cache-resident and provably blind
-    to the hypervisor's memory-bandwidth/steal pressure (measured: a
-    1.38×-median window at CPU-cal ratio 1.05); a large memcpy sees
-    exactly that pressure. Together the two probes bound the host
-    window, so a median per-query ratio FAR above BOTH is evidence of
-    a genuine uniform code regression (e.g. a broken session conf)
-    rather than host drift — surfaced as ``uniform_suspect`` in the
-    official line instead of being silently rescaled away (ADVICE r7).
-
-    Footprint: 2×128 MiB buffers × 6 copies per timed rep — bandwidth
-    saturates far below 768 MiB, and the old 2×768 MiB allocation
-    could swap a memory-tight host and skew adjacent query timings
-    (ADVICE r8). Same total bytes moved per measurement as before."""
-    import numpy as np
-
-    a = np.ones(16 * 1024 * 1024, dtype=np.float64)  # 128 MiB
-    b = np.empty_like(a)
-    np.copyto(b, a)  # discard: page-fault/first-touch cost
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        for _ in range(6):
-            np.copyto(b, a)
-        best = min(best, time.time() - t0)
-    return round(best, 4)
+def load_baseline_cal(repo: str) -> float | None:
+    """The CPU probe's pinned ``cal_sec`` — None when absent."""
+    v = read_baseline(repo).get("cal_sec")
+    return float(v) if isinstance(v, (int, float)) else None
 
 
-def calibration_sched_sec(spark) -> float:
-    """Scheduler/JIT probe (VERDICT r11 item 4): a fixed SMALL
-    two-stage shuffle job — 1 M rows keyed into 1000 groups across 32
-    map tasks, partial-aggregated, shuffled, re-aggregated — timed
-    best-of-3 after one discard rep. The CPU fold is compute-bound in
-    one stage and the memcpy is pure bandwidth, so BOTH sat ≤1.0 in
-    the official r11 window while every sub-2 s query inflated
-    10-15%: that overhead class is per-STAGE fixed cost (task
-    scheduling, shuffle set-up, codegen instantiation, JIT tiering
-    mode), which a job whose total work is trivial but whose stage
-    count is real measures directly. A window with sched_x high while
-    cpu/mem read ~1.0 is scheduler drift — self-adjudicating from the
-    recorded line, no same-day re-run needed."""
-    probe = lambda: (spark.range(0, 1_000_000, 1, 32)
-                     .selectExpr("id % 1000 AS k")
-                     .groupBy("k").count()
-                     .selectExpr("sum(count) s").collect())
-    probe()  # discard: codegen compile + scheduler warm path
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        probe()
-        best = min(best, time.time() - t0)
-    return round(best, 4)
+def run_counters(reader: RestReader, name: str,
+                 runs: int) -> list[dict[str, int]]:
+    """COUNTERS of each of ``name``'s first ``runs`` timed runs, read
+    back by job group. Called per query: Spark's UI keeps only the last
+    1000 jobs and stages, fewer than one sf0.1 pass submits."""
+    jobs, stages, _ = reader.snapshot()
+    per_job = job_counters(jobs, stages)
+    out = []
+    for i in range(runs):
+        mine = [per_job[j.id] for j in jobs
+                if j.group == f"bench:{name}:{i}"]
+        out.append({
+            "jobs": len(mine),
+            "stages": sum(c.stages for c in mine),
+            "shuffle_bytes": int(sum(c.sums["shuffle_write_bytes"]
+                                     for c in mine)),
+        })
+    return out
 
 
-def load_baseline_cal(repo: str, key: str = "cal_sec") -> float | None:
-    """cal_sec / cal_mem_sec recorded alongside the pinned baseline
-    (same session, same host window) — None for baseline files that
-    predate that probe."""
-    try:
-        with open(os.path.join(repo, "BENCH_BASELINE.json")) as f:
-            v = json.load(f).get(key)
-        return float(v) if isinstance(v, (int, float)) else None
-    except (OSError, json.JSONDecodeError):
-        return None
-
-
-def uniform_slowdown_suspect(med: float, cal_x: float,
-                             mem_x: float | None,
-                             n_ratios: int,
-                             sched_x: float | None = None) -> bool:
-    """Uniform-slowdown discriminator (ADVICE r7): the median
-    normalizer absorbs ANY sub-2x uniform slowdown by design, so the
-    median ratio is checked against BOTH independent host probes —
-    CPU speed (cache-resident xxhash fold) and memory bandwidth
-    (128 MiB×6 memcpy). Host drift moves at least one probe (measured
-    windows: bandwidth pressure at CPU-cal 1.05); a median far above
-    both is evidence of a genuine everything-slow code regression
-    (e.g. a broken session conf) and is surfaced in the official
-    line rather than silently rescaled away. Requires the mem probe
-    baseline (else the single-probe blind spot would false-flag
-    every degraded-host window, the exact r6 failure mode)."""
-    if mem_x is None or n_ratios < 8:
-        return False
-    probes = [cal_x, mem_x] + ([sched_x] if sched_x is not None else [])
-    return med > 1.35 * max(probes) and med > 1.35
-
-
-def find_regressions(
-    timings: dict[str, object],
-    baseline: dict[str, float],
-    threshold: float = 1.35,
-    min_sec: float = 0.25,
-    min_delta_sec: float = 0.2,
-) -> list[dict[str, object]]:
-    """Per-query perf tripwire (VERDICT r4 item 5): flag every timed
-    query slower than ``threshold``× its last recorded baseline AND
-    more than ``min_delta_sec`` absolute. Sub-``min_sec`` queries are
-    exempt entirely. Both floors exist because measured round-5
-    back-to-back runs showed untouched 0.3 s queries drifting ±0.12 s
-    with session position — ratio alone flags scheduler jitter, not
-    plans. ``threshold`` sits at 1.35 because the pinned baseline is
-    best-of-THREE (steady state) while a round run is best-of-two:
-    measured same-plan, calibration-matched drift between the two
-    methodologies reaches ~1.31×, so 1.25 flagged untouched queries;
-    real plan regressions land ≥1.5× and still trip. Pure function so
-    the tripwire itself is unit-testable (tests/test_bench.py)."""
+def find_regressions(runs: dict[str, list[dict]],
+                     pins: dict | None) -> list[dict[str, object]]:
+    """Counter tripwire: per query, the MIN of each counter over the
+    bench's runs against its pin, the MAX over the recorded sessions.
+    A query is flagged when its jobs or stages exceed the pin, or its
+    shuffle bytes exceed it by more than SHUFFLE_SLACK. The max/min
+    pairing absorbs a counter that flickers between runs (e.g. one
+    extra job now and then), while a real plan regression raises every
+    run. Wall time is not an input: a slow host window leaves every
+    counter where it was. Queries without a pin or a counted run are
+    skipped; no pins, no flags.
+    Pure function so the tripwire is unit-testable
+    (tests/test_bench.py)."""
     flags = []
-    for name, sec in timings.items():
-        base = baseline.get(name)
-        if not isinstance(sec, (int, float)) or not base:
+    for name, recs in runs.items():
+        pin = (pins or {}).get(name)
+        if not pin or not recs:
             continue
-        if (sec >= min_sec and sec > threshold * base
-                and sec - base > min_delta_sec):
-            flags.append({
-                "query": name,
-                "sec": round(float(sec), 3),
-                "baseline_sec": round(base, 3),
-                "ratio": round(float(sec) / base, 3),
-            })
+        over = {}
+        for k in COUNTERS:
+            low = min(r[k] for r in recs)
+            limit = pin[k] * (1 + SHUFFLE_SLACK) if k == "shuffle_bytes" \
+                else pin[k]
+            if low > limit:
+                over[k] = [low, pin[k]]
+        if over:
+            ratio = max(n / max(p, 1) for n, p in over.values())
+            flags.append({"query": name, "ratio": round(ratio, 3), **over})
     return sorted(flags, key=lambda r: -r["ratio"])
 
 
@@ -377,7 +304,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     spark = get_spark(app_name="fdps-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    cpus = sc.defaultParallelism  # N of local[N]
+    reader = RestReader(sc)
 
     import __spark_entry__ as entrymod
 
@@ -395,26 +325,22 @@ def main() -> None:
         except Exception as exc:  # warmup failure must not kill the bench
             print(f"warmup {warm} failed: {exc!r}", file=sys.stderr)
 
+    cal_now = calibration_sec(spark)
+    timings: dict[str, object] = {}
+    counters: dict[str, list[dict]] = {}
+
     # Each query is timed independently and failure-isolated: one
     # broken query reports {"err": ...} for itself and the JSON line
     # still carries timings for every other query (round-3 lesson —
-    # a single crash zeroed the whole round's bench evidence).
-    # Best-of-N, default 2 (the methodology every recorded baseline
-    # used — keep it for comparable history). The first run of each
-    # query pays its whole-stage-codegen class compile (~2-3×,
-    # measured in BASELINE.md's bimodality note); set
-    # SPARK_GRAFT_BENCH_RUNS=3 for steady-state numbers when
-    # diagnosing a flag rather than recording a round.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
-    cal_now = calibration_sec(spark)
-    timings: dict[str, object] = {}
-    errors = 0
-
-    def time_query(name: str) -> None:
-        best = timings.get(name)
-        best = best if isinstance(best, float) else float("inf")
+    # a single crash zeroed the whole round's bench evidence). The
+    # first run of each query pays its whole-stage-codegen class
+    # compile (~2-3×, measured in BASELINE.md's bimodality note).
+    for name in HEADLINE:
+        best = float("inf")
+        done = 0
         try:
-            for _ in range(runs):
+            for i in range(RUNS):
+                sc.setJobGroup(f"bench:{name}:{i}", name)
                 # Anti-gaming guard (VERDICT r13 item 8): drop any
                 # catalog-cached plan BEFORE each timed run, so a
                 # query that internally persist()s (none in HEADLINE
@@ -430,70 +356,27 @@ def main() -> None:
                 t0 = time.time()
                 run(queries[name](spark, sf_dir))
                 best = min(best, time.time() - t0)
+                done += 1
             timings[name] = round(best, 3)
         except Exception as exc:
-            # a valid timing from an earlier pass (or an earlier run
-            # of this pass) outranks a later transient failure — only
-            # record err when NO successful timing exists, else a
-            # flaky second-chance re-run would drop the query out of
-            # the total and leave the errors count stale (ADVICE r7)
-            if best == float("inf"):
-                timings[name] = {"err": f"{type(exc).__name__}: {exc}"[:300]}
-            else:
-                timings[name] = round(best, 3)
+            # a valid timing from an earlier run outranks a later
+            # failure; err only when NO run succeeded
+            timings[name] = (round(best, 3) if done else
+                             {"err": f"{type(exc).__name__}: {exc}"[:300]})
+        try:
+            counters[name] = run_counters(reader, name, done)
+        except OSError as exc:  # an unreadable UI must not kill the line
+            print(f"counters {name} failed: {exc!r}", file=sys.stderr)
+            counters[name] = []
 
-    for name in HEADLINE:
-        time_query(name)
-
-    # Host-speed normalization, two signals:
-    # (a) the CPU calibration probe (cal_now/cal_base) — catches
-    #     compute-speed drift but is cache-resident, so it MISSES
-    #     memory-bandwidth/steal pressure (measured: a 1.28x-median
-    #     slow window at cal ratio 1.05);
-    # (b) the MEDIAN per-query ratio vs baseline — robust to real
-    #     regressions (one slow plan cannot move the median of ~60
-    #     queries) and sensitive to any uniform window slowdown
-    #     whatever its mechanism. Primary when enough queries match.
-    # The factor is clamped at 2.0 so a catastrophic everything-slow
-    # regression (e.g. a broken session conf) still flags; both
-    # signals are reported in the official line as evidence.
     repo = os.path.dirname(os.path.abspath(__file__))
-    cal_base = load_baseline_cal(repo)
-    cal_x = round(min(3.0, max(0.5, cal_now / cal_base)), 3) if cal_base else 1.0
-    mem_now = calibration_mem_sec()
-    mem_base = load_baseline_cal(repo, "cal_mem_sec")
-    mem_x = (round(min(3.0, max(0.5, mem_now / mem_base)), 3)
-             if mem_base else None)
-    sched_now = calibration_sched_sec(spark)
-    sched_base = load_baseline_cal(repo, "cal_sched_sec")
-    sched_x = (round(min(3.0, max(0.5, sched_now / sched_base)), 3)
-               if sched_base else None)
-    base = load_baseline(repo)
-    ratios = sorted(
-        timings[q] / base[q] for q in base
-        if isinstance(timings.get(q), float) and base[q] > 0)
-    med = (round(ratios[len(ratios) // 2], 3)
-           if len(ratios) >= 8 else cal_x)
-    host = min(2.0, max(0.5, med))
-    scaled = {q: b * host for q, b in base.items()}
-    uniform_suspect = uniform_slowdown_suspect(med, cal_x, mem_x,
-                                               len(ratios), sched_x)
-
-    # Second-chance pass (the "real only if it reproduces" policy from
-    # measured back-to-back variance): any first-pass flag gets ONE
-    # more best-of-``runs`` timing, minutes away from whatever GC/JIT
-    # stall inflated it; only a slowdown that survives is reported.
-    for r in find_regressions(timings, scaled):
-        time_query(r["query"])
+    pins = load_baseline(repo, sf, cpus)
+    regressions = find_regressions(counters, pins)
     total = round(sum(v for v in timings.values() if isinstance(v, float)), 3)
-    regressions = find_regressions(timings, scaled)
     errors = sum(1 for v in timings.values() if not isinstance(v, float))
-    cal = {"sec": cal_now, "base": cal_base, "x": cal_x,
-           "mem_sec": mem_now, "mem_base": mem_base, "mem_x": mem_x,
-           "sched_sec": sched_now, "sched_base": sched_base,
-           "sched_x": sched_x,
-           "median_ratio": med, "host": round(host, 3),
-           "uniform_suspect": uniform_suspect}
+    cal_base = load_baseline_cal(repo)
+    cal = {"sec": cal_now, "base": cal_base,
+           "x": round(cal_now / cal_base, 3) if cal_base else None}
 
     # Full per-query detail goes to a sidecar the judge reads from the
     # repo; the printed line must stay compact. Round 6's single line
@@ -508,6 +391,8 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "errors": errors,
         "cal": cal,
+        "pin": {"sf": sf, "cpus": cpus, "missing": pins is None},
+        "counters": counters,
         "regressions": regressions,
     }
     try:
@@ -542,8 +427,8 @@ def compact_line(timings: dict, total: float, sf, errors: int,
         "cal": cal,
         "flags": len(regressions),
         "regressions": [
-            {"q": r["query"], "s": r["sec"], "b": r["baseline_sec"],
-             "x": r["ratio"]}
+            {"q": r["query"], "x": r["ratio"],
+             **{k: r[k] for k in COUNTERS if k in r}}
             for r in regressions[:6]],
         "detail": "BENCH_DETAIL.json",
     }

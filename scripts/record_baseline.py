@@ -1,12 +1,16 @@
-"""Record BENCH_BASELINE.json: the pinned per-query tripwire baseline.
+"""Record BENCH_BASELINE.json's counter pins for one (sf, cpus) pair.
 
-Run in a dedicated session (nothing else on the machine) so timings
-are steady-state. Uses best-of-3 (SPARK_GRAFT_BENCH_RUNS=3) under the
-engine's sized driver heap — every baseline recorded before round 6's
-heap fix (default 1 GiB under 32 local threads) carries 1.3-2.5x GC
-inflation and made the tripwire flag ~19 untouched queries.
+Runs bench.py SESSIONS times, each in a fresh process, and pins per
+headline query the MAX of each counter (jobs, stages, shuffle-write
+bytes) over every run of every session. bench.py's gate compares the
+MIN over its own runs against the pin, so a counter that flickers
+between runs (one extra job now and then) never flags. Counters depend
+on the plan, the data and local[N]'s partition counts, not on host
+speed, so the pins can be recorded on any host and in any window.
+Pins for other (sf, cpus) pairs are kept. Prints the run-to-run spread
+of each counter, the evidence for bench.SHUFFLE_SLACK.
 
-Usage:  python scripts/record_baseline.py
+Usage:  SPARK_GRAFT_CPUS=8 python scripts/record_baseline.py
 """
 import json
 import os
@@ -15,45 +19,60 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-env = dict(os.environ, SPARK_GRAFT_BENCH_RUNS="3")
-t0 = time.time()
-proc = subprocess.run(
-    [sys.executable, os.path.join(REPO, "bench.py")],
-    env=env, cwd=REPO, capture_output=True, text=True)
-sys.stderr.write(proc.stderr[-2000:])
-if proc.returncode != 0:
-    sys.exit(f"bench failed rc={proc.returncode}")
+from bench import COUNTERS  # noqa: E402
 
-with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
-    detail = json.load(f)
+SESSIONS = 3
 
-queries = {n: v for n, v in detail["queries"].items()
-           if isinstance(v, (int, float))}
-out = {
-    "recorded_unix": int(t0),
-    "runs": 3,
-    "sf": detail["sf"],
-    "total_sec": detail["value"],
-    "n": len(queries),
-    # machine-speed probe from the SAME session: the tripwire scales
-    # these baselines by cal_now/cal_sec at compare time, so a slower
-    # (or faster) shared-host window doesn't read as a plan change
-    "cal_sec": (detail.get("cal") or {}).get("sec"),
-    # memory-bandwidth probe twin (bench.calibration_mem_sec): the
-    # uniform-slowdown discriminator compares the round's median
-    # per-query ratio against BOTH probes' ratios. NOTE (r11): a
-    # single-window pin saturates — the r9 pin (0.0737, fast window)
-    # read mem_x 1.25-1.31 every window after. The shipped baseline
-    # re-pins cal_mem_sec to the MEDIAN of recorded windows
-    # (BASELINE.md 2026-08-16 r11 note); when re-recording, prefer
-    # median(this window, prior recorded windows) over the raw probe.
-    "cal_mem_sec": (detail.get("cal") or {}).get("mem_sec"),
-    "queries": queries,
-}
-path = os.path.join(REPO, "BENCH_BASELINE.json")
-with open(path, "w") as f:
-    json.dump(out, f, indent=1)
-print(f"wrote {path}: {len(queries)} queries, total {detail['value']} s, "
-      f"{len(detail['queries']) - len(queries)} errors, "
-      f"{time.time() - t0:.0f} s wall")
+
+def pin_counters(runs: dict[str, list[dict]]) -> dict[str, dict[str, int]]:
+    """Per query, the max of each counter over all its recorded runs."""
+    return {q: {k: max(r[k] for r in recs) for k in COUNTERS}
+            for q, recs in runs.items() if recs}
+
+
+def spread(recs: list[dict], k: str) -> float:
+    """Run-to-run spread of counter ``k``: max/min - 1."""
+    return max(r[k] for r in recs) / max(min(r[k] for r in recs), 1) - 1
+
+
+def main() -> None:
+    t0 = time.time()
+    runs: dict[str, list[dict]] = {}
+    for i in range(SESSIONS):
+        proc = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")],
+                              cwd=REPO, capture_output=True, text=True)
+        if proc.returncode != 0:
+            sys.stderr.write(proc.stderr[-2000:])
+            sys.exit(f"bench session {i} failed rc={proc.returncode}")
+        with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
+            detail = json.load(f)
+        for name, recs in detail["counters"].items():
+            runs.setdefault(name, []).extend(recs)
+        print(f"session {i}: total {detail['value']} s, "
+              f"errors {detail['errors']}, flags {len(detail['regressions'])}")
+
+    pins = pin_counters(runs)
+    worst = {k: max((spread(recs, k), q) for q, recs in runs.items() if recs)
+             for k in COUNTERS}
+
+    path = os.path.join(REPO, "BENCH_BASELINE.json")
+    with open(path) as f:
+        baseline = json.load(f)
+    sf, cpus = detail["pin"]["sf"], str(detail["pin"]["cpus"])
+    baseline.setdefault("counters", {}).setdefault(sf, {})[cpus] = pins
+    baseline.setdefault("recorded", {}).setdefault(sf, {})[cpus] = {
+        "unix": int(t0), "sessions": SESSIONS,
+        "runs_per_query": min(len(r) for r in runs.values())}
+    with open(path, "w") as f:
+        json.dump(baseline, f, indent=1, sort_keys=True)
+    print(json.dumps({"pinned": f"counters[{sf}][{cpus}]", "n": len(pins),
+                      "missing": sorted(set(runs) - set(pins)),
+                      "max_spread": {k: [round(x, 4), q]
+                                     for k, (x, q) in worst.items()},
+                      "wall_s": round(time.time() - t0)}))
+
+
+if __name__ == "__main__":
+    main()

@@ -524,22 +524,14 @@ def build_warc_corpus(scale: int, out_dir: str) -> None:
 
 
 def shuffle_write_bytes(spark) -> int:
-    """Total shuffle WRITE bytes across all completed stages of this
-    app, via the driver's own UI REST endpoint (stdlib urllib — diff
-    two readings around a run to get that run's shuffle volume)."""
-    import json as _json
-    import urllib.request
+    """Total shuffle WRITE bytes across the executed stages the UI
+    still retains (diff two readings around a run to get that run's
+    shuffle volume)."""
+    from perfbench.counters import RestReader, job_counters
 
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return -1
-    with urllib.request.urlopen(f"{ui}/api/v1/applications") as r:
-        apps = _json.load(r)
-    app_id = apps[0]["id"]
-    with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete") as r:
-        stages = _json.load(r)
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+    jobs, stages, _ = RestReader(spark.sparkContext).snapshot()
+    return int(sum(c.sums["shuffle_write_bytes"]
+                   for c in job_counters(jobs, stages).values()))
 
 
 def fit_exponent(points: list[tuple[int, float]]) -> float:

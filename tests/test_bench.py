@@ -1,180 +1,155 @@
-"""The bench.py per-query regression tripwire (VERDICT r4 item 5):
-pure-function tests that a deliberately slowed query produces the
-flag, that noise-scale queries are exempt, and that the baseline
-loader takes the newest recorded round and skips error entries."""
+"""The bench.py per-query regression tripwire: pure-function tests that
+the counter gate flags a plan regression (more jobs, more stages, or
+shuffle bytes beyond the slack) and ignores wall time, one-job flakes
+and missing pins, plus the pinned-baseline loader and the official
+line's size budget."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import bench
+from scripts import record_baseline
+
+
+def rec(jobs, stages, shuffle_bytes, sec=1.0):
+    return {"sec": sec, "jobs": jobs, "stages": stages,
+            "shuffle_bytes": shuffle_bytes}
 
 
 class TestFindRegressions:
-    BASE = {"q_fast": 0.10, "q_mid": 1.00, "q_heavy": 4.00}
+    PINS = {"q_loop": {"jobs": 19, "stages": 23, "shuffle_bytes": 1_000_000},
+            "q_scan": {"jobs": 2, "stages": 2, "shuffle_bytes": 0}}
 
-    def test_slowed_query_is_flagged(self):
+    def test_job_rise_is_flagged(self):
         flags = bench.find_regressions(
-            {"q_mid": 1.50, "q_heavy": 4.10}, self.BASE)
-        assert [f["query"] for f in flags] == ["q_mid"]
-        f = flags[0]
-        assert f["baseline_sec"] == 1.0 and f["ratio"] == 1.5
+            {"q_loop": [rec(21, 23, 1_000_000)] * 2}, self.PINS)
+        assert [f["query"] for f in flags] == ["q_loop"]
+        assert flags[0]["jobs"] == [21, 19] and "stages" not in flags[0]
+
+    def test_stage_rise_is_flagged(self):
+        flags = bench.find_regressions(
+            {"q_loop": [rec(19, 24, 1_000_000)] * 2}, self.PINS)
+        assert [f["query"] for f in flags] == ["q_loop"]
+        assert flags[0]["stages"] == [24, 23] and "jobs" not in flags[0]
 
     def test_flags_sorted_worst_first(self):
         flags = bench.find_regressions(
-            {"q_mid": 1.45, "q_heavy": 8.00}, self.BASE)
-        assert [f["query"] for f in flags] == ["q_heavy", "q_mid"]
+            {"q_loop": [rec(20, 23, 1_000_000)] * 2,
+             "q_scan": [rec(4, 4, 0)] * 2}, self.PINS)
+        assert [f["query"] for f in flags] == ["q_scan", "q_loop"]
 
     def test_within_threshold_not_flagged(self):
-        assert bench.find_regressions({"q_mid": 1.24}, self.BASE) == []
-
-    def test_noise_scale_query_exempt(self):
-        # 0.10 s -> 0.20 s is 2x but below min_sec: scheduler noise
-        assert bench.find_regressions({"q_fast": 0.20}, self.BASE) == []
+        # counters at or below the pin are never flagged
+        assert bench.find_regressions(
+            {"q_loop": [rec(19, 23, 1_000_000), rec(18, 22, 900_000)]},
+            self.PINS) == []
 
     def test_small_absolute_drift_exempt(self):
-        # 1.4x on a 0.3 s query is a 0.12 s delta — measured session-
-        # position jitter on untouched queries (r5); not flagged
-        assert bench.find_regressions({"q_mid": 0.42},
-                                      {"q_mid": 0.30}) == []
-        # ...but the same ratio with a real absolute cost is flagged
-        assert bench.find_regressions({"q_heavy": 5.60}, self.BASE) != []
+        # shuffle bytes within SHUFFLE_SLACK of the pin are drift...
+        near = int(1_000_000 * (1 + bench.SHUFFLE_SLACK))
+        assert bench.find_regressions(
+            {"q_loop": [rec(19, 23, near)] * 2}, self.PINS) == []
+        # ...bytes beyond it are flagged, as is any shuffle where the
+        # pin recorded none
+        far = int(1_000_000 * (1 + 2 * bench.SHUFFLE_SLACK))
+        flags = bench.find_regressions(
+            {"q_loop": [rec(19, 23, far)] * 2,
+             "q_scan": [rec(2, 2, 10)] * 2}, self.PINS)
+        assert {f["query"] for f in flags} == {"q_loop", "q_scan"}
+        assert all(list(f) == ["query", "ratio", "shuffle_bytes"]
+                   for f in flags)
+
+    def test_equal_counters_double_wall_not_flagged(self):
+        runs = {"q_loop": [rec(19, 23, 1_000_000, sec=8.0)] * 2}
+        assert bench.find_regressions(runs, self.PINS) == []
+
+    def test_noise_scale_query_exempt(self):
+        # a query whose job count flickers 14/15 between runs: the pin
+        # is the max over the recorded sessions, the gate reads the min
+        # over the bench's runs, so the flake never flags...
+        sessions = {"q_levels": [rec(14, 14, 0), rec(15, 15, 0),
+                                 rec(14, 14, 0)]}
+        pins = record_baseline.pin_counters(sessions)
+        assert pins["q_levels"]["jobs"] == 15
+        for runs in ([rec(15, 15, 0)] * 2, [rec(15, 15, 0), rec(14, 14, 0)]):
+            assert bench.find_regressions({"q_levels": runs}, pins) == []
+        # ...even when every recorded session happened to read 14
+        low = record_baseline.pin_counters({"q_levels": [rec(14, 14, 0)]})
+        assert bench.find_regressions(
+            {"q_levels": [rec(15, 15, 0), rec(14, 14, 0)]}, low) == []
+        # while a plan regression raises every run and does flag
+        assert bench.find_regressions(
+            {"q_levels": [rec(16, 16, 0), rec(17, 17, 0)]}, pins) != []
 
     def test_error_and_unknown_entries_skipped(self):
-        timings = {"q_mid": {"err": "boom"}, "q_new": 9.9}
-        assert bench.find_regressions(timings, self.BASE) == []
+        # a query whose runs all failed has no counted run; a query
+        # with no pin (new headliner) is not gated
+        runs = {"q_loop": [], "q_new": [rec(99, 99, 10**9)]}
+        assert bench.find_regressions(runs, self.PINS) == []
+
+    def test_missing_pin_gives_zero_flags(self, tmp_path):
+        (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(
+            {"counters": {"0.1": {"32": self.PINS}}}))
+        pins = bench.load_baseline(str(tmp_path), "0.1", 8)
+        assert pins is None
+        runs = {"q_loop": [rec(99, 99, 10**9)] * 2}
+        assert bench.find_regressions(runs, pins) == []
 
 
 class TestLoadBaseline:
-    def test_newest_round_wins_and_errors_skipped(self, tmp_path):
-        (tmp_path / "BENCH_r01.json").write_text(json.dumps(
-            {"queries": {"a": 1.0, "b": 2.0}}))
-        (tmp_path / "BENCH_r02.json").write_text(json.dumps(
-            {"queries": {"a": 0.5, "b": {"err": "crash"}, "c": 3.0}}))
-        base = bench.load_baseline(str(tmp_path))
-        # a refreshed by r2; b keeps its r1 float through the r2 error
-        assert base == {"a": 0.5, "b": 2.0, "c": 3.0}
-
     def test_pinned_baseline_file_wins(self, tmp_path):
-        (tmp_path / "BENCH_r01.json").write_text(json.dumps(
-            {"queries": {"a": 9.0}}))
+        # the pinned file is the only source: the pins for the
+        # requested (sf, cpus) pair come back, any other pair is None
+        pins = {"a": {"jobs": 3, "stages": 4, "shuffle_bytes": 5}}
         (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(
-            {"runs": 3, "queries": {"a": 1.0, "b": {"err": "x"}}}))
-        # pinned file overrides history entirely; non-numeric skipped
-        assert bench.load_baseline(str(tmp_path)) == {"a": 1.0}
+            {"cal_sec": 0.45,
+             "counters": {"0.1": {"32": pins, "8": {}}}}))
+        assert bench.load_baseline(str(tmp_path), "0.1", 32) == pins
+        assert bench.load_baseline(str(tmp_path), "0.01", 32) is None
+        assert bench.load_baseline(str(tmp_path / "missing"), "0.1",
+                                   32) is None
 
     def test_compact_line_fits_tail_capture_worst_case(self):
-        # worst case: 80 queries with 40-char names, every one flagged.
-        # The printed official line must stay well under the round
-        # driver's ~2.3 KB stdout tail capture (round 6's full line
-        # overflowed it and the artifact recorded "parsed": null).
+        # worst case: 80 queries with 40-char names, every one flagged
+        # on every counter. The printed official line must stay well
+        # under the round driver's ~2.3 KB stdout tail capture (round
+        # 6's full line overflowed it; the artifact recorded "parsed":
+        # null).
         timings = {f"query_with_a_really_long_name_{i:04d}_xxxx": 99.999
                    for i in range(80)}
-        regs = [{"query": n, "sec": 99.999, "baseline_sec": 1.234,
-                 "ratio": 81.037} for n in timings]
+        regs = [{"query": n, "ratio": 81.037,
+                 "jobs": [9999, 9998], "stages": [99999, 99998],
+                 "shuffle_bytes": [99_999_999_999, 99_999_999_998]}
+                for n in timings]
         line = bench.compact_line(timings, 7999.92, 0.1, 80, regs,
                                   cal={"sec": 0.4512, "base": 0.3333,
-                                       "x": 1.354, "mem_sec": 0.1234,
-                                       "mem_base": 0.0999, "mem_x": 1.235,
-                                       "median_ratio": 1.354,
-                                       "host": 1.354,
-                                       "uniform_suspect": False})
+                                       "x": 1.354})
         assert len(line) < 2000, len(line)
         parsed = json.loads(line)
         assert parsed["queries_total_n"] == 80
         assert len(parsed["queries"]) == 12
         assert parsed["flags"] == 80 and len(parsed["regressions"]) == 6
+        assert parsed["regressions"][0]["jobs"] == [9999, 9998]
 
     def test_cal_loaded_from_pinned_file(self, tmp_path):
         (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(
-            {"cal_sec": 0.45, "queries": {"a": 1.0}}))
+            {"cal_sec": 0.45, "counters": {}}))
         assert bench.load_baseline_cal(str(tmp_path)) == 0.45
-        # pre-calibration baseline file → None (tripwire unscaled)
+        # baseline file without the probe pin → None (x reported null)
         (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(
-            {"queries": {"a": 1.0}}))
+            {"counters": {}}))
         assert bench.load_baseline_cal(str(tmp_path)) is None
         assert bench.load_baseline_cal(str(tmp_path / "missing")) is None
 
-    def test_cal_mem_loaded_from_pinned_file(self, tmp_path):
-        (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(
-            {"cal_sec": 0.45, "cal_mem_sec": 0.12, "queries": {"a": 1.0}}))
-        assert bench.load_baseline_cal(str(tmp_path), "cal_mem_sec") == 0.12
-        (tmp_path / "BENCH_BASELINE.json").write_text(json.dumps(
-            {"cal_sec": 0.45, "queries": {"a": 1.0}}))
-        assert bench.load_baseline_cal(str(tmp_path), "cal_mem_sec") is None
-
-
-class TestUniformSlowdownSuspect:
-    """ADVICE r7: a genuine everything-slow regression below the 2.0
-    median clamp must not be silently rescaled away — but the measured
-    degraded-host windows (bandwidth pressure the CPU probe can't see)
-    must NOT false-flag either."""
-
-    def test_real_uniform_regression_flags(self):
-        # median 1.8x while both host probes read ~1.0x: not host drift
-        assert bench.uniform_slowdown_suspect(1.8, 1.05, 1.1, 60)
-
-    def test_measured_bandwidth_window_does_not_flag(self):
-        # the r7-measured window: median 1.38x, CPU cal 1.05 — but the
-        # mem probe sees the bandwidth pressure (1.4x) → host drift
-        assert not bench.uniform_slowdown_suspect(1.38, 1.05, 1.4, 60)
-
-    def test_cpu_speed_window_does_not_flag(self):
-        assert not bench.uniform_slowdown_suspect(1.5, 1.45, 1.0, 60)
-
-    def test_requires_mem_probe_baseline_and_enough_ratios(self):
-        # without the mem probe the single-probe blind spot would
-        # false-flag every degraded window → stay conservative
-        assert not bench.uniform_slowdown_suspect(1.8, 1.05, None, 60)
-        assert not bench.uniform_slowdown_suspect(1.8, 1.05, 1.1, 5)
-
-    def test_scheduler_window_does_not_flag(self):
-        """r12 (VERDICT r11 item 4): the official r11 window inflated
-        ~1.4x on sub-2 s rows with cpu 0.996 and mem 0.71 — the sched
-        probe sees that per-stage drift and absorbs the flag; without
-        a sched baseline (None) behavior is unchanged."""
-        assert not bench.uniform_slowdown_suspect(1.4, 1.0, 0.71, 60,
-                                                  sched_x=1.45)
-        assert bench.uniform_slowdown_suspect(1.8, 1.05, 1.1, 60,
-                                              sched_x=1.0)
-        assert not bench.uniform_slowdown_suspect(1.8, 1.05, 1.1, 60,
-                                                  sched_x=1.5)
-
-    def test_median_host_factor_logic(self):
-        """The median-of-ratios host factor: a uniform 1.3× window
-        scales every baseline (zero flags) while a single genuinely
-        regressed query still trips — one plan cannot move the median
-        of many. Mirrors the main() wiring as a pure check."""
-        base = {f"q{i}": 1.0 for i in range(20)}
-        run = {f"q{i}": 1.30 for i in range(20)}
-        run["q7"] = 3.0  # the one real regression
-        ratios = sorted(run[q] / base[q] for q in base)
-        med = ratios[len(ratios) // 2]
-        assert med == 1.30
-        scaled = {q: b * med for q, b in base.items()}
-        flags = bench.find_regressions(run, scaled)
-        assert [f["query"] for f in flags] == ["q7"]
-
-    def test_cal_scaling_absorbs_host_window_drift(self):
-        """A uniformly 1.4×-slower host window (the measured shared-VM
-        drift) must produce ZERO flags once baselines are scaled by
-        the same session's calibration ratio — while a real 2× plan
-        regression on top of it still flags."""
-        base = {"q_mid": 1.00, "q_heavy": 4.00}
-        cal_x = 1.4
-        scaled = {q: b * cal_x for q, b in base.items()}
-        drifted = {"q_mid": 1.42, "q_heavy": 5.55}
-        assert bench.find_regressions(drifted, scaled) == []
-        regressed = dict(drifted, q_heavy=11.2)  # 2× plan cost at 1.4× host
-        flags = bench.find_regressions(regressed, scaled)
-        assert [f["query"] for f in flags] == ["q_heavy"]
-
     def test_repo_baseline_covers_headline(self):
-        # the real BENCH_r*.json history must yield baselines for the
-        # carried headline queries (new round-5 rows have none yet)
-        import os
-
-        base = bench.load_baseline(
-            os.path.dirname(os.path.abspath(bench.__file__)))
-        covered = [q for q in bench.HEADLINE if q in base]
-        assert len(covered) >= 25
+        # the committed pins cover every headline query, with all three
+        # counters, at sf0.1 on 32 and on 8 cores
+        repo = os.path.dirname(os.path.abspath(bench.__file__))
+        for cpus in (32, 8):
+            pins = bench.load_baseline(repo, "0.1", cpus)
+            assert pins is not None, cpus
+            missing = [q for q in bench.HEADLINE
+                       if set(pins.get(q, {})) != set(bench.COUNTERS)]
+            assert missing == [], (cpus, missing)

@@ -289,6 +289,10 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     DIRECTED input too: a source-only node keeps voting with its own
     label instead of dropping out of the state after round 1.
 
+    The edges are a SET: each distinct (src, dst) pair votes once, so
+    the result equals the operator run on
+    ``edges.select(src, dst).distinct()``.
+
     Scale shape: with ``broadcast_state`` (default) the (s, d) edge
     list is checkpointed ONCE hash-partitioned on ``d`` — one
     edge-sized exchange before the loop. Invariant: the edge⋈label
@@ -300,21 +304,19 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     localCheckpoint. The layout checkpoint runs inside
     ``loop_materialization_conf`` because an AQE-planned checkpoint
     reports UnknownPartitioning (so $SPARK_GRAFT_LOOP_AQE=1 brings
-    the per-round vote shuffles back). With ``broadcast_state=False``
-    the s-keyed shuffle join would destroy the layout, so that path
-    keeps a plain checkpoint and two vote exchanges per round.
+    the per-round vote shuffles back). The edge dedup runs INSIDE
+    that layout: hashpartitioning(d) already clusters equal (s, d)
+    rows, so the distinct adds no exchange and the edge list crosses
+    the network once. A distinct applied by the caller cannot
+    ride the layout: Catalyst drops the layout repartition as
+    redundant, the checkpoint's partitioning then names a stale
+    attribute, and every round re-shuffles the edges. With
+    ``broadcast_state=False`` the s-keyed shuffle join would destroy
+    the layout, so that path keeps a plain checkpoint and two vote
+    exchanges per round.
 
-    r14 note — tried and REVERTED: folding the carry-forward join
-    into the count aggregate as a zero-weight SELF-VOTE per node
-    (the same union-into-aggregate move that won for
-    pagerank_integer and min_plus_shortest_paths) removed one
-    broadcast build + join per round but measured 1.03-1.08× SLOWER
-    at sf0.1/local[32] (warm interleaved A/B, best-of-3 per arm:
-    old 4.38/4.48 s vs new 4.53/4.82 s end-to-end) — the extra
-    node-sized union branch through the big vote aggregate costs
-    more than the node-sized broadcast probe it replaces, because
-    votes dominate the aggregate and the carry join is cheap. Keep
-    the join form; don't retry without new evidence."""
+    The carry-forward stays a join: the zero-weight self-vote union
+    into the count aggregate measured slower (OPTIMIZATION_r14.md §4)."""
     # rounds run with AQE scoped off — strategies pinned by maybe_bc,
     # re-planning per stage is pure driver overhead (see pagerank_integer)
     from flight_data_pipeline_spark.session import (
@@ -325,12 +327,13 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     if broadcast_state:
-        # dst-partitioned edge layout (see Scale shape) — checkpointed
-        # under the loop scope so it keeps hashpartitioning(d)
+        # dst-partitioned edge layout (see Scale shape); the distinct
+        # rides it, and the checkpoint runs under the loop scope so it
+        # keeps hashpartitioning(d)
         with loop_materialization_conf(spark):
-            e = e.repartition("d").localCheckpoint()
+            e = e.repartition("d").distinct().localCheckpoint()
     else:
-        e = e.localCheckpoint()
+        e = e.distinct().localCheckpoint()
     maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
     labels = (e.select(F.col("s").alias("v"))
               .unionByName(e.select(F.col("d").alias("v")))

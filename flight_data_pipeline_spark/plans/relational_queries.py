@@ -4422,8 +4422,10 @@ BFS_SOURCE_PART = 1  # pinned BFS origin (exists at every fixture sf)
 def _copurchase_pairs(li: DataFrame) -> DataFrame:
     """Co-purchase part pairs ``(u, v)`` with ``u < v``: one row per
     order that holds both parts (repeated ``(o, p)`` lines count once).
-    Consumers add ``.distinct()`` for the edge set, or count rows per
-    ``(u, v)`` for the co-order support.
+    Consumers count rows per ``(u, v)`` for the co-order support, or
+    dedup for the edge set: with ``.distinct()``, or, when the mirrored
+    edges feed ``label_propagation_integer``, inside that operator's
+    dst-keyed layout exchange.
 
     Plan: one o-keyed exchange, then a sorted ``collect_set`` per order
     exploded in-row into its pairs, so per-order work is bounded by
@@ -5396,18 +5398,21 @@ def copurchase_label_communities(spark: SparkSession,
     min-member and member-id checksum pinning MEMBERSHIP, not just
     sizes.
 
-    Plan: the edge list is checkpointed once hash-partitioned on the
-    vote target; per round one edge⋈label join (label state broadcast
-    — one BIGINT per node) + one (v, label) count aggregate + one per-v
-    argmax aggregate, both reusing that layout, so rounds run without
-    a shuffle exchange; localCheckpoint truncates lineage per round
-    (operators/graph.label_propagation_integer)."""
+    Plan: the mirrored pair rows go straight to the operator, which
+    dedups them inside its one edge exchange — hash-partitioned on the
+    vote target — and checkpoints that layout; mirroring before the
+    distinct gives the same edge set, since a ``u < v`` row never
+    equals a mirrored one. Per round one edge⋈label join (label state
+    broadcast — one BIGINT per node) + one (v, label) count aggregate
+    + one per-v argmax aggregate, both reusing that layout, so rounds
+    run without a shuffle exchange; localCheckpoint truncates lineage
+    per round (operators/graph.label_propagation_integer)."""
     from flight_data_pipeline_spark.operators.graph import (
         label_propagation_integer,
     )
 
     li = load_table(spark, "lineitem", sf_dir)
-    edges = _both_ways(_copurchase_pairs(li).distinct())
+    edges = _both_ways(_copurchase_pairs(li))
     labels = label_propagation_integer(edges, src="s", dst="d", iters=3)
     comm = labels.groupBy(F.col("label").alias("community")).agg(
         F.count("*").alias("n_members"),

@@ -93,30 +93,12 @@ def cpu_dense_partitions(spark: SparkSession) -> int:
     such stages with an explicit column repartition at this count,
     which AQE leaves alone.
 
-    Default = the session default parallelism (1× cores) —
+    The count is the session default parallelism (1× cores) —
     core-derived, so the driver's lower-core-count bench scales it
     down automatically. Measured r13 (interleaved A/B at sf0.1): 2×
     cores lost 8-29% to per-task fixed cost on every marked stage,
     while ½× starved the heaviest verify stage 19% — 1× is the
-    plateau. Override with $SPARK_GRAFT_CPU_DENSE_PARTITIONS when the
-    posting volume is large enough that per-partition memory
-    (guide §5) matters more than core coverage."""
-    env = os.environ.get("SPARK_GRAFT_CPU_DENSE_PARTITIONS")
-    if env:
-        # validate here, not deep inside query construction where a
-        # bad value would surface as an opaque repartition error
-        # (ADVICE r13)
-        try:
-            n = int(env)
-        except ValueError:
-            raise ValueError(
-                "SPARK_GRAFT_CPU_DENSE_PARTITIONS must be a positive "
-                f"integer, got {env!r}") from None
-        if n <= 0:
-            raise ValueError(
-                "SPARK_GRAFT_CPU_DENSE_PARTITIONS must be a positive "
-                f"integer, got {env!r}")
-        return n
+    plateau."""
     return spark.sparkContext.defaultParallelism
 
 

@@ -11,6 +11,8 @@ print one JSON line per query, then a summary line:
     task_time_sec   sum of executor run time over the tasks
     driver_gap_sec  wall minus the union of the run's job intervals:
                     driver-side planning and scheduling no job covers
+    shuffle_write_bytes, shuffle_read_bytes
+                    shuffle bytes those stages wrote and read
 
 Counters and REST timestamps come from ``perfbench.counters``.
 
@@ -117,6 +119,8 @@ def main() -> None:
             "task_time_sec": round(sum(c.sums["executor_run_s"]
                                        for c in counted), 3),
             "driver_gap_sec": round(driver_gap(span, mine), 3),
+            **{k: int(sum(c.sums[k] for c in counted))
+               for k in ("shuffle_write_bytes", "shuffle_read_bytes")},
         }
         out[name] = rec
         print(json.dumps({name: rec}), flush=True)

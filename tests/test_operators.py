@@ -877,9 +877,9 @@ class TestLabelPropagationInteger:
 def _lpa_reference(edges, iters):
     """Plain-Python synchronous LPA with the operator's contract:
     labels seeded from src ∪ dst, each round every node takes its
-    most-voted in-neighbor label (one vote per edge, duplicates
-    included), ties to the smallest label, carry-forward without
-    in-votes."""
+    most-voted in-neighbor label (one vote per edge row, so pass a
+    deduplicated list for the operator's edge-set semantics), ties to
+    the smallest label, carry-forward without in-votes."""
     labels = {v: v for e in edges for v in e}
     for _ in range(iters):
         votes = {}
@@ -894,8 +894,8 @@ def _lpa_reference(edges, iters):
 
 def _random_multigraph(seed):
     """Seeded directed multigraph over a few dozen nodes: duplicate
-    edges (vote counts > 1), self-loops, source-only nodes (no
-    in-edges), and — small degrees — plenty of tied votes."""
+    edges (which the operator counts once), self-loops, source-only
+    nodes (no in-edges), and — small degrees — plenty of tied votes."""
     import random
 
     rng = random.Random(seed)
@@ -912,7 +912,8 @@ class TestLabelPropagationDstLayout:
     """Pins for the dst-partitioned edge layout: with broadcast_state
     the edge list is checkpointed hash-partitioned on dst and each
     round's vote count and argmax reuse that layout instead of
-    shuffling. Both state paths must equal the plain-Python LPA.
+    shuffling. Both state paths must equal the plain-Python LPA on the
+    deduplicated edge list.
     Every test runs at 8 shuffle partitions, twice the session's 4
     cores, so the layout spans more partitions than tasks run at
     once (other get_spark callers may have reset the session value)."""
@@ -927,6 +928,10 @@ class TestLabelPropagationDstLayout:
     @pytest.mark.parametrize("broadcast_state", [True, False])
     @pytest.mark.parametrize("seed", [7, 11, 23])
     def test_matches_python_reference(self, spark, seed, broadcast_state):
+        """The operator counts each distinct edge once, so it must equal
+        the reference run on the deduplicated edge list; on these seeds
+        the repeated edges change the one-vote-per-row answer, so the
+        check sees a missing dedup."""
         from flight_data_pipeline_spark.operators.graph import (
             label_propagation_integer,
         )
@@ -937,13 +942,16 @@ class TestLabelPropagationDstLayout:
                for r in label_propagation_integer(
                    edges, iters=3,
                    broadcast_state=broadcast_state).collect()}
-        assert got == _lpa_reference(und, 3)
+        want = _lpa_reference(list(dict.fromkeys(und)), 3)
+        assert want != _lpa_reference(und, 3)
+        assert got == want
 
     def test_round_plan_has_no_shuffle_exchange(self, spark, tmp_path,
                                                 monkeypatch):
         """The round-1 plan of the default path carries only broadcast
-        exchanges; the broadcast_state=False path still shuffles the
-        votes, which shows the check can see an Exchange at all."""
+        exchanges, the in-layout edge dedup included; the
+        broadcast_state=False path still shuffles the votes, which
+        shows the check can see an Exchange at all."""
         import re
 
         from flight_data_pipeline_spark.operators.graph import (

@@ -675,6 +675,24 @@ def test_copurchase_pairs_distinct_equals_items_self_join(spark):
     assert {(r.u, r.v) for r in rows} == self_join
 
 
+def test_mirrored_pairs_distinct_equals_distinct_then_mirrored(spark):
+    """copurchase_label_communities dedups AFTER mirroring (inside the
+    label-propagation layout exchange): on lines with repeated (o, p)
+    rows and pairs shared across orders that must give the same edge
+    multiset as the distinct-then-mirror build."""
+    from flight_data_pipeline_spark.plans.relational_queries import (
+        _both_ways,
+        _copurchase_pairs,
+    )
+
+    li = pair_lineitem(spark)
+    after = _both_ways(_copurchase_pairs(li)).distinct()
+    before = _both_ways(_copurchase_pairs(li).distinct())
+    assert after.exceptAll(before).count() == 0
+    assert before.exceptAll(after).count() == 0
+    assert before.count() == 2 * _copurchase_pairs(li).distinct().count()
+
+
 def test_copurchase_pairs_repartition_precedes_order_aggregate(spark):
     # the width pin must be the ONLY o-keyed exchange: placed after the
     # groupBy it is elided and the aggregate's own ENSURE_REQUIREMENTS

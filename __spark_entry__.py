@@ -29,16 +29,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so that queries still lacking an official CORRECTNESS row
-    (plus everything changed this round) come first — the driver
-    samples the first 50 registered queries per round
-    (registry.DRIVER_PRIORITY documents the list)."""
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
     from flight_data_pipeline_spark.plans import registry
 
     registry.load_all()
-    return registry.ordered()
+    return dict(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -101,7 +101,7 @@ def query_main(argv: list[str]) -> int:
 
     registry.load_all()
     if args.list_queries or not args.name:
-        for name in registry.ordered():
+        for name in registry.QUERIES:
             kind = "checked" if name in registry.ORACLE_SQL else "rows-only"
             print(f"{name}\t{kind}")
         return 0

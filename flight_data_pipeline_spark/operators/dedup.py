@@ -156,8 +156,7 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
 
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst", max_iter: int = 10,
-                         strict: bool = False,
-                         broadcast_state: bool = True) -> DataFrame:
+                         strict: bool = False) -> DataFrame:
     """Connected components over an undirected edge list → (v, label)
     with label = the component's minimum node id — the step that turns
     near-dup PAIRS into dedup CLUSTERS (keep min-id doc per cluster,
@@ -181,15 +180,15 @@ def connected_components(edges: DataFrame, src: str = "src",
     near-dup clusters settle in 1-2, chains of diameter D in
     ~log₂ D). The change flag is computed inside the round's
     checkpoint job (the previous label rides the hop aggregate as a
-    self-marker min — r14; no join against the previous state), so
-    the convergence probe is an ``isEmpty()`` filter over
-    already-materialized rows — loop control, not an extra join job. If ``max_iter`` rounds pass with
-    labels still moving (component diameter ≳ 2^max_iter), the
-    default is a logged warning + partial labels (clusters may be
-    split; raise ``max_iter``); ``strict=True`` raises instead —
-    oracle-checked callers want a clear convergence error, not a
-    confusing downstream hash MISMATCH from silently-split clusters
-    (ADVICE r8).
+    self-marker min; no join against the previous state), so the
+    convergence probe is an ``isEmpty()`` filter over
+    already-materialized rows — loop control, not an extra join job.
+    If ``max_iter`` rounds pass with labels still moving (component
+    diameter ≳ 2^max_iter), the default is a logged warning + partial
+    labels (clusters may be split; raise ``max_iter``);
+    ``strict=True`` raises instead — oracle-checked callers want a
+    clear convergence error, not a confusing downstream hash MISMATCH
+    from silently-split clusters.
 
     Lineage discipline: each round references the previous labels
     twice (message join + union), so an unbroken logical plan doubles
@@ -217,36 +216,26 @@ def connected_components(edges: DataFrame, src: str = "src",
               .select(F.col("s").alias("v"), "label")
               .localCheckpoint())
     converged = False
-    # ``broadcast_state`` pins the per-round state joins: the label
-    # vector (one row per node of the GROUP/cluster graph at every
-    # in-repo caller — strictly smaller than the corpus) rides a
-    # broadcast so the symmetrized edge side is never shuffled inside
-    # the loop, and the hop self-join's build side is broadcast
-    # rather than sort-merged — a checkpointed frame has no catalog
-    # stats, so without the hint Spark sort-merge-joins the edge side
-    # EVERY round (the pagerank_integer broadcast_state rationale;
-    # measured r13 at sf0.1: near_dup_clusters ~3.3 s → ~2.3 s).
-    # Rounds deliberately KEEP AQE (unlike pagerank_integer): the
-    # loop early-stops, so round count is data-dependent and the
-    # convergence isEmpty probe benefits from AQE's coalescing —
-    # measured r13 (AQE-off rounds 1.15-1.27× slower) and RE-measured
-    # r14 after the self-marker round restructure (warm interleaved
-    # A/B at sf0.1: AQE-off still 1.03-1.4× slower on all three
-    # cluster-family probes). Pass broadcast_state=False for
-    # fact-sized node sets; the shuffle-join plan is the fallback.
+    # Both per-round state joins broadcast the label vector (one row
+    # per node of the cluster graph at every in-repo caller), so the
+    # symmetrized edge side is never shuffled inside the loop; a
+    # checkpointed frame has no catalog stats, so without the hint
+    # Spark would sort-merge-join the edge side every round. Rounds
+    # deliberately KEEP AQE (unlike pagerank_integer): the round count
+    # is data-dependent and the isEmpty probe gains from AQE's
+    # coalescing (OPTIMIZATION_r13.md §2, OPTIMIZATION_r14.md §3).
     from flight_data_pipeline_spark.session import dump_loop_plan
 
-    maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
     label_t = labels.schema["label"].dataType
     for it in range(max_iter):
         # the previous label rides the hop aggregate as min over a
-        # SELF-MARKER column (r14): the labels branch contributes
-        # exactly one row per v with __self = its current label, the
-        # message branch contributes NULLs, so min(__self) IS the
-        # previous label — the change flag no longer needs r13's
-        # third per-round broadcast join against the previous state
+        # SELF-MARKER column: the labels branch contributes exactly
+        # one row per v with __self = its current label, the message
+        # branch contributes NULLs, so min(__self) IS the previous
+        # label — the change flag needs no join against the previous
+        # state
         msgs = (
-            sym.join(maybe_bc(labels.withColumnRenamed("v", "__d")),
+            sym.join(F.broadcast(labels.withColumnRenamed("v", "__d")),
                      F.col("d") == F.col("__d"))
             .select(F.col("s").alias("v"), F.col("label"),
                     F.lit(None).cast(label_t).alias("__self"))
@@ -263,8 +252,8 @@ def connected_components(edges: DataFrame, src: str = "src",
         # instead of diameter (the GraphFrames/large-star discipline).
         # Folded into the same checkpoint job as the hop aggregate.
         jumped = (
-            hop.join(maybe_bc(hop.select(F.col("v").alias("__u"),
-                                         F.col("label").alias("__ul"))),
+            hop.join(F.broadcast(hop.select(F.col("v").alias("__u"),
+                                            F.col("label").alias("__ul"))),
                      F.col("label") == F.col("__u"))
             .select("v", F.col("__ul").alias("label"), "__prev")
         )

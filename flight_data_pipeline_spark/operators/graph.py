@@ -18,6 +18,8 @@ is why the consumers round before ranking).
 
 from __future__ import annotations
 
+import logging
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -32,7 +34,9 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     (no out-edges) spread their mass uniformly — the standard
     stochastic-matrix completion, kept as a one-row broadcast scalar
     so the loop stays fully declarative (no driver-side mass
-    constant). Stops early when no node moves more than ``tol``.
+    constant). Stops early when no node moves more than ``tol``; if
+    ``max_iter`` rounds pass with nodes still moving, logs a warning
+    and returns the unconverged ranks.
 
     ``init_ranks`` (v, rank) WARM-STARTS the iteration: nodes present
     keep their prior rank, new nodes enter at 1/N, and the combined
@@ -81,6 +85,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             .select("v", (F.col("rank") / F.col("__m")).alias("rank"))
             .localCheckpoint()
         )
+    converged = False
     for _ in range(max_iter):
         # mass leaving via edges: rank_s * w / out_weight_s
         contrib = (
@@ -119,13 +124,16 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         ranks = new_ranks.select("v", "rank")
         if converged:
             break
+    if not converged:
+        logging.getLogger(__name__).warning(
+            "pagerank: ranks still moving by more than tol=%g after "
+            "%d rounds — raise max_iter", tol, max_iter)
     return ranks
 
 
 def pagerank_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
                      scale: int = 10**12, d_num: int = 85,
                      d_den: int = 100, iters: int = 3,
-                     broadcast_state: bool = True,
                      weight: str | None = None) -> DataFrame:
     """Fixed-point integer PageRank → (v, rank) with rank a scaled
     BIGINT — every arithmetic step is integer (div / mod / sum), so
@@ -154,36 +162,20 @@ def pagerank_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
     most 1 unit per edge per round — at scale=1e12 the relative error
     is ~deg/1e12, far below any ranking-relevant gap.
 
-    Scale shape (r14 — two jobs per round): the degree-ANNOTATED edge
-    list is materialized ONCE before the loop (one extra edge-sized
-    checkpoint beside the raw edge list — the price of never
-    re-aggregating degrees inside the loop; r13 re-derived the
-    node-sized ``deg`` from the raw checkpoint every round, which
-    re-ran the degree aggregate + its exchange per round). Each round
-    is then ONE query: edge⋈rank join → per-edge share stream UNIONed
-    with a zero row per node (carried from the rank state itself) →
-    one dst-keyed SUM aggregate (map-side partial combine collapses
-    the fan-in before the shuffle) → the damped update, eagerly
-    localCheckpointed. The union-with-zeros replaces r13's
-    nodes⋈contrib LEFT join (coalesce(Σ,0) ≡ Σ over shares ∪ {0} for
-    integers), and the node count ``__n`` rides the rank state as a
-    constant column so no per-round scalar broadcast is rebuilt —
-    per round the ONLY broadcast build left is the rank vector
-    itself. With ``broadcast_state`` (default), that per-round rank
-    state — one BIGINT per node, i.e. dimension-sized for a
-    co-purchase/parts graph — is BROADCAST, so the big edge side is
-    never shuffled or sorted inside the loop; a checkpointed frame
-    has no catalog stats, so without the hint Spark sort-merge-joins
-    the 2.4M-edge side EVERY round (measured ~2.5 s/round →
-    ~0.3 s/round at sf0.1). Set it False for graphs whose node count
-    is fact-sized (state > broadcast limit); the s-keyed shuffle
-    join plan is the fallback. Recompute-safe: every round is
-    deterministic, so a lost partition rebuilds identically."""
-    maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
-    # unweighted edges don't materialize a constant __w column into
-    # the checkpoint (r13): deg reduces to COUNT(*) and the per-round
-    # share to rank div deg — same integers, one column fewer in the
-    # loop's hottest stored frame (read once per round)
+    Scale shape (two jobs per round): the degree-annotated edge list
+    is checkpointed ONCE before the loop. Each round is then one
+    query: edge⋈rank join (the rank state, one BIGINT per node, is
+    broadcast, so the edge side is never shuffled inside the loop) →
+    per-edge shares UNIONed with a zero row per node → one dst-keyed
+    SUM aggregate → the damped update, eagerly localCheckpointed.
+    Σ over shares ∪ {0} ≡ coalesce(Σ shares, 0) for integers, and
+    the node count ``__n`` rides the rank state, so the rank vector
+    is the round's only broadcast build. Measurements:
+    OPTIMIZATION_r13.md §3, OPTIMIZATION_r14.md §1. Recompute-safe:
+    every round is deterministic, so a lost partition rebuilds
+    identically."""
+    # unweighted edges keep no constant __w column in the checkpoint:
+    # deg reduces to COUNT(*) and the share to rank div deg
     if weight is not None:
         e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"),
                          F.col(weight).cast("long").alias("__w")
@@ -195,16 +187,9 @@ def pagerank_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
                          F.col(dst).alias("d")).localCheckpoint()
         deg = e.groupBy("s").agg(F.count("*").alias("__deg"))
         share = F.expr("rank div __deg")
-    # per-edge degree annotation, materialized ONCE (r14): r13 left
-    # this lazy to avoid a second edge-sized checkpoint, but the lazy
-    # form re-ran the degree aggregate and its broadcast build inside
-    # EVERY round's materialization (loop-body plan evidence:
-    # plans/r14/loops_before/*/pagerank_integer_round1.txt, exchanges
-    # 6/8). One up-front map-side broadcast join trades ~1 edge-sized
-    # write for iters× fewer per-round jobs and aggregates; at 100 TB
-    # the storage doubles the edge footprint but the loop reads the
-    # same bytes per round either way.
-    e_deg = e.join(maybe_bc(deg), "s").localCheckpoint()
+    # per-edge degree annotation, materialized once so no round
+    # re-runs the degree aggregate
+    e_deg = e.join(F.broadcast(deg), "s").localCheckpoint()
     nodes = (
         e.select(F.explode(F.array("s", "d")).alias("v"))
         .distinct()
@@ -220,12 +205,10 @@ def pagerank_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
                 .alias("rank"), "__n")
         .localCheckpoint()
     )
-    # Round materializations run with AQE scoped OFF: every join
-    # strategy inside a round is already pinned (maybe_bc/broadcast),
-    # so AQE's stage-by-stage re-planning only multiplies driver-side
-    # jobs — measured r13 at sf0.1/local[32], 3-4 jobs per round
-    # collapse to 1 (the INITIAL edge/node/seed checkpoints above
-    # keep AQE: their upstream DAGs want its dynamic broadcasts).
+    # Round materializations run with AQE scoped off: every join
+    # strategy inside a round is pinned by a broadcast hint, so AQE's
+    # re-planning only adds driver-side jobs (the initial checkpoints
+    # above keep AQE for their upstream DAGs).
     from flight_data_pipeline_spark.session import (
         dump_loop_plan,
         loop_materialization_conf,
@@ -237,17 +220,15 @@ def pagerank_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
     for it in range(iters):
         with loop_materialization_conf(spark):
             shares = (
-                e_deg.join(maybe_bc(ranks.select(F.col("v").alias("s"),
-                                                 "rank")),
+                e_deg.join(F.broadcast(ranks.select(F.col("v").alias("s"),
+                                                    "rank")),
                            "s")
                 .select(F.col("d").alias("v"), share.alias("__c"),
                         F.lit(None).cast("long").alias("__n"))
             )
             # zero-share carrier row per node: Σ over shares ∪ {0}
-            # ≡ coalesce(Σ shares, 0) — the same integers as r13's
-            # LEFT join against the aggregated contrib, one exchange
-            # and one broadcast build fewer per round; __n rides the
-            # carrier (exactly one per group, so MAX picks it)
+            # ≡ coalesce(Σ shares, 0); __n rides the carrier (exactly
+            # one per group, so MAX picks it)
             carrier = ranks.select(
                 "v", F.lit(0).cast("long").alias("__c"), "__n")
             new_ranks = (
@@ -268,8 +249,7 @@ def pagerank_integer(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def label_propagation_integer(edges: DataFrame, src: str = "src",
-                              dst: str = "dst", iters: int = 3,
-                              broadcast_state: bool = True) -> DataFrame:
+                              dst: str = "dst", iters: int = 3) -> DataFrame:
     """Community detection by LABEL PROPAGATION → (v, label), fully
     deterministic and therefore hash-checkable (the textbook LPA is
     randomized-order; this is the synchronous variant with a pinned
@@ -293,32 +273,27 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     the result equals the operator run on
     ``edges.select(src, dst).distinct()``.
 
-    Scale shape: with ``broadcast_state`` (default) the (s, d) edge
-    list is checkpointed ONCE hash-partitioned on ``d`` — one
-    edge-sized exchange before the loop. Invariant: the edge⋈label
-    join broadcasts the label state (one BIGINT per node), so it
-    keeps the edges' hashpartitioning(d), which already satisfies the
-    (d, label) count aggregate and the per-v argmax aggregate; the
-    carry-forward left join broadcasts the winners. Rounds therefore
-    run with no shuffle exchange, each truncated by an eager
-    localCheckpoint. The layout checkpoint runs inside
-    ``loop_materialization_conf`` because an AQE-planned checkpoint
-    reports UnknownPartitioning (so $SPARK_GRAFT_LOOP_AQE=1 brings
-    the per-round vote shuffles back). The edge dedup runs INSIDE
+    Scale shape: the (s, d) edge list is checkpointed ONCE
+    hash-partitioned on ``d`` — one edge-sized exchange before the
+    loop. Invariant: the edge⋈label join broadcasts the label state
+    (one BIGINT per node), so it keeps the edges' hashpartitioning(d),
+    which already satisfies the (d, label) count aggregate and the
+    per-v argmax aggregate; the carry-forward left join broadcasts the
+    winners. Rounds therefore run with no shuffle exchange, each
+    truncated by an eager localCheckpoint. The layout checkpoint runs
+    inside ``loop_materialization_conf`` because an AQE-planned
+    checkpoint reports UnknownPartitioning. The edge dedup runs INSIDE
     that layout: hashpartitioning(d) already clusters equal (s, d)
     rows, so the distinct adds no exchange and the edge list crosses
-    the network once. A distinct applied by the caller cannot
-    ride the layout: Catalyst drops the layout repartition as
-    redundant, the checkpoint's partitioning then names a stale
-    attribute, and every round re-shuffles the edges. With
-    ``broadcast_state=False`` the s-keyed shuffle join would destroy
-    the layout, so that path keeps a plain checkpoint and two vote
-    exchanges per round.
+    the network once. A distinct applied by the caller cannot ride the
+    layout: Catalyst drops the layout repartition as redundant, the
+    checkpoint's partitioning then names a stale attribute, and every
+    round re-shuffles the edges.
 
     The carry-forward stays a join: the zero-weight self-vote union
     into the count aggregate measured slower (OPTIMIZATION_r14.md §4)."""
-    # rounds run with AQE scoped off — strategies pinned by maybe_bc,
-    # re-planning per stage is pure driver overhead (see pagerank_integer)
+    # rounds run with AQE scoped off — every join strategy is pinned
+    # by a broadcast hint (see pagerank_integer)
     from flight_data_pipeline_spark.session import (
         dump_loop_plan,
         loop_materialization_conf,
@@ -326,15 +301,11 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
 
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if broadcast_state:
-        # dst-partitioned edge layout (see Scale shape); the distinct
-        # rides it, and the checkpoint runs under the loop scope so it
-        # keeps hashpartitioning(d)
-        with loop_materialization_conf(spark):
-            e = e.repartition("d").distinct().localCheckpoint()
-    else:
-        e = e.distinct().localCheckpoint()
-    maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
+    # dst-partitioned edge layout (see Scale shape); the distinct rides
+    # it, and the checkpoint runs under the loop scope so it keeps
+    # hashpartitioning(d)
+    with loop_materialization_conf(spark):
+        e = e.repartition("d").distinct().localCheckpoint()
     labels = (e.select(F.col("s").alias("v"))
               .unionByName(e.select(F.col("d").alias("v")))
               .distinct()
@@ -343,18 +314,18 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
     for it in range(iters):
         with loop_materialization_conf(spark):
             votes = (
-                e.join(maybe_bc(labels.select(F.col("v").alias("s"),
-                                              F.col("label").alias("__vl"))),
+                e.join(F.broadcast(labels.select(
+                           F.col("v").alias("s"),
+                           F.col("label").alias("__vl"))),
                        "s")
                 .groupBy(F.col("d").alias("v"), "__vl")
                 .agg(F.count("*").alias("__c"))
             )
-            # per-v argmax as one aggregate instead of a window
-            # (r13): max(struct(count, -label)) is lexicographic —
-            # largest count, ties to the SMALLEST label (labels are
-            # node ids ≥ 0, so the negation is exact) — the same
-            # winner the row_number window picked, without the
-            # per-round shuffle+sort a window requires
+            # per-v argmax as one aggregate: max(struct(count,
+            # -label)) is lexicographic — largest count, ties to the
+            # SMALLEST label (labels are node ids ≥ 0, so the negation
+            # is exact); no window, so no per-round sort
+            # (OPTIMIZATION_r13.md §8)
             winners = (
                 votes.groupBy("v")
                 .agg(F.max(F.struct(F.col("__c"),
@@ -363,7 +334,7 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
                 .select("v", (-F.col("__m.__nl")).alias("__vl"))
             )
             new_labels = (
-                labels.join(maybe_bc(winners), "v", "left")
+                labels.join(F.broadcast(winners), "v", "left")
                 .select("v", F.coalesce("__vl", "label").alias("label"))
             )
             if it == 0:
@@ -376,7 +347,6 @@ def min_plus_shortest_paths(edges: DataFrame, source: DataFrame,
                             src: str = "src", dst: str = "dst",
                             weight: str = "w", iters: int = 3,
                             inf: int = 10**15,
-                            broadcast_state: bool = True,
                             edges_prematerialized: bool = False
                             ) -> DataFrame:
     """Single-source shortest paths by ``iters`` rounds of BELLMAN-FORD
@@ -392,24 +362,21 @@ def min_plus_shortest_paths(edges: DataFrame, source: DataFrame,
 
     ``source`` is a one-column (v) frame of seed nodes (dist 0).
 
-    Scale shape (r14 — two jobs per round): per round one edge⋈dist
-    join (state broadcast, one BIGINT per node) producing the raw
-    relaxation stream (d, dist+w), UNIONed with the carried distance
-    per node, then ONE v-keyed MIN aggregate — min(dist, relaxes) ≡
-    r13's least(dist, coalesce(min relaxes, inf)) with the node-keyed
-    carry-forward LEFT join and its broadcast build removed; the same
-    partitioning every round; localCheckpoint truncates lineage.
+    Scale shape (two jobs per round): per round one edge⋈dist join
+    (state broadcast, one BIGINT per node) producing the relaxation
+    stream (d, dist+w), UNIONed with the carried distance per node,
+    then ONE v-keyed MIN aggregate — min over {dist} ∪ {relaxes} ≡
+    least(dist, coalesce(min relaxes, inf)), so no carry-forward join
+    is needed; localCheckpoint truncates lineage
+    (OPTIMIZATION_r14.md §2).
 
     ``edges_prematerialized=True`` is the caller's promise that
     ``edges`` is already materialized (checkpointed or cached), so the
-    operator skips its own edge checkpoint (copurchase_shortest_paths
-    checkpoints ``ew`` for its source aggregate — r13
-    double-materialized the same rows)."""
+    operator skips its own edge checkpoint."""
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"),
                      F.col(weight).cast("long").alias("w"))
     if not edges_prematerialized:
         e = e.localCheckpoint()
-    maybe_bc = F.broadcast if broadcast_state else (lambda df: df)
     # node set from src UNION dst: on directed input a sink (dst-only)
     # node must still appear in the distance vector, else relaxed
     # distances onto it are silently dropped by the carry-forward join
@@ -423,24 +390,21 @@ def min_plus_shortest_paths(edges: DataFrame, source: DataFrame,
                                 F.lit(inf).cast("long")).alias("dist"))
         .localCheckpoint()
     )
-    # rounds deliberately keep AQE (measured 1.04-1.6× slower without
-    # it here — the relax join's runtime re-planning earns its keep,
-    # unlike pagerank_integer's fully-pinned rounds)
+    # rounds deliberately keep AQE: the relax join's runtime
+    # re-planning measured faster here (OPTIMIZATION_r14.md §2)
     from flight_data_pipeline_spark.session import dump_loop_plan
 
     for it in range(iters):
         relax = (
-            e.join(maybe_bc(dist.select(F.col("v").alias("s"), "dist")),
+            e.join(F.broadcast(dist.select(F.col("v").alias("s"), "dist")),
                    "s")
             .where(F.col("dist") < inf)  # no relaxing from unreached
             .select(F.col("d").alias("v"),
                     (F.col("dist") + F.col("w")).alias("__nd"))
         )
         # carried distance per node unions into the SAME min
-        # aggregate the relaxations feed (r14): min over
-        # {dist} ∪ {relaxes} ≡ least(dist, coalesce(min relaxes,
-        # inf)) — 64-bit min is associative-exact — so the per-round
-        # carry-forward left join and its broadcast build disappear
+        # aggregate the relaxations feed: 64-bit min is
+        # associative-exact, so no carry-forward join is needed
         carried = dist.select("v", F.col("dist").alias("__nd"))
         new_dist = (
             relax.unionByName(carried)

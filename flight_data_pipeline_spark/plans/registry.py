@@ -29,290 +29,6 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, SparkQuery] = {}
 ORACLE_SQL: dict[str, str] = {}
 
-# Driver-sample priority. The verification driver checks the FIRST 50
-# registered queries per round (CORRECTNESS_r02 = exactly the first 50
-# of r2's registration order), so with >50 registered the tail never
-# gets an official correctness row. Queries listed here are emitted
-# first by ``ordered()``.
-#
-# ROTATION POLICY (VERDICT r4 items 1-2) — this tuple is GENERATED by
-# ``scripts/gen_priority.py`` from the CORRECTNESS_r*.json vintages;
-# do not hand-edit between the markers. Order: (1) never-sampled
-# queries first (a first official row beats refreshing a green),
-# (2) everything else oldest-green-first, ties by registration order.
-# Regenerate at each round start after the new correctness file lands:
-#   python scripts/gen_priority.py && python scripts/rotation_report.py
-# The tail past the 50-query sample keeps its last green row (visible
-# in BASELINE.md's rotation table as debt, not an implied pass).
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # PRIORITY:BEGIN (generated by scripts/gen_priority.py)
-    # -- oracle changed since last official row --
-    "simhash_buckets",
-    # -- never sampled --
-    "html_extraction_stats",
-    "warc_extraction_stats",
-    "media_decode_profile_hier",
-    # -- last green r8 --
-    "daily_rollup",
-    "hour_dedup",
-    "freshness_flags_daily",
-    "props_variant_stats",
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_orders_by_revenue",
-    "customers_with_orders_by_segment",
-    "customers_without_orders",
-    "order_count_histogram",
-    "brand_price_stats",
-    "segment_setops",
-    "pricing_rollup",
-    "late_shipment_priority_counts",
-    "promo_revenue_ratio_monthly",
-    "late_events_merge",
-    "incremental_rollup_merge",
-    "rolling_hash_fingerprints",
-    "tfidf_top_term_per_doc",
-    "sequence_packing_stats",
-    "approx_value_quantiles",
-    "benchmark_ngram_overlap",
-    "boilerplate_ngrams",
-    "quality_funnel",
-    "pii_blocklist_stats",
-    "source_mixing_weights",
-    "duplicated_ngram_coverage",
-    "unigram_logprob_quality",
-    "quality_score_calibration",
-    "near_dup_jaccard_pairs",
-    "near_dup_jaccard_pairs_guarded",
-    "cross_source_contamination",
-    "near_dup_clusters",
-    "dedup_survivors_by_source",
-    "incremental_corpus_dedup",
-    "minhash_jaccard_estimate_error",
-    "dedup_token_savings",
-    "label_centroids",
-    "int8_quantization_error",
-    "ann_lsh_topk_multiprobe",
-    "closest_pair_per_label",
-    "embedding_near_dup_pairs",
-    "embedding_norm_outliers",
-    "semdedup_prune_stats",
-    "embedding_decontamination_audit",
-    "doc_embedding_quality_join",
-    # -- last green r9 --
-    "key_skew_stats",
-    "top2_orders_per_customer_lateral",
-    "orders_fingerprint",
-    "events_snapshot_diff",
-    "event_value_histogram",
-    "daily_value_anomalies",
-    "salted_value_stats_by_type",
-    "fuzzy_part_name_pairs",
-    "referential_integrity_audit",
-    "events_column_profile",
-    "winsorized_value_stats",
-    "value_psi_drift",
-    "ranking_functions_probe",
-    "value_equidepth_histogram",
-    "urgent_order_customers_exists",
-    "setops_bag_semantics",
-    "string_functions_probe_2",
-    "null_and_bool_probe",
-    "purchase_attribution_asof",
-    "views_before_purchase_1h",
-    "user_sessions",
-    "session_window_stats",
-    "user_state_history_scd2",
-    "conversion_funnel",
-    "hourly_gap_fill",
-    "hourly_value_ohlc",
-    "date_functions_probe",
-    "rolling_median_daily_value",
-    "recursive_calendar_spine",
-    "weekly_value_growth",
-    "lang_id_predictions",
-    "source_quality_topp",
-    "token_budget_mixture",
-    "blocklist_redaction_stats",
-    "compression_ratio_stats",
-    "deterministic_group_sample",
-    "rolling_distinct_users_hll",
-    "quality_score_calibration_approx",
-    "kmv_overlap_estimate",
-    "chunk_integrity_audit",
-    "corpus_curation_stats",
-    "dup_span_removal",
-    "leakage_safe_split",
-    "dedup_keep_best",
-    "media_decode_profile",
-    "media_quality_profile",
-    "ann_ivf_pq_topk",
-    "matryoshka_dim_audit",
-    "dedup_signal_agreement",
-    "pq_reconstruction_error",
-    # -- last green r10 --
-    "stats_aggregates_probe",
-    "returned_item_revenue_topk",
-    "bracketed_discount_revenue",
-    "idle_rich_customers",
-    "zorder_key_probe",
-    "math_functions_probe",
-    "null_ordering_probe",
-    "forecast_revenue_change",
-    "bilateral_trade_volume",
-    "profit_by_nation_year",
-    "top_revenue_suppliers",
-    "small_quantity_yearly_revenue",
-    "min_cost_regional_supplier",
-    "concentrated_part_value",
-    "supplier_count_by_part_attrs",
-    "excess_volume_suppliers",
-    "bitwise_functions_probe",
-    "map_functions_probe",
-    "pivot_unpivot_roundtrip",
-    "skew_safe_order_revenue",
-    "cumulative_unique_users_daily",
-    "cohort_retention",
-    "range_frame_probe",
-    "multi_touch_attribution",
-    "event_pattern_match",
-    "stratified_sample_stats",
-    "tokenization_stats",
-    "quality_classifier_scores",
-    "deterministic_epoch_shuffle",
-    "bigram_logprob_quality",
-    "bpe_merge_table",
-    "array_functions_probe",
-    "theta_sketch_audience_overlap",
-    "hash_functions_probe",
-    "regex_functions_probe",
-    "frequent_tokens_sketch",
-    "count_min_token_estimates",
-    "exact_dedup_documents",
-    "minhash_lsh_near_dups",
-    "leakage_safe_split_materialized",
-    "cluster_size_histogram",
-    "near_dup_jaccard_pairs_bitset",
-    "curated_training_mix",
-    "cosine_topk_bruteforce",
-    "label_centroid_stats",
-    "closest_pair_per_label_lsh",
-    "ann_ivf_topk",
-    "hamming_sign_topk",
-    "label_medoids",
-    # -- last green r11 --
-    "success_rate_7d",
-    "status_distribution",
-    "recursive_cte_probe",
-    "json_functions_probe",
-    "calendar_functions_probe",
-    "url_functions_probe",
-    "market_share_by_year",
-    "rfm_segments",
-    "part_basket_lift",
-    "benford_price_audit",
-    "ansi_safety_probe",
-    "collation_probe",
-    "robust_value_outliers",
-    "quantile_histogram_estimates",
-    "snapshot_diff_summary",
-    "join_cardinality_estimate",
-    "expectations_audit",
-    "copurchase_graph_levels",
-    "ab_test_conversion_ztest",
-    "order_value_proration",
-    "copurchase_pagerank",
-    "zone_map_skipping_stats",
-    "copurchase_triangles",
-    "chi_square_independence",
-    "filtered_aggregates_probe",
-    "copurchase_item_similarity",
-    "point_in_time_state_join",
-    "seasonal_naive_backtest",
-    "ewma_control_chart",
-    "hourly_linear_interpolation",
-    "points_balance_floor_zero",
-    "max_concurrent_sessions",
-    "group_feature_scaling",
-    "group_ols_trend",
-    "value_cusum_changepoint",
-    "sliding_7d_distinct_users",
-    "rolling_14d_type_correlation",
-    "distinct_token_sketches",
-    "bloom_prefilter_decontamination",
-    "textrank_keyword_scores",
-    "hashing_tf_checksum",
-    "k_anonymity_audit",
-    "l_diversity_audit",
-    "systematic_pps_sample",
-    "compaction_plan_stats",
-    "bm25_doc_topk",
-    "textrank_integer_keywords",
-    "minhash_md5_signatures",
-    "media_decode_profile_gif",
-    "media_decode_profile_audio",
-    # -- last green r12 --
-    "exec_time_trend",
-    "recent_runs_topk",
-    "scalar_counts",
-    "quality_gate_daily",
-    "json_props_stats",
-    "daily_event_type_pivot",
-    "parts_above_avg_price",
-    "first_order_per_customer",
-    "avg_order_gap_by_segment",
-    "revenue_7d_moving_avg",
-    "order_grouping_sets",
-    "nation_presence_full_outer",
-    "lineitem_cube",
-    "string_functions_probe",
-    "large_volume_orders",
-    "brand_supplier_diversity",
-    "parts_above_brand_avg",
-    "order_price_quantiles",
-    "top_customer_per_segment",
-    "nations_per_region",
-    "weighted_median_price",
-    "copurchase_label_communities",
-    "copurchase_shortest_paths",
-    "hourly_event_windows",
-    "event_transition_matrix",
-    "token_stats_by_lang",
-    "doc_quality_bands",
-    "doc_fingerprint_dups",
-    "top_tokens",
-    "approx_distinct_stats",
-    "repetition_stats",
-    "gopher_quality_flags",
-    "doc_chunking_stats",
-    "bpe_token_stats",
-    "curriculum_schedule",
-    "ams_second_moment",
-    "reservoir_sample_bottomk",
-    "bigram_lm_quality_score",
-    "naive_bayes_lang_accuracy",
-    "simhash_md5_fingerprints",
-    "lsh_candidate_recall_audit",
-    "ann_lsh_topk",
-    "multimodal_byte_features",
-    "media_decode_profile_video",
-    "int8_quantized_cosine_topk",
-    "matryoshka_prefix_topk",
-    "sketch_rerank_cascade",
-    "hybrid_retrieval_rrf",
-    "ann_recall_audit",
-    "kmeans_assignment_round",
-    # PRIORITY:END
-)
-
-
-def ordered() -> dict[str, SparkQuery]:
-    """QUERIES with DRIVER_PRIORITY entries first (then registration
-    order) — the order ``__spark_entry__.queries()`` exposes."""
-    out = {n: QUERIES[n] for n in DRIVER_PRIORITY if n in QUERIES}
-    out.update((n, fn) for n, fn in QUERIES.items() if n not in out)
-    return out
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[SparkQuery], SparkQuery]:
     """Register a query under ``name`` with an optional DuckDB oracle."""

@@ -119,20 +119,15 @@ def loop_materialization_conf(spark: SparkSession):
     jobs with a driver re-optimization between each — the right trade
     for one big query, pure overhead for a loop that materializes a
     tiny state frame 3-10 times per call whose join strategies are
-    already pinned by explicit broadcast hints (measured r13 at
-    sf0.1/local[32]: copurchase_pagerank 35 jobs → 13, the
-    driver-side planning gap was ~1.6 s of a 4.8 s query). Only the
-    loop-internal jobs are affected: the conf is restored before the
-    operator returns, so the RETURNED frame still plans and runs
-    under the session's AQE setting, as does every non-loop query.
+    already pinned by explicit broadcast hints (OPTIMIZATION_r13.md
+    §3). Only the loop-internal jobs are affected: the conf is
+    restored before the operator returns, so the RETURNED frame still
+    plans and runs under the session's AQE setting, as does every
+    non-loop query.
 
-    Set $SPARK_GRAFT_LOOP_AQE=1 to keep AQE on inside loops — the
-    right call when per-round state is fact-sized and skewed (AQE
-    skew-split is the only thing lost; broadcasts are explicit).
-
-    Scope/threading contract (ADVICE r13): the conf is SESSION-global
-    runtime state, so this manager assumes the engine's single-
-    threaded driver model — a concurrent query submitted on another
+    Scope/threading contract: the conf is SESSION-global runtime
+    state, so this manager assumes the engine's single-threaded
+    driver model — a concurrent query submitted on another
     thread of the same session while a loop round materializes would
     plan without AQE. A reentrancy counter makes NESTED/interleaved
     loop scopes on one thread safe (only the outermost scope captures
@@ -141,9 +136,6 @@ def loop_materialization_conf(spark: SparkSession):
     need a cloned session (spark.newSession()) per loop, which the
     engine avoids because cloned sessions don't share runtime conf
     updates from the driver harness."""
-    if os.environ.get("SPARK_GRAFT_LOOP_AQE") == "1":
-        yield
-        return
     global _LOOP_CONF_DEPTH
     if _LOOP_CONF_DEPTH > 0:
         _LOOP_CONF_DEPTH += 1

@@ -110,7 +110,6 @@ def test_loop_conf_scope_survives_failing_set_on_entry(spark, monkeypatch):
     inner scope) nor change the session's AQE value."""
     from flight_data_pipeline_spark import session
 
-    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
     prior = spark.conf.get("spark.sql.adaptive.enabled")
     state = _failing_conf_set(spark, monkeypatch, "false")
     with pytest.raises(RuntimeError, match="conf.set failed"):
@@ -132,7 +131,6 @@ def test_loop_conf_scope_survives_failing_set_on_restore(spark,
     restores the session's value itself."""
     from flight_data_pipeline_spark import session
 
-    monkeypatch.delenv("SPARK_GRAFT_LOOP_AQE", raising=False)
     prior = spark.conf.get("spark.sql.adaptive.enabled")
     assert prior != "false"
     state = _failing_conf_set(spark, monkeypatch, prior)

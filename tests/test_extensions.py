@@ -171,21 +171,23 @@ class TestBitsetMasks:
 
 class TestConnectedComponents:
     def test_chain_and_disjoint_clusters(self, spark):
-        """A diameter-6 chain plus a disjoint triangle: labels must
-        collapse to each component's min node id within max_iter."""
+        """A diameter-6 chain plus a disjoint triangle and star: labels
+        must collapse to each component's min node id within max_iter."""
         from flight_data_pipeline_spark.operators.dedup import connected_components
 
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),
-             (10, 11), (11, 12), (10, 12)],
+             (10, 11), (11, 12), (10, 12), (20, 25), (20, 24), (20, 23)],
             "src long, dst long",
         )
         got = {r.v: r.label
                for r in connected_components(edges, max_iter=8).collect()}
         assert {v: l for v, l in got.items() if v < 10} == {
             i: 1 for i in range(1, 8)}
-        assert {v: l for v, l in got.items() if v >= 10} == {
+        assert {v: l for v, l in got.items() if 10 <= v < 20} == {
             10: 10, 11: 10, 12: 10}
+        assert {v: l for v, l in got.items() if v >= 20} == {
+            20: 20, 23: 20, 24: 20, 25: 20}
 
     def test_early_stop_still_exact_with_generous_cap(self, spark):
         """max_iter far above the diameter must not change the result
@@ -197,24 +199,6 @@ class TestConnectedComponents:
         got = {r.v: r.label
                for r in connected_components(edges, max_iter=100).collect()}
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-    def test_broadcast_state_equivalence(self, spark):
-        """broadcast_state only pins join strategies inside the rounds
-        (r13 optimization); both settings must label identically —
-        chain, triangle, and a star that exercises the pointer jump."""
-        from flight_data_pipeline_spark.operators.dedup import connected_components
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),
-             (10, 11), (11, 12), (10, 12), (20, 25), (20, 24), (20, 23)],
-            "src long, dst long",
-        )
-        bc = {r.v: r.label for r in connected_components(
-            edges, max_iter=8, broadcast_state=True).collect()}
-        plain = {r.v: r.label for r in connected_components(
-            edges, max_iter=8, broadcast_state=False).collect()}
-        assert bc == plain
-        assert bc[25] == 20 and bc[7] == 1 and bc[12] == 10
 
     def test_cap_hit_logs_warning(self, spark, caplog):
         """A component whose diameter exceeds max_iter must WARN about

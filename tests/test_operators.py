@@ -743,6 +743,20 @@ class TestPageRank:
         got = {r.v: r.rank for r in pagerank(df, max_iter=50).collect()}
         assert abs(got["x"] - 0.5) < 1e-9 and abs(got["y"] - 0.5) < 1e-9
 
+    def test_cap_hit_logs_warning(self, spark, caplog):
+        """A chain still moving after max_iter rounds must WARN instead
+        of returning the unconverged ranks silently."""
+        import logging
+
+        from flight_data_pipeline_spark.operators.graph import pagerank
+
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, 9)], "src long, dst long")
+        with caplog.at_level(logging.WARNING,
+                             logger="flight_data_pipeline_spark.operators.graph"):
+            pagerank(chain, max_iter=1).collect()
+        assert any("still moving" in r.message for r in caplog.records)
+
 
 class TestPagerankInteger:
     def test_exact_serial_replay(self, spark):
@@ -909,11 +923,10 @@ def _random_multigraph(seed):
 
 
 class TestLabelPropagationDstLayout:
-    """Pins for the dst-partitioned edge layout: with broadcast_state
-    the edge list is checkpointed hash-partitioned on dst and each
-    round's vote count and argmax reuse that layout instead of
-    shuffling. Both state paths must equal the plain-Python LPA on the
-    deduplicated edge list.
+    """Pins for the dst-partitioned edge layout: the edge list is
+    checkpointed hash-partitioned on dst and each round's vote count
+    and argmax reuse that layout instead of shuffling. The result must
+    equal the plain-Python LPA on the deduplicated edge list.
     Every test runs at 8 shuffle partitions, twice the session's 4
     cores, so the layout spans more partitions than tasks run at
     once (other get_spark callers may have reset the session value)."""
@@ -925,9 +938,8 @@ class TestLabelPropagationDstLayout:
         yield
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
-    @pytest.mark.parametrize("broadcast_state", [True, False])
     @pytest.mark.parametrize("seed", [7, 11, 23])
-    def test_matches_python_reference(self, spark, seed, broadcast_state):
+    def test_matches_python_reference(self, spark, seed):
         """The operator counts each distinct edge once, so it must equal
         the reference run on the deduplicated edge list; on these seeds
         the repeated edges change the one-vote-per-row answer, so the
@@ -939,38 +951,35 @@ class TestLabelPropagationDstLayout:
         und = _random_multigraph(seed)
         edges = spark.createDataFrame(und, "src long, dst long")
         got = {r.v: r.label
-               for r in label_propagation_integer(
-                   edges, iters=3,
-                   broadcast_state=broadcast_state).collect()}
+               for r in label_propagation_integer(edges, iters=3).collect()}
         want = _lpa_reference(list(dict.fromkeys(und)), 3)
         assert want != _lpa_reference(und, 3)
         assert got == want
 
     def test_round_plan_has_no_shuffle_exchange(self, spark, tmp_path,
                                                 monkeypatch):
-        """The round-1 plan of the default path carries only broadcast
-        exchanges, the in-layout edge dedup included; the
-        broadcast_state=False path still shuffles the votes, which
-        shows the check can see an Exchange at all."""
+        """The round-1 plan carries only broadcast exchanges, the
+        in-layout edge dedup included. pagerank_integer's round-1 plan,
+        dumped into the same directory, shuffles its dst-keyed
+        aggregate, which shows the check can see an Exchange at all."""
         import re
 
         from flight_data_pipeline_spark.operators.graph import (
             label_propagation_integer,
+            pagerank_integer,
         )
 
         shuffle = re.compile(r"(?<!Broadcast)Exchange\b")
         edges = spark.createDataFrame(_random_multigraph(3),
                                       "src long, dst long")
-        plans = {}
-        for bc in (True, False):
-            d = tmp_path / str(bc)
-            monkeypatch.setenv("SPARK_GRAFT_LOOP_PLAN_DIR", str(d))
-            label_propagation_integer(edges, iters=1,
-                                      broadcast_state=bc).collect()
-            plans[bc] = (d / "label_propagation_round1.txt").read_text()
-        assert "BroadcastExchange" in plans[True]
-        assert not shuffle.search(plans[True]), plans[True]
-        assert shuffle.search(plans[False])
+        monkeypatch.setenv("SPARK_GRAFT_LOOP_PLAN_DIR", str(tmp_path))
+        label_propagation_integer(edges, iters=1).collect()
+        pagerank_integer(edges, iters=1).collect()
+        lpa = (tmp_path / "label_propagation_round1.txt").read_text()
+        pr = (tmp_path / "pagerank_integer_round1.txt").read_text()
+        assert "BroadcastExchange" in lpa
+        assert not shuffle.search(lpa), lpa
+        assert shuffle.search(pr), pr
 
 
 class TestMinPlusShortestPaths:
@@ -1081,25 +1090,6 @@ class TestIterativeRoundRestructureR14:
                    edges.localCheckpoint(), source, iters=3,
                    edges_prematerialized=True).collect()}
         assert got == want
-
-    def test_pagerank_integer_shuffle_state_matches_broadcast(
-            self, spark):
-        """broadcast_state=False (the fact-sized-state fallback) goes
-        through the union-with-carrier aggregate too — both paths
-        must produce the same exact integers."""
-        from flight_data_pipeline_spark.operators.graph import (
-            pagerank_integer,
-        )
-
-        edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (4, 3)]
-        df = spark.createDataFrame(edges, "src long, dst long")
-        bc = {r.v: r.rank for r in pagerank_integer(df, iters=3)
-              .collect()}
-        sh = {r.v: r.rank
-              for r in pagerank_integer(df, iters=3,
-                                        broadcast_state=False)
-              .collect()}
-        assert bc == sh
 
 
 class TestSimhash64Defaults:

@@ -178,11 +178,10 @@ def connected_components(edges: DataFrame, src: str = "src",
     a fixed point of min-propagation, i.e. the true components — so
     converged inputs never pay the full ``max_iter`` rounds (dense
     near-dup clusters settle in 1-2, chains of diameter D in
-    ~log₂ D). The change flag is computed inside the round's
-    checkpoint job (the previous label rides the hop aggregate as a
-    self-marker min; no join against the previous state), so the
-    convergence probe is an ``isEmpty()`` filter over
-    already-materialized rows — loop control, not an extra join job.
+    ~log₂ D). The test is the label SUM, observed inside each round's
+    checkpoint job (no probe job, no flag column): every label is
+    ≤ its node id and a round never raises a label, over a fixed node
+    set, so the sum is unchanged exactly when no label changed.
     If ``max_iter`` rounds pass with labels still moving (component
     diameter ≳ 2^max_iter), the default is a logged warning + partial
     labels (clusters may be split; raise ``max_iter``);
@@ -200,6 +199,13 @@ def connected_components(edges: DataFrame, src: str = "src",
     algorithm, not a data collect."""
     import logging
 
+    from flight_data_pipeline_spark.session import (
+        checkpoint_observed,
+        dump_loop_plan,
+    )
+
+    # exact: a decimal(38,0) sum cannot overflow on BIGINT node ids
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     # checkpoint the EDGE list (half the rows of its symmetrized
     # form); sym is then a lazy union of two projections of already-
     # materialized data — each round re-derives it for free instead
@@ -211,68 +217,48 @@ def connected_components(edges: DataFrame, src: str = "src",
     # a propagation round would compute from identity labels, folded
     # into the (unavoidable) vertex-derivation shuffle: saves one full
     # round every call
-    labels = (sym.groupBy("s")
-              .agg(F.least(F.min("d"), F.col("s")).alias("label"))
-              .select(F.col("s").alias("v"), "label")
-              .localCheckpoint())
-    converged = False
-    # Both per-round state joins broadcast the label vector (one row
-    # per node of the cluster graph at every in-repo caller), so the
-    # symmetrized edge side is never shuffled inside the loop; a
-    # checkpointed frame has no catalog stats, so without the hint
+    labels, total = checkpoint_observed(
+        sym.groupBy("s")
+        .agg(F.least(F.min("d"), F.col("s")).alias("label"))
+        .select(F.col("s").alias("v"), "label"),
+        label_sum)
+    # Both per-round joins broadcast their state side (labels, hop:
+    # one row per node of the cluster graph at every in-repo caller),
+    # so the symmetrized edges never shuffle inside the loop; a
+    # checkpointed frame has no catalog stats, so without the hints
     # Spark would sort-merge-join the edge side every round. Rounds
-    # deliberately KEEP AQE (unlike pagerank_integer): the round count
-    # is data-dependent and the isEmpty probe gains from AQE's
-    # coalescing (OPTIMIZATION_r13.md §2, OPTIMIZATION_r14.md §3).
-    from flight_data_pipeline_spark.session import dump_loop_plan
-
-    label_t = labels.schema["label"].dataType
+    # KEEP AQE (unlike pagerank_integer): AQE-off measured slower
+    # (OPTIMIZATION_r13.md §2, OPTIMIZATION_r14.md §3).
     for it in range(max_iter):
-        # the previous label rides the hop aggregate as min over a
-        # SELF-MARKER column: the labels branch contributes exactly
-        # one row per v with __self = its current label, the message
-        # branch contributes NULLs, so min(__self) IS the previous
-        # label — the change flag needs no join against the previous
-        # state
         msgs = (
             sym.join(F.broadcast(labels.withColumnRenamed("v", "__d")),
                      F.col("d") == F.col("__d"))
-            .select(F.col("s").alias("v"), F.col("label"),
-                    F.lit(None).cast(label_t).alias("__self"))
+            .select(F.col("s").alias("v"), "label")
         )
-        hop = (labels.select("v", "label",
-                             F.col("label").alias("__self"))
-               .unionByName(msgs)
-               .groupBy("v").agg(F.min("label").alias("label"),
-                                 F.min("__self").alias("__prev")))
+        # hop feeds both sides of the jump: the lazy checkpoint
+        # computes it once (in the broadcast build) and the probe side
+        # reads it from executor storage
+        hop = (labels.unionByName(msgs)
+               .groupBy("v").agg(F.min("label").alias("label"))
+               .localCheckpoint(eager=False))
         # pointer jump: label ← label's own label. A label is always a
         # node id inside the component with hop[u] ≤ u, so the jump is
         # sound (still in-component, still monotone) and compounds the
         # hop — reach roughly doubles per round, log₂(diameter) rounds
         # instead of diameter (the GraphFrames/large-star discipline).
-        # Folded into the same checkpoint job as the hop aggregate.
         jumped = (
             hop.join(F.broadcast(hop.select(F.col("v").alias("__u"),
                                             F.col("label").alias("__ul"))),
                      F.col("label") == F.col("__u"))
-            .select("v", F.col("__ul").alias("label"), "__prev")
-        )
-        # the change flag rides the materialized frame so the
-        # convergence probe is a filter over checkpointed rows, not a
-        # join job of its own
-        new_labels = (
-            jumped
-            .withColumn("__changed", F.col("label") != F.col("__prev"))
-            .select("v", "label", "__changed")
+            .select("v", F.col("__ul").alias("label"))
         )
         if it == 0:
-            dump_loop_plan(new_labels, "connected_components_round1")
-        new_labels = new_labels.localCheckpoint()
-        labels = new_labels.select("v", "label")
-        converged = new_labels.where(F.col("__changed")).isEmpty()
-        if converged:
+            dump_loop_plan(jumped, "connected_components_round1")
+        labels, new_total = checkpoint_observed(jumped, label_sum)
+        if new_total == total:
             break
-    if not converged:
+        total = new_total
+    else:
         msg = (f"connected_components: labels still changing after "
                f"{max_iter} rounds — components wider than max_iter "
                f"hops are split; raise max_iter")

@@ -8,12 +8,12 @@ link-quality scoring in web-corpus curation pipelines.
 
 Same execution discipline as connected_components: each round is a
 join + aggregate with an eager localCheckpoint truncating the
-otherwise-doubling lineage, and the convergence probe is a filter
-over already-materialized rows (isEmpty loop control, never a data
-collect). Recompute-after-lost-partition is safe: every round's
-content is a deterministic function of the checkpointed previous
-round (float sums may differ in final ulps across recomputes, which
-is why the consumers round before ranking).
+otherwise-doubling lineage, and the convergence signal is an
+aggregate observed inside that checkpoint's own job (no probe job,
+never a data collect). Recompute-after-lost-partition is safe: every
+round's content is a deterministic function of the checkpointed
+previous round (float sums may differ in final ulps across
+recomputes, which is why the consumers round before ranking).
 """
 
 from __future__ import annotations
@@ -85,7 +85,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             .select("v", (F.col("rank") / F.col("__m")).alias("rank"))
             .localCheckpoint()
         )
-    converged = False
+    from flight_data_pipeline_spark.session import checkpoint_observed
+
     for _ in range(max_iter):
         # mass leaving via edges: rank_s * w / out_weight_s
         contrib = (
@@ -102,8 +103,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                        "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
         )
-        new_ranks = (
-            ranks.select("v", F.col("rank").alias("__prev"))
+        step = (
+            ranks.select("v", F.col("rank").alias("__old"))
             .join(contrib, "v", "left")
             .crossJoin(F.broadcast(dangling))
             .crossJoin(F.broadcast(n1))
@@ -113,18 +114,15 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                  + F.lit(damping)
                  * (F.coalesce(F.col("__c"), F.lit(0.0))
                     + F.col("__dm") / F.col("__n"))).alias("rank"),
-                "__prev",
+                "__old",
             )
-            .withColumn("__moved",
-                        F.abs(F.col("rank") - F.col("__prev")) > tol)
-            .select("v", "rank", "__moved")
-            .localCheckpoint()
         )
-        converged = new_ranks.where(F.col("__moved")).isEmpty()
-        ranks = new_ranks.select("v", "rank")
-        if converged:
+        ranks, moved = checkpoint_observed(
+            step, F.count_if(F.abs(F.col("rank") - F.col("__old")) > tol),
+            "v", "rank")
+        if moved == 0:
             break
-    if not converged:
+    else:
         logging.getLogger(__name__).warning(
             "pagerank: ranks still moving by more than tol=%g after "
             "%d rounds — raise max_iter", tol, max_iter)

@@ -380,26 +380,23 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _set_group_clusters(spark: SparkSession, sf_dir: str,
-                        docs: DataFrame | None = None,
                         masks: DataFrame | None = None):
     """Shared plumbing for the clusters/survivors/curation twins:
     documents → distinct (source, mask) set-groups (node = min doc_id,
     n = multiplicity) and the CC labels of the group graph under
     bitset-Jaccard ≥ JACCARD_THRESHOLD edges. Returns (gs, labels).
-    Pass ``docs`` to run on a staged subset (corpus_curation_stats
-    dedups the quality-filtered, exact-deduped corpus), or ``masks``
-    directly when the caller already built the bitset frame (spares a
-    second tokenize+dictionary pass)."""
+    Pass ``masks`` when the caller already built the bitset frame over
+    a staged subset (corpus_curation_stats dedups the quality-filtered,
+    exact-deduped corpus; spares a second tokenize+dictionary pass)."""
     from flight_data_pipeline_spark.operators.dedup import (
         dictionary_bitset_masks,
         set_group_cluster_labels,
     )
 
     if masks is None:
-        if docs is None:
-            docs = load_table(spark, "documents", sf_dir)
         masks = dictionary_bitset_masks(
-            docs, id_col="doc_id", block_col="source", text_col="text")
+            load_table(spark, "documents", sf_dir),
+            id_col="doc_id", block_col="source", text_col="text")
     return set_group_cluster_labels(
         masks, id_col="doc_id", block_col="source",
         threshold=JACCARD_THRESHOLD)

@@ -18,7 +18,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 # Settings that must be present at session build time.
 _BUILD_CONF: dict[str, str] = {
@@ -111,9 +111,9 @@ _LOOP_CONF_DEPTH = 0
 @contextmanager
 def loop_materialization_conf(spark: SparkSession):
     """Scope AQE OFF around the EAGER materializations inside
-    iterative loops (the per-round localCheckpoint / isEmpty jobs of
-    connected_components, pagerank_integer, label propagation,
-    Bellman-Ford).
+    iterative loops (the per-round localCheckpoint jobs of
+    pagerank_integer and label propagation, plus the latter's edge
+    layout checkpoint).
 
     Under AQE every materialization runs stage-by-stage as separate
     jobs with a driver re-optimization between each — the right trade
@@ -180,6 +180,19 @@ def dump_loop_plan(frame, name: str) -> None:
         .ExplainMode.fromString("formatted"))
     with open(path, "w") as f:
         f.write(plan.strip() + "\n")
+
+
+def checkpoint_observed(frame, metric, *cols):
+    """Eager localCheckpoint of ``frame`` (projected to ``cols`` when
+    given) → (checkpointed frame, value of the aggregate ``metric``
+    over the frame's rows). The metric rides the checkpoint's own job
+    as a ``DataFrame.observe`` — the loop operators' convergence
+    signal costs no probe job of its own. ``metric`` may read columns
+    that ``cols`` drops."""
+    obs = Observation()
+    seen = frame.observe(obs, metric.alias("m"))
+    out = (seen.select(*cols) if cols else seen).localCheckpoint()
+    return out, obs.get["m"]
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:

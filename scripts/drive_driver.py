@@ -9,7 +9,7 @@ rolling_median_daily_value's even-frame interpolated half-cent under
 ROUND(.,2)). Set DRIVE_ONLY=a,b to run a subset."""
 import os
 import sys
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 import duckdb, pandas as pd, math
 

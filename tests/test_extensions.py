@@ -169,6 +169,66 @@ class TestBitsetMasks:
             dictionary_bitset_masks(None, "id", "blk", "text", max_vocab=128)
 
 
+def _cc_graph(seed):
+    """Seeded undirected graph: one long chain, a random sparse rest,
+    self-loops, shuffled ids (ids ≥ 10^15 on odd seeds) and random
+    edge orientation."""
+    import random
+
+    rng = random.Random(seed)
+    base = 10**15 if seed % 2 else 0
+    ids = [base + i for i in rng.sample(range(10**6), 40)]
+    chain = ids[:rng.randint(4, 24)]
+    rest = ids[len(chain):]
+    edges = list(zip(chain, chain[1:]))
+    edges += [(rng.choice(rest), rng.choice(rest)) for _ in range(12)]
+    edges += [(v, v) for v in rng.sample(ids, 4)]
+    edges = [(a, b) if rng.random() < 0.5 else (b, a) for a, b in edges]
+    rng.shuffle(edges)
+    return edges
+
+
+def _union_find(edges):
+    """{node: min node id of its component}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _cc_rounds(edges):
+    """Rounds connected_components runs before a round changes no
+    label: seed with the closed-neighbourhood min, then per round the
+    closed-neighbourhood min followed by the pointer jump."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    label = {v: min(ns | {v}) for v, ns in nbrs.items()}
+    rounds = 0
+    while True:
+        rounds += 1
+        hop = {v: min([label[v]] + [label[u] for u in ns])
+               for v, ns in nbrs.items()}
+        new = {v: hop[hop[v]] for v in hop}
+        if new == label:
+            return rounds
+        label = new
+
+
+CC_SEEDS = range(5)
+
+
 class TestConnectedComponents:
     def test_chain_and_disjoint_clusters(self, spark):
         """A diameter-6 chain plus a disjoint triangle and star: labels
@@ -213,6 +273,60 @@ class TestConnectedComponents:
                              logger="flight_data_pipeline_spark.operators.dedup"):
             connected_components(chain, max_iter=2).collect()
         assert any("still changing" in r.message for r in caplog.records)
+
+    @pytest.mark.parametrize("seed", [*CC_SEEDS, "empty"])
+    def test_labels_match_union_find(self, spark, seed):
+        """Long chains, shuffled and ≥ 10^15 ids, self-loops and the
+        empty graph: labels equal a plain-Python union-find."""
+        from flight_data_pipeline_spark.operators.dedup import connected_components
+
+        und = [] if seed == "empty" else _cc_graph(seed)
+        edges = spark.createDataFrame(und, "src long, dst long")
+        got = {r.v: r.label for r in connected_components(
+            edges, max_iter=12, strict=True).collect()}
+        assert got == _union_find(und)
+
+    def test_cap_warning_fires_exactly_when_rounds_exceed_cap(
+            self, spark, caplog):
+        """The observed label-sum stop equals a per-label change test:
+        for every cap 1-6 the warning fires exactly when the
+        plain-Python replay of the round needs more rounds than the
+        cap. The graphs need 2-7 rounds, so both sides are hit."""
+        import logging
+
+        from flight_data_pipeline_spark.operators.dedup import connected_components
+
+        need = {seed: _cc_rounds(_cc_graph(seed)) for seed in CC_SEEDS}
+        assert min(need.values()) <= 2 and max(need.values()) > 6, need
+        for seed in CC_SEEDS:
+            edges = spark.createDataFrame(_cc_graph(seed),
+                                          "src long, dst long")
+            for cap in range(1, 7):
+                caplog.clear()
+                with caplog.at_level(
+                        logging.WARNING,
+                        logger="flight_data_pipeline_spark.operators.dedup"):
+                    connected_components(edges, max_iter=cap)
+                warned = any("still changing" in r.message
+                             for r in caplog.records)
+                assert warned == (need[seed] > cap), (seed, cap, need)
+
+    def test_round_plan_has_no_shuffle_exchange(self, spark, tmp_path,
+                                                monkeypatch):
+        """hop is materialized once per round, so the round-1 plan (the
+        pointer jump over hop on both sides) carries only a broadcast
+        exchange: a second hop aggregate would show as shuffle
+        Exchanges."""
+        import re
+
+        from flight_data_pipeline_spark.operators.dedup import connected_components
+
+        edges = spark.createDataFrame(_cc_graph(0), "src long, dst long")
+        monkeypatch.setenv("SPARK_GRAFT_LOOP_PLAN_DIR", str(tmp_path))
+        connected_components(edges, max_iter=1)
+        plan = (tmp_path / "connected_components_round1.txt").read_text()
+        assert "BroadcastExchange" in plan
+        assert not re.search(r"(?<!Broadcast)Exchange\b", plan), plan
 
 
 class TestAnnRecall:

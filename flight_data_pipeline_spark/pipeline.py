@@ -32,12 +32,14 @@ from flight_data_pipeline_spark.operators.quality import (
     valid_intensity,
     valid_timestamp,
 )
-from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
+from flight_data_pipeline_spark.sinks import (
+    TELEMETRY_SCHEMA,
+    AuditSink,
+    TelemetrySink,
+)
 from flight_data_pipeline_spark.sources.rest_json import (
     FUELS,
-    parse_generation_mix,
-    parse_intensity,
-    payload_df,
+    parse_telemetry,
     retry_with_backoff,
 )
 
@@ -61,35 +63,23 @@ def telemetry_checks() -> dict[str, Column]:
     return checks
 
 
-TELEMETRY_COLS = ("timestamp", "overall_intensity",
-                  *[f"fuel_{f}_perc" for f in FUELS])
+TELEMETRY_COLS = tuple(TELEMETRY_SCHEMA.fieldNames())
 
 
 def _telemetry_batch_flagged(spark: SparkSession, intensity_payload: str,
                              mix_payload: str,
                              now: Column | None = None) -> DataFrame:
-    """Parse both payloads and zip them into telemetry rows — the
-    implicit J2 join (etl_job.py:199-200,249-259): the reference pairs
-    the two single-record fetches of the same half-hour by position.
-    For single-payload runs this is a 1×1 cross join (trivially
-    broadcast); multi-window batches would join on window_start.
+    """Parse both payloads as one 2-column row — the implicit J2 zip
+    (etl_job.py:199-200,249-259): the reference pairs the two
+    single-record fetches of the same half-hour by position.
 
-    Carries the per-source ``record_found`` flags as ``int_found`` /
-    ``mix_found`` instead of probing them eagerly, so the caller can
-    fold missing-payload detection into whatever aggregate it already
-    runs (run_pipeline does validation + both probes in ONE job)."""
-    intensity = parse_intensity(
-        payload_df(spark, [intensity_payload]), now=now
-    ).withColumnRenamed("record_found", "int_found")
-    mix = parse_generation_mix(
-        payload_df(spark, [mix_payload])
-    ).withColumnRenamed("record_found", "mix_found")
-    return intensity.crossJoin(mix).select(
-        F.col("window_start").alias("timestamp"),
-        F.col("overall_intensity"),
-        *[F.col(f"fuel_{f}_perc") for f in FUELS],
-        "int_found", "mix_found",
-    )
+    Carries the per-source ``int_found`` / ``mix_found`` flags instead
+    of probing them eagerly, so the caller can fold missing-payload
+    detection into whatever aggregate it already runs (run_pipeline
+    does validation + both probes in ONE job)."""
+    return parse_telemetry(spark.createDataFrame(
+        [(intensity_payload, mix_payload)],
+        "int_payload string, mix_payload string"), now=now)
 
 
 def _raise_for_missing(missing_intensity: bool, missing_mix: bool) -> None:
@@ -188,35 +178,24 @@ def build_telemetry_batch_multi(
         spark: SparkSession,
         pairs: list[tuple[str, str, str]]) -> DataFrame:
     """Backfill form of the batch builder: N window-aligned payload
-    pairs — the J2 zip (etl_job.py:199-200) as a real equi-join once
-    more than one window is in flight.
+    pairs, the J2 zip (etl_job.py:199-200) once more than one window
+    is in flight.
 
-    ``pairs`` is [(window_key, intensity_payload, mix_payload)]; the
-    injected window key is the join key, so a missing/mismatched side
-    drops that window instead of mis-pairing a cross product. Records
-    whose payload carried no data are dead-lettered (dropped), the
+    ``pairs`` is [(window_key, intensity_payload, mix_payload)]. Each
+    pair is one row parsed by ``parse_telemetry``, so the two payloads
+    stay paired by row whatever the keys (two pairs that share a
+    ``window_key`` give two rows, not a cross product). Records whose
+    payload carried no data are dead-lettered (dropped), the
     multi-window analogue of the single-run raise — callers that need
-    the count difference compare input vs output windows.
-
-    Scale shape: both parses are map-side; the equi-join keys on the
-    window id (tiny keyspace ⇒ broadcast-able side if one source lags).
+    the count difference compare input vs output windows. An
+    unparseable ``from`` gives a NULL timestamp: a backfill has no
+    "now" to default to. The whole build is one map-side projection:
+    no join, no shuffle.
     """
     base = spark.createDataFrame(
         pairs, "window_key string, int_payload string, mix_payload string")
-    intensity = parse_intensity(
-        base.select("window_key", F.col("int_payload").alias("payload")),
-        now=F.lit(None).cast("timestamp"), keep=("window_key",),
-    ).withColumnRenamed("record_found", "int_found")
-    mix = parse_generation_mix(
-        base.select("window_key", F.col("mix_payload").alias("payload")),
-        keep=("window_key",),
-    ).withColumnRenamed("record_found", "mix_found")
     return (
-        intensity.join(mix, "window_key")
+        parse_telemetry(base, now=F.lit(None).cast("timestamp"))
         .where(F.col("int_found") & F.col("mix_found"))
-        .select(
-            F.col("window_start").alias("timestamp"),
-            F.col("overall_intensity"),
-            *[F.col(f"fuel_{f}_perc") for f in FUELS],
-        )
+        .select(*TELEMETRY_COLS)
     )

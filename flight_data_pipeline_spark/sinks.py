@@ -77,9 +77,11 @@ class JdbcSink:
     Executed in-container against embedded Derby (the JDBC driver
     Spark ships in its own jars/ for the Hive metastore) —
     tests/test_pipeline.py::TestJdbcSinkEmbeddedDerby appends the
-    telemetry + audit two-table shape and reads both back. The
-    parquet sinks above remain the engine's native path; the
-    pipeline accepts either through the same append/read interface.
+    telemetry + audit two-table shape and reads both back. It shares
+    ``ParquetSink``'s append/read interface, but the parquet sinks
+    remain the engine's only pipeline path: ``run_pipeline`` and the
+    streaming writers take sink paths and write parquet, so a JDBC
+    destination is written by calling ``append`` directly.
     ``properties`` passes driver options (user, password, driver)."""
 
     def __init__(self, spark: SparkSession, url: str, table: str,

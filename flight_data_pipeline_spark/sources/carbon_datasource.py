@@ -29,6 +29,12 @@ from datetime import datetime
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 import pyspark.sql.types as T
 
+from flight_data_pipeline_spark.sources.rest_json import (
+    FUELS,
+    fetch_json,
+    retry_with_backoff,
+)
+
 SCHEMA = T.StructType([
     T.StructField("window_start", T.TimestampType()),
     T.StructField("overall_intensity", T.DoubleType()),
@@ -39,7 +45,6 @@ SCHEMA = T.StructType([
 ])
 
 API_BASE = "https://api.carbonintensity.org.uk"
-FUELS = ("gas", "nuclear", "wind", "solar")
 
 
 def _parse_window_payload(payload: dict):
@@ -92,10 +97,6 @@ class CarbonIntensityReader(DataSourceReader):
         if partition.payload_json is not None:
             payload = json.loads(partition.payload_json)
         else:  # pragma: no cover - network path, exercised in prod only
-            from flight_data_pipeline_spark.sources.rest_json import (
-                fetch_json,
-                retry_with_backoff,
-            )
             suffix = "" if partition.window == "now" else f"/{partition.window}"
             payload = {
                 "intensity": json.loads(

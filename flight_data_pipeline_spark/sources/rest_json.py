@@ -170,6 +170,29 @@ def parse_generation_mix(df: DataFrame, json_col: str = "payload",
     )
 
 
+def parse_telemetry(df: DataFrame, now: Column | None = None,
+                    keep: tuple[str, ...] = ()) -> DataFrame:
+    """One row of both payloads (``int_payload``, ``mix_payload``) →
+    (keep…, timestamp, overall_intensity, fuel_*_perc, int_found,
+    mix_found): ``parse_intensity`` chained into
+    ``parse_generation_mix`` on the same frame, so every ingest path
+    (single run, backfill, stream, dead-letter replay) pairs the two
+    payloads by row — no join — and shares one parse. ``now`` is
+    ``parse_intensity``'s unparseable-``from`` default; a NULL
+    timestamp literal keeps such rows NULL. The ``*_found`` flags are
+    each parser's ``record_found``."""
+    ints = parse_intensity(df, "int_payload", now=now,
+                           keep=(*keep, "mix_payload"))
+    ints = ints.withColumnsRenamed(
+        {"window_start": "timestamp", "record_found": "int_found"})
+    mix = parse_generation_mix(
+        ints, "mix_payload",
+        keep=(*keep, "timestamp", "overall_intensity", "int_found"))
+    return mix.select(*keep, "timestamp", "overall_intensity",
+                      *[f"fuel_{f}_perc" for f in FUELS], "int_found",
+                      F.col("record_found").alias("mix_found"))
+
+
 def payload_df(spark: SparkSession, payloads: list[str]) -> DataFrame:
     """Wrap raw JSON payload strings as a DataFrame (driver-side
     single-record path; the file-landing path is spark.read.text)."""

@@ -13,8 +13,8 @@ replay) instead of cron + upsert-dedup.
     spark.dataSource.register(CarbonIntensityStreamDataSource)
     raw = (spark.readStream.format("carbon_intensity_stream")
                 .option("url", INTENSITY_URL).load())
-    typed = parse_intensity(raw)          # same parser as batch — the
-                                          # plan is identical either way
+    typed = telemetry_stream(raw)         # same parse_telemetry as
+                                          # batch, plus the hour dedup
 
 Design notes:
 
@@ -23,9 +23,9 @@ Design notes:
   and advances the offset by 1. Trigger interval = the reference's
   cron cadence; ``availableNow`` = the reference's single-shot run.
 - Rows are ``(poll, payload)`` — the raw JSON string plus its offset.
-  Parsing stays declarative in parse_intensity/parse_generation_mix
-  exactly as on the batch path; the fetched bytes never get flattened
-  in driver Python.
+  Parsing stays declarative in rest_json.parse_telemetry exactly as
+  on the batch path; the fetched bytes never get flattened in driver
+  Python.
 - Replay: payloads fetched this process are kept in an offset-keyed
   cache until ``commit()`` evicts them, so ``readBetweenOffsets``
   (Spark's recovery path for an uncommitted batch) returns the same

@@ -30,8 +30,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from flight_data_pipeline_spark.operators.quality import quality_gate
 from flight_data_pipeline_spark.pipeline import telemetry_checks
-from flight_data_pipeline_spark.sinks import AuditSink
-from flight_data_pipeline_spark.sources.rest_json import FUELS
+from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
+from flight_data_pipeline_spark.sources.rest_json import parse_telemetry
 
 WATERMARK = "2 hours"  # the reference's freshness horizon (etl_job.py:80)
 
@@ -50,47 +50,22 @@ def read_payload_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
 
 
 def _payload_rows(raw: DataFrame, *keep_cols: str) -> DataFrame:
-    """The payload→record projection shared by the live stream and
-    the dead-letter replay (same parse, same drift tolerance):
-    emits (keep_cols…, record_found, timestamp, overall_intensity,
-    fuel_*_perc). Works on streaming AND batch frames — the dedup/
-    watermark stages live in the callers."""
-    from flight_data_pipeline_spark.sources.rest_json import (
-        GENERATION_SCHEMA_DICT,
-        GENERATION_SCHEMA_LIST,
-        INTENSITY_SCHEMA,
-    )
-    from flight_data_pipeline_spark.functions.scalars import (
-        coalesce_falsy,
-        parse_iso8601,
-    )
-
-    int_rec = F.get(
-        F.from_json(F.get_json_object("payload", "$.intensity"),
-                    INTENSITY_SCHEMA)["data"], 0)
-    mix_list = F.get(
-        F.from_json(F.get_json_object("payload", "$.generation"),
-                    GENERATION_SCHEMA_LIST)["data"], 0)["generationmix"]
-    mix_dict = F.from_json(
-        F.get_json_object("payload", "$.generation"),
-        GENERATION_SCHEMA_DICT)["data"]["generationmix"]
-    mix = F.coalesce(mix_list, mix_dict)
-
-    def fuel_perc(fuel: str):
-        matches = F.filter(
-            mix, lambda e: F.lower(F.coalesce(e["fuel"], F.lit(""))) == fuel)
-        return F.coalesce(F.get(matches, 0)["perc"], F.lit(0.0)) \
-                .alias(f"fuel_{fuel}_perc")
-
-    return raw.select(
-        *keep_cols,
-        int_rec.isNotNull().alias("record_found"),
-        parse_iso8601(int_rec["from"]).alias("timestamp"),
-        coalesce_falsy(int_rec["intensity"]["actual"],
-                       int_rec["intensity"]["forecast"])
-        .alias("overall_intensity"),
-        *[fuel_perc(f) for f in FUELS],
-    )
+    """The payload→record projection shared by the live stream, the
+    dead-letter capture and its replay: the combined document's two
+    halves (``$.intensity``, ``$.generation``) go through the batch
+    path's ``parse_telemetry``, so all three share its parse and drift
+    tolerance. Emits (keep_cols…, timestamp, overall_intensity,
+    fuel_*_perc, int_found, mix_found); an unparseable ``from`` is a
+    NULL timestamp (a stream has no single "now"). Works on streaming
+    AND batch frames — the dedup/watermark stages live in the
+    callers."""
+    return parse_telemetry(
+        raw.select(*keep_cols,
+                   F.get_json_object("payload", "$.intensity")
+                   .alias("int_payload"),
+                   F.get_json_object("payload", "$.generation")
+                   .alias("mix_payload")),
+        now=F.lit(None).cast("timestamp"), keep=keep_cols)
 
 
 def telemetry_stream(raw: DataFrame) -> DataFrame:
@@ -102,7 +77,7 @@ def telemetry_stream(raw: DataFrame) -> DataFrame:
     # record here (it never had data) — quarantine_malformed captures
     # such payload FILES for repair + reprocess_dead_letters replay.
     # Validation failures on REAL records still flag-don't-drop below.
-    rows = rows.where(F.col("record_found")).drop("record_found")
+    rows = rows.where(F.col("int_found")).drop("int_found", "mix_found")
     gated = quality_gate(rows, telemetry_checks())
     return (
         gated.withColumn("hour_bucket", F.date_trunc("hour", "timestamp"))
@@ -127,14 +102,12 @@ def stream_telemetry(spark: SparkSession, landing_dir: str,
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        out = batch_df.drop("hour_bucket")
-        keep_cols = ["timestamp", "overall_intensity",
-                     *[f"fuel_{f}_perc" for f in FUELS]]
-        n = out.count()
+        spark = batch_df.sparkSession
+        n = batch_df.count()
         status = "success" if n else "skipped"
         if n:
-            out.select(*keep_cols).write.mode("append").parquet(telemetry_path)
-        AuditSink(batch_df.sparkSession, audit_path).log_run(
+            TelemetrySink(spark, telemetry_path).append(batch_df)
+        AuditSink(spark, audit_path).log_run(
             status, n, int((time.time() - t0) * 1000))
 
     writer = deduped.writeStream.foreachBatch(write_batch) \
@@ -1084,7 +1057,7 @@ def quarantine_malformed(spark: SparkSession, landing_dir: str,
     )
     bad = (
         _payload_rows(raw, "file")
-        .where(~F.col("record_found"))
+        .where(~F.col("int_found"))
         .select("file")
     )
     os.makedirs(dlq_dir, exist_ok=True)
@@ -1103,15 +1076,15 @@ def reprocess_dead_letters(spark: SparkSession, dlq_dir: str,
                            telemetry_path: str, audit_path: str) -> dict:
     """Dead-letter REPLAY: after the payloads are repaired in place
     (or the parser fixed), run the quarantined files through the SAME
-    parse → validate → hour-dedup path as live traffic. Recovered
-    rows append idempotently (hour buckets already present in the
-    sink are skipped, so a double-replay is a no-op); recovered files
-    and sidecars are removed; still-unparseable files stay
-    quarantined. One audit row records the attempt. Returns
-    {"recovered_rows", "recovered_files", "still_dead"}."""
+    parse → validate path as live traffic, then write through
+    ``TelemetrySink.append_dedup`` like a batch run: hours already in
+    the sink are skipped (a double replay is a no-op), repaired files
+    for one hour keep the earliest timestamp, and only the sink's
+    columns are written. Recovered files and sidecars are removed;
+    still-unparseable files stay quarantined. One audit row records
+    the attempt. Returns {"recovered_rows", "recovered_files",
+    "still_dead"}."""
     import os
-
-    from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
 
     files = [f for f in sorted(os.listdir(dlq_dir))
              if not f.endswith(".reason")]
@@ -1123,35 +1096,13 @@ def reprocess_dead_letters(spark: SparkSession, dlq_dir: str,
         .withColumnRenamed("value", "payload")
         .withColumn("file", F.input_file_name())
     )
-    rows = _payload_rows(raw, "file")
-    ok = rows.where(F.col("record_found")).drop("record_found")
-    gated = quality_gate(ok, telemetry_checks())
-    sink = TelemetrySink(spark, telemetry_path)
-    try:
-        existing_hours = sink.read().select(
-            F.date_trunc("hour", "timestamp").alias("__hb")).distinct()
-    except Exception:  # noqa: BLE001 — sink not created yet
-        existing_hours = None
-    fresh = gated.withColumn(
-        "__hb", F.date_trunc("hour", F.col("timestamp")))
-    if existing_hours is not None:
-        fresh = fresh.join(existing_hours, "__hb", "left_anti")
+    ok = _payload_rows(raw, "file").where(F.col("int_found"))
     recovered_files = [
         r.file.removeprefix("file:")
         for r in ok.select("file").distinct().toLocalIterator()
     ]
-    # Count via an in-plan Observation on the append itself — no
-    # driver materialization in the write path (the toPandas round
-    # trip this replaces collected the whole recovered batch onto the
-    # driver just to learn its size). A zero-row append is metadata
-    # only, so writing unconditionally keeps replay idempotent.
-    from pyspark.sql import Observation
-
-    obs = Observation("dlq_replay")
-    out = fresh.drop("__hb", "file").observe(
-        obs, F.count(F.lit(1)).alias("n"))
-    out.write.mode("append").parquet(telemetry_path)
-    n = int(obs.get["n"])
+    n = TelemetrySink(spark, telemetry_path).append_dedup(
+        quality_gate(ok, telemetry_checks()))
     AuditSink(spark, audit_path).log_run(
         "success" if n else "skipped", n, 0)
     for full in recovered_files:

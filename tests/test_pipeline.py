@@ -251,6 +251,103 @@ class TestMultiWindowBatch:
         assert rows[14].overall_intensity == 90.0 and rows[14].fuel_gas_perc == 40.0
         assert rows[15].overall_intensity == 80.0 and rows[15].fuel_gas_perc == 50.0
 
+    def test_shared_window_key_pairs_by_row(self, spark):
+        """Two pairs that carry the same window_key are still two
+        windows: each row keeps its own pair's generation mix, never
+        the other pair's (a join on the key would cross-pair them)."""
+        from flight_data_pipeline_spark.pipeline import build_telemetry_batch_multi
+
+        def pair(h, gas):
+            return ("w", json.dumps({"data": [{
+                        "from": f"2025-12-09T{h:02d}:00Z",
+                        "intensity": {"actual": 90}}]}),
+                    json.dumps({"data": [{"generationmix": [
+                        {"fuel": "gas", "perc": gas}]}]}))
+
+        rows = build_telemetry_batch_multi(
+            spark, [pair(14, 40.0), pair(15, 50.0)]).collect()
+        assert sorted((r.timestamp.hour, r.fuel_gas_perc) for r in rows) \
+            == [(14, 40.0), (15, 50.0)]
+
+
+def _variant(from_="2025-12-09T14:00Z", intensity=None, mix_data=None):
+    intensity = {"actual": 90, "forecast": 95} if intensity is None \
+        else intensity
+    mix_data = [{"generationmix": [
+        {"fuel": "gas", "perc": 45.5}, {"fuel": "nuclear", "perc": 20.0},
+        {"fuel": "wind", "perc": 25.3}, {"fuel": "solar", "perc": 5.2},
+    ]}] if mix_data is None else mix_data
+    return ({"data": [{"from": from_, "intensity": intensity}]},
+            {"data": mix_data})
+
+
+PARSE_VARIANTS = {  # name: (intensity doc, generation doc, expected fields)
+    "list_data": (*_variant(), {"overall_intensity": 90.0,
+                                "fuel_wind_perc": 25.3}),
+    "dict_data": (*_variant(mix_data={"generationmix": [
+        {"fuel": "gas", "perc": 40.0}, {"fuel": "wind", "perc": 30.0}]}),
+        {"fuel_gas_perc": 40.0, "fuel_wind_perc": 30.0}),
+    "actual_zero_uses_forecast": (
+        *_variant(intensity={"actual": 0, "forecast": 95}),
+        {"overall_intensity": 95.0}),
+    "missing_fuel_is_zero": (*_variant(mix_data=[{"generationmix": [
+        {"fuel": "gas", "perc": 45.5}]}]),
+        {"fuel_gas_perc": 45.5, "fuel_nuclear_perc": 0.0,
+         "fuel_wind_perc": 0.0, "fuel_solar_perc": 0.0}),
+    "mixed_case_fuels": (*_variant(mix_data=[{"generationmix": [
+        {"fuel": "GAS", "perc": 41.0}, {"fuel": "Nuclear", "perc": 21.0},
+        {"fuel": "wInD", "perc": 22.0}, {"fuel": "SOLAR", "perc": 3.0}]}]),
+        {"fuel_gas_perc": 41.0, "fuel_nuclear_perc": 21.0,
+         "fuel_wind_perc": 22.0, "fuel_solar_perc": 3.0}),
+    "unparseable_from": (*_variant(from_="garbage"),
+                         {"overall_intensity": 90.0}),
+}
+
+
+class TestSharedParse:
+    """Batch run, backfill and stream all parse through
+    ``rest_json.parse_telemetry``; each variant of payload drift gives
+    the same row on every path. The one pinned difference: an
+    unparseable ``from`` defaults to ``now`` in a batch run and stays
+    NULL in the backfill and the stream (neither has a single now)."""
+
+    NOW = "2025-12-09 16:00:00"
+
+    @pytest.mark.parametrize("name", sorted(PARSE_VARIANTS))
+    def test_batch_backfill_and_stream_rows_equal(self, spark, name):
+        from flight_data_pipeline_spark.pipeline import (
+            TELEMETRY_COLS,
+            build_telemetry_batch_multi,
+        )
+        from flight_data_pipeline_spark.streaming.pipeline_stream import (
+            _payload_rows,
+        )
+
+        int_doc, mix_doc, expect = PARSE_VARIANTS[name]
+        int_p, mix_p = json.dumps(int_doc), json.dumps(mix_doc)
+        batch = build_telemetry_batch(
+            spark, int_p, mix_p,
+            now=F.lit(self.NOW).cast("timestamp")).collect()
+        backfill = build_telemetry_batch_multi(
+            spark, [("w", int_p, mix_p)]).collect()
+        raw = spark.createDataFrame(
+            [(json.dumps({"intensity": int_doc, "generation": mix_doc}),)],
+            "payload string")
+        stream = _payload_rows(raw)
+        assert tuple(stream.columns) == (*TELEMETRY_COLS, "int_found",
+                                         "mix_found")
+        stream = stream.where("int_found").select(*TELEMETRY_COLS).collect()
+        assert len(batch) == len(backfill) == len(stream) == 1
+        assert backfill == stream
+        got = stream[0].asDict()
+        assert {k: got[k] for k in expect} == expect
+        if name == "unparseable_from":
+            assert batch[0].timestamp.hour == 16
+            assert stream[0].timestamp is None
+            batch = [batch[0].asDict() | {"timestamp": None}]
+            stream = [stream[0].asDict()]
+        assert batch == stream
+
 
 class TestPartitionedSink:
     def test_day_partitioned_sink_round_trip_and_dedup(self, spark, tmp_path):

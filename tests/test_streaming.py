@@ -1460,6 +1460,42 @@ def test_dead_letter_capture_and_reprocess(spark, tmp_path):
                   ) == [14, 16]
 
 
+def test_dead_letter_replay_dedups_hour_and_writes_sink_schema(
+        spark, tmp_path):
+    """Two repaired dead letters for one hour replay like a batch
+    run's append: the sink keeps one row for the hour, the earliest
+    timestamp (first_per_bucket), and its files carry exactly the
+    telemetry schema's columns — no validation flags."""
+    import os
+
+    from flight_data_pipeline_spark.sinks import TELEMETRY_SCHEMA
+    from flight_data_pipeline_spark.streaming.pipeline_stream import (
+        quarantine_malformed,
+        reprocess_dead_letters,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    dlq = tmp_path / "dlq"
+    tele = str(tmp_path / "tele")
+    for name in ("late.json", "early.json"):
+        (landing / name).write_text(
+            '{"intensity": {"data": []}, "generation": {"data": []}}')
+    assert quarantine_malformed(spark, str(landing), str(dlq)) == 2
+
+    (dlq / "late.json").write_text(payload(16, 30))
+    (dlq / "early.json").write_text(payload(16, 0))
+    res = reprocess_dead_letters(spark, str(dlq), tele,
+                                 str(tmp_path / "audit"))
+    assert res == {"recovered_rows": 1, "recovered_files": 2,
+                   "still_dead": 0}
+    assert os.listdir(dlq) == []
+    rows = spark.read.parquet(tele).collect()
+    assert [(r.timestamp.hour, r.timestamp.minute) for r in rows] \
+        == [(16, 0)]
+    assert spark.read.parquet(tele).columns == TELEMETRY_SCHEMA.fieldNames()
+
+
 def test_join_ivm_matches_recompute_with_late_dims(spark, tmp_path):
     """Delta-join IVM: interleave fact and dim arrivals across three
     batches — including facts whose dimension arrives ONE BATCH LATER

@@ -31,6 +31,7 @@ counters stay put, so wall time is reported, not gated.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -205,6 +206,17 @@ COUNTERS = ("jobs", "stages", "shuffle_bytes")
 SHUFFLE_SLACK = 0.2
 
 
+def parse_only(arg: str) -> list[str]:
+    """``--only q1,q2`` → the named headline queries, in HEADLINE order;
+    an unknown name is an argparse error."""
+    names = {n.strip() for n in arg.split(",") if n.strip()}
+    unknown = sorted(names - set(HEADLINE))
+    if unknown or not names:
+        raise argparse.ArgumentTypeError(
+            f"not headline queries: {', '.join(unknown) or 'none named'}")
+    return [n for n in HEADLINE if n in names]
+
+
 def read_baseline(repo: str) -> dict:
     """BENCH_BASELINE.json, or {} when it is missing or unreadable."""
     try:
@@ -251,9 +263,10 @@ def load_baseline_cal(repo: str) -> float | None:
 
 def run_counters(reader: RestReader, name: str,
                  runs: int) -> list[dict[str, int]]:
-    """COUNTERS of each of ``name``'s first ``runs`` timed runs, read
-    back by job group. Called per query: Spark's UI keeps only the last
-    1000 jobs and stages, fewer than one sf0.1 pass submits."""
+    """COUNTERS (plus the ungated task count) of each of ``name``'s
+    first ``runs`` timed runs, read back by job group. Called per
+    query: Spark's UI keeps only the last 1000 jobs and stages, fewer
+    than one sf0.1 pass submits."""
     jobs, stages, _ = reader.snapshot()
     per_job = job_counters(jobs, stages)
     out = []
@@ -265,6 +278,7 @@ def run_counters(reader: RestReader, name: str,
             "stages": sum(c.stages for c in mine),
             "shuffle_bytes": int(sum(c.sums["shuffle_write_bytes"]
                                      for c in mine)),
+            "tasks": sum(c.tasks for c in mine),
         })
     return out
 
@@ -301,6 +315,11 @@ def find_regressions(runs: dict[str, list[dict]],
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--only", type=parse_only, default=None,
+                    help="comma-separated headline queries to run "
+                         "(default: all)")
+    only = ap.parse_args().only
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     spark = get_spark(app_name="fdps-bench")
@@ -335,7 +354,7 @@ def main() -> None:
     # a single crash zeroed the whole round's bench evidence). The
     # first run of each query pays its whole-stage-codegen class
     # compile (~2-3×, measured in BASELINE.md's bimodality note).
-    for name in HEADLINE:
+    for name in only or HEADLINE:
         best = float("inf")
         done = 0
         try:

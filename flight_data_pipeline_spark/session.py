@@ -11,6 +11,13 @@ Pins the configuration decisions called out in SURVEY.md §7.4:
 - ``spark.sql.legacy.parquet.nanosAsLong=true`` — the test fixtures
   carry TIMESTAMP(NANOS) parquet columns which Spark 4 refuses by
   default; we read them as long and convert (see tables.py).
+- ``spark.io.compression.codec=zstd`` — the block codec of every
+  shuffle, broadcast and spill block. It changes block bytes, never
+  results: the plan and every row are the same under Spark's default
+  lz4, so sessions built elsewhere (the vanilla session of
+  ``scripts/drive_driver.py``) keep lz4 and still MATCH. It is a core
+  (SparkContext) key, so it is set only at build time. AQE sizes its
+  coalesced partitions from the compressed map-output bytes.
 """
 
 from __future__ import annotations
@@ -30,11 +37,15 @@ _BUILD_CONF: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for pandas_udf / applyInPandas fast paths
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # core SparkConf key: spark.conf.set rejects it on a live session
+    "spark.io.compression.codec": "zstd",
 }
 
 # Settings we also (re)apply at runtime on externally-built sessions —
 # the verification driver builds its own SparkSession, so anything the
-# engine depends on must be runtime-settable and set lazily.
+# engine depends on must be runtime-settable and set lazily. Only
+# spark.sql.* keys belong here: apply_runtime_conf swallows the error
+# that a core key's set raises.
 _RUNTIME_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",

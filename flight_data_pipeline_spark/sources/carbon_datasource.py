@@ -69,7 +69,7 @@ def _parse_window_payload(payload: dict):
     def fuel_perc(name: str) -> float:  # etl_job.py:124-128
         for entry in mix:
             if (entry.get("fuel") or "").lower() == name:
-                return float(entry.get("perc", 0))
+                return float(entry.get("perc") or 0)
         return 0.0
 
     return (ts, float(value) if value is not None else None,

@@ -71,13 +71,15 @@ def _payload_rows(raw: DataFrame, *keep_cols: str) -> DataFrame:
 def telemetry_stream(raw: DataFrame) -> DataFrame:
     """Raw payload lines → validated, hour-deduped telemetry stream."""
     rows = _payload_rows(raw)
-    # malformed/empty payloads: the batch path raises (etl_job.py:
-    # 102-103 → run 'failure'); a stream can't abort the query for one
-    # bad record, so the streaming semantics is dead-letter: drop the
-    # record here (it never had data) — quarantine_malformed captures
-    # such payload FILES for repair + reprocess_dead_letters replay.
-    # Validation failures on REAL records still flag-don't-drop below.
-    rows = rows.where(F.col("int_found")).drop("int_found", "mix_found")
+    # a payload missing either half: the batch path raises (etl_job.py:
+    # 102-103, 118-119 → run 'failure') and the backfill builder drops
+    # it; a stream can't abort the query for one bad record, so the
+    # streaming semantics is dead-letter: drop the record here —
+    # quarantine_malformed captures such payload FILES for repair +
+    # reprocess_dead_letters replay. Validation failures on REAL
+    # records still flag-don't-drop below.
+    rows = rows.where(F.col("int_found") & F.col("mix_found")) \
+        .drop("int_found", "mix_found")
     gated = quality_gate(rows, telemetry_checks())
     return (
         gated.withColumn("hour_bucket", F.date_trunc("hour", "timestamp"))
@@ -1035,9 +1037,10 @@ def stream_corpus_intake(docs: DataFrame, state_dir: str,
 def quarantine_malformed(spark: SparkSession, landing_dir: str,
                          dlq_dir: str) -> int:
     """Dead-letter CAPTURE: copy every landing payload file the
-    parser cannot extract a record from into ``dlq_dir`` with a
-    ``.reason`` sidecar. The live stream DROPS such records (a stream
-    can't abort for one bad file, and the record never had data) —
+    parser cannot extract a full record from (no intensity record, no
+    generation mix, or neither) into ``dlq_dir`` with a ``.reason``
+    sidecar naming the missing half or halves. The live stream DROPS
+    such records (a stream can't abort for one bad file) —
     capture is what makes the reference's failed-run → fix → rerun
     loop (etl_job.py status machine) possible in file form.
     Idempotent: re-runs overwrite the same names. Returns the count
@@ -1057,8 +1060,8 @@ def quarantine_malformed(spark: SparkSession, landing_dir: str,
     )
     bad = (
         _payload_rows(raw, "file")
-        .where(~F.col("int_found"))
-        .select("file")
+        .where(~(F.col("int_found") & F.col("mix_found")))
+        .select("file", "int_found", "mix_found")
     )
     os.makedirs(dlq_dir, exist_ok=True)
     n = 0
@@ -1067,7 +1070,11 @@ def quarantine_malformed(spark: SparkSession, landing_dir: str,
         name = os.path.basename(path)
         shutil.copyfile(path, os.path.join(dlq_dir, name))
         with open(os.path.join(dlq_dir, name + ".reason"), "w") as fh:
-            fh.write("no parseable intensity record")
+            fh.write("; ".join(
+                why for why, found in (
+                    ("no parseable intensity record", row.int_found),
+                    ("no generation mix data", row.mix_found))
+                if not found))
         n += 1
     return n
 
@@ -1096,7 +1103,8 @@ def reprocess_dead_letters(spark: SparkSession, dlq_dir: str,
         .withColumnRenamed("value", "payload")
         .withColumn("file", F.input_file_name())
     )
-    ok = _payload_rows(raw, "file").where(F.col("int_found"))
+    ok = _payload_rows(raw, "file") \
+        .where(F.col("int_found") & F.col("mix_found"))
     recovered_files = [
         r.file.removeprefix("file:")
         for r in ok.select("file").distinct().toLocalIterator()

@@ -6,8 +6,11 @@ line's size budget."""
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+
+import pytest
 
 import bench
 from scripts import record_baseline
@@ -153,3 +156,55 @@ class TestLoadBaseline:
             missing = [q for q in bench.HEADLINE
                        if set(pins.get(q, {})) != set(bench.COUNTERS)]
             assert missing == [], (cpus, missing)
+
+
+class TestMergePins:
+    OLD = {"q_a": {"jobs": 5, "stages": 6, "shuffle_bytes": 100},
+           "q_b": {"jobs": 2, "stages": 2, "shuffle_bytes": 0}}
+    META = {"unix": 1, "sessions": 3, "runs_per_query": 6}
+
+    def baseline(self):
+        return {"counters": {"0.1": {"8": dict(self.OLD),
+                                     "32": {"q_a": dict(self.OLD["q_a"])}}},
+                "recorded": {"0.1": {"8": {"unix": 0, "sessions": 5,
+                                           "runs_per_query": 4}}}}
+
+    def test_only_merges_named_rows_and_notes_changes(self):
+        base = self.baseline()
+        new = {"q_a": {"jobs": 5, "stages": 6, "shuffle_bytes": 40}}
+        changed = record_baseline.merge_pins(base, "0.1", "8", new,
+                                             self.META, only=True)
+        assert changed == ["q_a (shuffle_bytes 100→40)"]
+        assert base["counters"]["0.1"]["8"] == {**self.OLD, **new}
+        assert base["counters"]["0.1"]["32"] == {"q_a": self.OLD["q_a"]}
+        rec = base["recorded"]["0.1"]["8"]
+        assert (rec["unix"], rec["sessions"], rec["runs_per_query"]) \
+            == (0, 3, 4)
+        assert "q_a: re-recorded" in rec["merge"]
+        assert "changed: q_a (shuffle_bytes 100→40)." in rec["merge"]
+
+    def test_only_with_unchanged_pins_notes_none(self):
+        base = self.baseline()
+        changed = record_baseline.merge_pins(
+            base, "0.1", "8", {"q_b": dict(self.OLD["q_b"])}, self.META,
+            only=True)
+        assert changed == []
+        assert base["counters"]["0.1"]["8"] == self.OLD
+        assert base["recorded"]["0.1"]["8"]["merge"].endswith(
+            "changed: none.")
+
+    def test_full_record_replaces_the_pair(self):
+        base = self.baseline()
+        new = {"q_a": {"jobs": 4, "stages": 6, "shuffle_bytes": 100}}
+        changed = record_baseline.merge_pins(base, "0.1", "8", new,
+                                             self.META)
+        assert changed == ["q_a (jobs 5→4)"]
+        assert base["counters"]["0.1"]["8"] == new
+        assert base["recorded"]["0.1"]["8"] == self.META
+        assert base["counters"]["0.1"]["32"] == {"q_a": self.OLD["q_a"]}
+
+    def test_only_rejects_unknown_query(self):
+        assert bench.parse_only(" copurchase_pagerank,daily_rollup") == [
+            "daily_rollup", "copurchase_pagerank"]
+        with pytest.raises(argparse.ArgumentTypeError, match="no_such_q"):
+            bench.parse_only("daily_rollup,no_such_q")

@@ -42,6 +42,20 @@ def test_datasource_reads_typed_rows_per_window(spark):
     assert rows[14].window_start.tzinfo is None or True  # session-tz timestamps
 
 
+def test_datasource_reads_null_perc_as_zero(spark):
+    """A generation entry with ``"perc": null`` reads as 0.0, as in
+    ``rest_json.parse_generation_mix``, instead of failing the read."""
+    spark.dataSource.register(CarbonIntensityDataSource)
+    doc = json.loads(payloads()["2025-12-09T14:00Z"])
+    doc["generation"]["data"][0]["generationmix"][0]["perc"] = None
+    row = (spark.read.format("carbon_intensity")
+           .option("windows", "2025-12-09T14:00Z")
+           .option("payload_json",
+                   json.dumps({"2025-12-09T14:00Z": json.dumps(doc)}))
+           .load().first())
+    assert (row.fuel_gas_perc, row.fuel_wind_perc) == (0.0, 25.3)
+
+
 class TestJsonlCorpus:
     def test_good_and_dead_letter_split(self, spark, tmp_path):
         from flight_data_pipeline_spark.sources.jsonl_corpus import (

@@ -348,6 +348,37 @@ class TestSharedParse:
             stream = [stream[0].asDict()]
         assert batch == stream
 
+    def test_generation_less_record_written_by_no_path(self, spark, paths,
+                                                       tmp_path):
+        """An intensity record whose generation payload has no data is
+        no record on any path: the batch run fails, the backfill
+        builder drops it, and the stream writes nothing."""
+        from flight_data_pipeline_spark.pipeline import (
+            build_telemetry_batch_multi,
+        )
+        from flight_data_pipeline_spark.streaming.pipeline_stream import (
+            stream_telemetry,
+        )
+
+        empty_mix = {"data": []}
+        res = run(spark, paths, mix=json.dumps(empty_mix))
+        assert res.status == "failure"
+        assert "No generation data returned" in res.error_message
+        assert TelemetrySink(spark, paths[0]).read().count() == 0
+        assert build_telemetry_batch_multi(
+            spark, [("w", INTENSITY, json.dumps(empty_mix))]).count() == 0
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        (landing / "p.json").write_text(json.dumps(
+            {"intensity": json.loads(INTENSITY), "generation": empty_mix}))
+        tele = str(tmp_path / "stream_tele")
+        q = stream_telemetry(spark, str(landing), tele,
+                             str(tmp_path / "stream_audit"),
+                             str(tmp_path / "ckpt"))
+        q.awaitTermination(120)
+        assert not q.isActive
+        assert TelemetrySink(spark, tele).read().count() == 0
+
 
 class TestPartitionedSink:
     def test_day_partitioned_sink_round_trip_and_dedup(self, spark, tmp_path):

@@ -1496,6 +1496,48 @@ def test_dead_letter_replay_dedups_hour_and_writes_sink_schema(
     assert spark.read.parquet(tele).columns == TELEMETRY_SCHEMA.fieldNames()
 
 
+def test_dead_letter_names_missing_half_and_replays_only_full_records(
+        spark, tmp_path):
+    """A payload missing either half is quarantined, its ``.reason``
+    naming the missing half; a replay writes only files that carry
+    both halves."""
+    import os
+
+    from flight_data_pipeline_spark.sinks import TelemetrySink
+    from flight_data_pipeline_spark.streaming.pipeline_stream import (
+        quarantine_malformed,
+        reprocess_dead_letters,
+    )
+
+    full = json.loads(payload(14, 0))
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    dlq = tmp_path / "dlq"
+    tele = str(tmp_path / "tele")
+    (landing / "good.json").write_text(json.dumps(full))
+    (landing / "no_mix.json").write_text(json.dumps(
+        {"intensity": full["intensity"], "generation": {"data": []}}))
+    (landing / "no_int.json").write_text(json.dumps(
+        {"intensity": {"data": []}, "generation": full["generation"]}))
+    (landing / "neither.json").write_text("not json at all {")
+    assert quarantine_malformed(spark, str(landing), str(dlq)) == 3
+    reasons = {f.removesuffix(".reason"): (dlq / f).read_text()
+               for f in os.listdir(dlq) if f.endswith(".reason")}
+    assert reasons == {
+        "no_mix.json": "no generation mix data",
+        "no_int.json": "no parseable intensity record",
+        "neither.json": "no parseable intensity record; "
+                        "no generation mix data"}
+
+    # replay before any repair: nothing has both halves, nothing is
+    # written and every file stays quarantined
+    res = reprocess_dead_letters(spark, str(dlq), tele,
+                                 str(tmp_path / "audit"))
+    assert res == {"recovered_rows": 0, "recovered_files": 0,
+                   "still_dead": 3}
+    assert TelemetrySink(spark, tele).read().count() == 0
+
+
 def test_join_ivm_matches_recompute_with_late_dims(spark, tmp_path):
     """Delta-join IVM: interleave fact and dim arrivals across three
     batches — including facts whose dimension arrives ONE BATCH LATER

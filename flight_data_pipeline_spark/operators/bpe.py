@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from flight_data_pipeline_spark.session import local_frame
+
 END_OF_WORD = "</w>"
 _SENTINEL = "\x00"  # impossible symbol: words never contain NUL
 
@@ -99,8 +101,9 @@ def bpe_learn(df: DataFrame, text_col: str, num_merges: int = 20,
     with the corpus-sized work confined to the single
     ``word_symbol_table`` collapse up front."""
     words = word_symbol_table(df, text_col).localCheckpoint()
-    sentinel = words.sparkSession.createDataFrame(
-        [(_SENTINEL, _SENTINEL, -1)], "p1 string, p2 string, cnt bigint")
+    sentinel = local_frame(
+        words.sparkSession, [(_SENTINEL, _SENTINEL, -1)],
+        "p1 string, p2 string, cnt bigint")
 
     merges: list[DataFrame] = []
     for rank in range(1, num_merges + 1):

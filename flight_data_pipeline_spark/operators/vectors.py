@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from flight_data_pipeline_spark.session import local_frame
+
 
 def as_double(vec: Column) -> Column:
     """array<float> → array<double> (pin arithmetic precision; the
@@ -269,8 +271,8 @@ def build_ivf_index(df: DataFrame, vec_col: str, id_col: str,
                    predictionCol="ivf_list").fit(train)
 
     assignments = model.transform(featurized).drop("__features").persist()
-    spark = df.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        df.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "ivf_list int, centroid array<double>",
     )
@@ -385,8 +387,8 @@ class PqCodebooks:
             for j, sub in enumerate(self.centers)
             for c, cent in enumerate(sub)
         ]
-        return spark.createDataFrame(
-            rows, "subspace int, code int, centroid array<double>")
+        return local_frame(
+            spark, rows, "subspace int, code int, centroid array<double>")
 
 
 def _l2_normalized(vec: Column) -> Column:

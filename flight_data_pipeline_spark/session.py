@@ -18,6 +18,13 @@ Pins the configuration decisions called out in SURVEY.md §7.4:
   ``scripts/drive_driver.py``) keep lz4 and still MATCH. It is a core
   (SparkContext) key, so it is set only at build time. AQE sizes its
   coalesced partitions from the compressed map-output bytes.
+
+Rows the engine builds on the driver (a fetched payload, an audit row,
+an empty sink, a sentinel, a codebook) become a Catalyst
+``LocalRelation`` through ``local_frame``, never a Python RDD: no
+``parallelize``, no ``PythonRDD``, no Python worker, and the optimizer
+folds projections, filters, limits and empty inputs over such rows on
+the driver. ``local_frame`` is the engine's only ``createDataFrame``.
 """
 
 from __future__ import annotations
@@ -25,7 +32,10 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import Observation, SparkSession
+import pyarrow as pa
+import pyspark.sql.types as T
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Settings that must be present at session build time.
 _BUILD_CONF: dict[str, str] = {
@@ -88,6 +98,28 @@ def get_spark(app_name: str = "flight_data_pipeline_spark",
     spark = builder.getOrCreate()
     apply_runtime_conf(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str
+                ) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order; ``schema`` a
+    StructType or a DDL string) as a ``LocalRelation``, which plans as
+    ``LocalTableScan``. The rows reach the JVM as one Arrow table, and
+    every value goes through ``schema.toInternal`` first — the
+    conversion ``createDataFrame(list, schema)`` applies — so a naive
+    ``datetime`` still means the Python process's local time. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes (48 MiB
+    by default) Spark parallelizes the Arrow batches in the JVM
+    instead; still no Python worker."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = (list(zip(*(schema.toInternal(r) for r in rows)))
+            or [()] * len(arrow))
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def cpu_dense_partitions(spark: SparkSession) -> int:

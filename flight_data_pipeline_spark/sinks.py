@@ -19,9 +19,11 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from flight_data_pipeline_spark.operators.dedup import dedup_against_sink
+from flight_data_pipeline_spark.session import local_frame
 
 # grid_telemetry DDL analogue (etl_job.py:141-151). BIGSERIAL id is
 # omitted: Spark has no serial generator and the reference never
@@ -49,18 +51,30 @@ class ParquetSink:
     """Append-only parquet table rooted at ``path`` with a declared
     schema — the CREATE TABLE IF NOT EXISTS analogue (etl_job.py:139-166):
     reading a not-yet-written sink yields an empty, correctly-typed
-    DataFrame instead of failing."""
+    LocalRelation instead of failing, which the optimizer folds (an
+    anti-join against it drops out of the plan). Only a sink with no
+    data files yet (a missing path, or a directory with none) reads as
+    empty: any other read error (a corrupt file, say) propagates, since
+    an unreadable sink read as an empty one would let ``append_dedup``
+    append hours the sink already holds."""
 
     def __init__(self, spark: SparkSession, path: str, schema: T.StructType):
         self.spark = spark
         self.path = path
         self.schema = schema
 
-    def read(self) -> DataFrame:
+    def _read_or_empty(self, read) -> DataFrame:
         try:
-            return self.spark.read.schema(self.schema).parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], self.schema)
+            return read()
+        except AnalysisException as e:
+            if e.getCondition() not in ("PATH_NOT_FOUND",
+                                        "UNABLE_TO_INFER_SCHEMA"):
+                raise
+            return local_frame(self.spark, [], self.schema)
+
+    def read(self) -> DataFrame:
+        return self._read_or_empty(
+            lambda: self.spark.read.schema(self.schema).parquet(self.path))
 
     def append(self, df: DataFrame) -> None:
         (df.select(*[F.col(f.name).cast(f.dataType) for f in self.schema.fields])
@@ -120,13 +134,11 @@ class TelemetrySink(ParquetSink):
     def read(self) -> DataFrame:
         if not self.partition_by_day:
             return super().read()
-        try:
-            # timestamp is stored in the data files; bucket_date is the
-            # partition directory column — project back to the schema
-            return self.spark.read.parquet(self.path).select(
-                *[f.name for f in self.schema.fields])
-        except Exception:
-            return self.spark.createDataFrame([], self.schema)
+        # timestamp is stored in the data files; bucket_date is the
+        # partition directory column — project back to the schema
+        return self._read_or_empty(
+            lambda: self.spark.read.parquet(self.path).select(
+                *self.schema.fieldNames()))
 
     def read_range(self, start_date: str, end_date: str) -> DataFrame:
         """Date-bounded read that filters on the PARTITION column
@@ -139,14 +151,10 @@ class TelemetrySink(ParquetSink):
         if not self.partition_by_day:
             return self.read().where(
                 F.to_date("timestamp").between(start_date, end_date))
-        try:
-            return (
-                self.spark.read.parquet(self.path)
-                .where(F.col("bucket_date").between(start_date, end_date))
-                .select(*[f.name for f in self.schema.fields])
-            )
-        except Exception:
-            return self.spark.createDataFrame([], self.schema)
+        return self._read_or_empty(
+            lambda: self.spark.read.parquet(self.path)
+            .where(F.col("bucket_date").between(start_date, end_date))
+            .select(*self.schema.fieldNames()))
 
     def append(self, df: DataFrame) -> None:
         if not self.partition_by_day:
@@ -206,7 +214,7 @@ class AuditSink(ParquetSink):
         try:
             row = [(run_timestamp, status, rows_inserted,
                     int(execution_time_ms), error_message)]
-            df = self.spark.createDataFrame(row, AUDIT_SCHEMA)
+            df = local_frame(self.spark, row, AUDIT_SCHEMA)
             if run_timestamp is None:
                 df = df.withColumn("run_timestamp", F.current_timestamp())
             self.append(df)

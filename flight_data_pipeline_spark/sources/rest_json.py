@@ -4,9 +4,10 @@ The reference fetches two carbon-intensity API payloads driver-side
 (etl_job.py:96-137) and flattens them imperatively. Here the *parsing*
 is fully declarative — raw JSON strings become typed DataFrames via
 ``from_json`` + higher-order array functions — so the identical plan
-ingests one payload (driver-fetched, ``spark.createDataFrame``) or a
+ingests one payload (driver-fetched, a ``LocalRelation`` built by
+``session.local_frame`` that the optimizer folds on the driver) or a
 100 TB landing zone of payload files (``spark.read.text`` /
-``readStream``): the JSON never touches driver Python.
+``readStream``): the JSON is never parsed in driver Python.
 
 Fetching stays a thin driver-side layer with the reference's retry
 envelope (3 attempts, 2·2^n backoff — etl_job.py:32-49), injectable
@@ -28,6 +29,7 @@ from flight_data_pipeline_spark.functions.scalars import (
     default_to,
     parse_iso8601,
 )
+from flight_data_pipeline_spark.session import local_frame
 
 # --- retry envelope (etl_job.py:32-49) --------------------------------------
 
@@ -194,9 +196,9 @@ def parse_telemetry(df: DataFrame, now: Column | None = None,
 
 
 def payload_df(spark: SparkSession, payloads: list[str]) -> DataFrame:
-    """Wrap raw JSON payload strings as a DataFrame (driver-side
+    """Wrap raw JSON payload strings as a LocalRelation (driver-side
     single-record path; the file-landing path is spark.read.text)."""
-    return spark.createDataFrame([(p,) for p in payloads], "payload string")
+    return local_frame(spark, [(p,) for p in payloads], "payload string")
 
 
 def fetch_json(url: str, timeout: float = 10.0) -> str:

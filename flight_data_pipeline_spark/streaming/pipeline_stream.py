@@ -30,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from flight_data_pipeline_spark.operators.quality import quality_gate
 from flight_data_pipeline_spark.pipeline import telemetry_checks
+from flight_data_pipeline_spark.session import local_frame
 from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
 from flight_data_pipeline_spark.sources.rest_json import parse_telemetry
 
@@ -1195,7 +1196,7 @@ def apply_join_ivm_delta(state_dir: str, batch_df: DataFrame,
                 if d.startswith("batch=") and d != f"batch={batch_id}"]
         if dirs:
             return spark.read.parquet(*dirs)
-        return spark.createDataFrame([], cols)
+        return local_frame(spark, [], cols)
 
     f_old = prior("facts", "k long, cents long")
     d_old = prior("dims", "k long, segment string")
@@ -1569,7 +1570,7 @@ def apply_cluster_map_delta(state_dir: str, batch_df: DataFrame,
              .where(F.col("a") != F.col("b")).distinct())
     data = os.path.join(root, "data")
     cmap = (spark.read.parquet(data) if os.path.exists(data)
-            else spark.createDataFrame([], "doc long, cluster long"))
+            else local_frame(spark, [], "doc long, cluster long"))
 
     # contract: endpoint → current cluster (self if unmapped)
     contracted = (

@@ -16,7 +16,13 @@ print one JSON line per query, then a summary line:
 
 Counters and REST timestamps come from ``perfbench.counters``.
 
-    python scripts/query_profile.py [--plans DIR] [--loop-plans DIR] <query>...
+    python scripts/query_profile.py [--jobs] [--plans DIR] [--loop-plans DIR] <query>...
+
+``--jobs`` also prints, after each query's line, one JSON line per job
+it submitted: job id, stages, tasks, executor CPU seconds (task CPU
+plus task deserialization CPU, the benchmark's ``executor_cpu_s``) and
+shuffle write bytes. A job that costs seconds of CPU for little data
+shows up there without the Spark UI.
 
 ``--plans DIR`` also writes each query's formatted physical plan to
 ``DIR/<query>.txt``. ``--loop-plans DIR`` points
@@ -62,14 +68,17 @@ def write_plan(spark, df, path: str) -> None:
         f.write(plan.strip() + "\n")
 
 
-def main() -> None:
+def main(argv: list[str] | None = None, spark=None) -> None:
+    """Profile the queries named in ``argv`` (default: the command
+    line) on ``spark``, else on a session of its own."""
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("queries", nargs="+")
+    ap.add_argument("--jobs", action="store_true")
     ap.add_argument("--plans", metavar="DIR")
     ap.add_argument("--loop-plans", metavar="DIR")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
-    spark = get_spark(app_name="fdps-profile")
+    spark = spark or get_spark(app_name="fdps-profile")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
     reader = RestReader(sc)
@@ -124,6 +133,14 @@ def main() -> None:
         }
         out[name] = rec
         print(json.dumps({name: rec}), flush=True)
+        if args.jobs:
+            for j in sorted(mine, key=lambda j: j.id):
+                c = per_job[j.id]
+                print(json.dumps({"job": {
+                    "query": name, "id": j.id, "stages": c.stages,
+                    "tasks": c.tasks, "executor_cpu_s": round(c.cpu_s, 3),
+                    "shuffle_write_bytes": int(
+                        c.sums["shuffle_write_bytes"])}}), flush=True)
     print(json.dumps({"summary": out}))
 
 

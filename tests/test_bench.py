@@ -1,8 +1,8 @@
 """The bench.py per-query regression tripwire: pure-function tests that
 the counter gate flags a plan regression (more jobs, more stages, or
 shuffle bytes beyond the slack) and ignores wall time, one-job flakes
-and missing pins, plus the pinned-baseline loader and the official
-line's size budget."""
+and missing pins, plus the pinned-baseline loader, the official
+line's size budget and ``scripts/query_profile.py --jobs``."""
 
 from __future__ import annotations
 
@@ -208,3 +208,30 @@ class TestMergePins:
             "daily_rollup", "copurchase_pagerank"]
         with pytest.raises(argparse.ArgumentTypeError, match="no_such_q"):
             bench.parse_only("daily_rollup,no_such_q")
+
+
+class TestQueryProfileJobs:
+    def test_jobs_lines_cover_each_query_run(self, spark, capsys,
+                                             monkeypatch):
+        from scripts import query_profile
+        from tests.conftest import SF_DIR
+
+        monkeypatch.setattr(query_profile, "SF_DIR", SF_DIR)
+        names = ["scalar_counts", "tokenization_stats"]
+        query_profile.main(["--jobs", *names], spark=spark)
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        lines = [json.loads(x) for x in capsys.readouterr().out.splitlines()
+                 if x.startswith("{")]
+        summary = lines[-1]["summary"]
+        jobs = [x["job"] for x in lines if "job" in x]
+        for name in names:
+            mine = [j for j in jobs if j["query"] == name]
+            rec = summary[name]
+            assert len(mine) == rec["n_jobs"] > 0
+            assert sum(j["stages"] for j in mine) == rec["n_stages"]
+            assert sum(j["tasks"] for j in mine) == rec["n_tasks"]
+            assert (sum(j["shuffle_write_bytes"] for j in mine)
+                    == rec["shuffle_write_bytes"])
+            assert all(j["executor_cpu_s"] >= 0 for j in mine)
+        ids = [j["id"] for j in jobs]
+        assert ids == sorted(set(ids))

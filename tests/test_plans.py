@@ -136,10 +136,13 @@ def test_no_driver_side_materialization_in_operators():
     # exempt: sinks.py and pipeline_stream.py count *appended* rows —
     # the reference's rows_inserted audit contract (etl_job.py:261),
     # per batch / micro-batch, not a data-path materialization;
-    # pipeline.py runs exactly ONE control-flow probe per batch run
-    # (missing-payload + partial-status fold, required to reproduce
-    # the reference's raise/status machine) — count pinned by
-    # tests/test_pipeline.py::TestSingleProbeAction
+    # pipeline.py reads exactly ONE control-flow probe per batch run:
+    # a .first() of a projection of the one-row batch (missing-payload
+    # flags + partial status, required to reproduce the reference's
+    # raise/status machine). The batch is a LocalRelation, so the
+    # probe folds on the driver and runs no Spark job — pinned by
+    # tests/test_pipeline.py::TestSingleProbeAction and
+    # ::TestLocalRelationIngest
     allowed = {"sinks.py", "pipeline_stream.py", "pipeline.py"}
     for py in pkg.rglob("*.py"):
         if py.name in allowed:

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 
@@ -41,17 +42,23 @@ def sql_client(spark, sql: str, sf_dir: str | None = None,
                telemetry: str = "spark-warehouse/grid_telemetry",
                audit: str = "spark-warehouse/etl_runs"):
     """The EP3 any-SQL-client surface behind ``query --sql``: register
-    the fixture tables plus the engine's own sink tables
-    (``grid_telemetry``, ``etl_runs`` — empty-but-typed when never
-    written) as temp views and run ONE raw Spark SQL statement. The
+    the engine's own sink tables (``grid_telemetry``, ``etl_runs`` —
+    empty-but-typed when never written) plus each fixture table whose
+    name is a word of the statement as temp views, and run ONE raw
+    Spark SQL statement. A fixture view costs a file listing and a
+    schema-inference job, so a statement pays only for the tables it
+    names (a word that matches by chance registers an unused view);
+    the sink views are always registered because views such as
+    ``view_daily_cleanliness`` read ``grid_telemetry`` by name. The
     reference's documented monitoring SQL (README.md:171-195,546-563;
     docs/GITHUB_ACTIONS_SETUP.md:79-106) runs verbatim here — a
     trailing ';' (the psql habit of the docs) is stripped since Spark
     parses single statements only."""
     from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
-    from flight_data_pipeline_spark.tables import register_tables
+    from flight_data_pipeline_spark.tables import TABLES, load_table
 
-    register_tables(spark, sf_dir)
+    for name in set(TABLES).intersection(re.findall(r"\w+", sql.lower())):
+        load_table(spark, name, sf_dir).createOrReplaceTempView(name)
     TelemetrySink(spark, telemetry).read() \
         .createOrReplaceTempView("grid_telemetry")
     AuditSink(spark, audit).read().createOrReplaceTempView("etl_runs")

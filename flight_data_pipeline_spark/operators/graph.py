@@ -322,8 +322,10 @@ def label_propagation_integer(edges: DataFrame, src: str = "src",
             # per-v argmax as one aggregate: max(struct(count,
             # -label)) is lexicographic — largest count, ties to the
             # SMALLEST label (labels are node ids ≥ 0, so the negation
-            # is exact); no window, so no per-round sort
-            # (OPTIMIZATION_r13.md §8)
+            # is exact). A max(struct) buffer is not UnsafeRow-mutable,
+            # so Spark plans it as Sort → SortAggregate ×2 (no codegen)
+            # on the d-partitioned votes, not as a hash aggregate; it
+            # still needs no exchange (OPTIMIZATION_r13.md §8)
             winners = (
                 votes.groupBy("v")
                 .agg(F.max(F.struct(F.col("__c"),

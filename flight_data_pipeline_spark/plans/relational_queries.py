@@ -4427,9 +4427,11 @@ def _copurchase_pairs(li: DataFrame) -> DataFrame:
     edges feed ``label_propagation_integer``, inside that operator's
     dst-keyed layout exchange.
 
-    Plan: one o-keyed exchange, then a sorted ``collect_set`` per order
-    exploded in-row into its pairs, so per-order work is bounded by
-    basket width squared."""
+    Plan: one o-keyed exchange, then a sorted ``collect_set`` per order;
+    ``posexplode`` yields each part ``u`` at its position ``i`` and an
+    ``explode`` of the slice after ``i`` yields its partners ``v``. Both
+    generators are codegen'd (no interpreted lambda), and per-order
+    work is bounded by basket width squared."""
     return (
         li.select(F.col("l_orderkey").alias("o"),
                   F.col("l_partkey").alias("p"))
@@ -4438,11 +4440,9 @@ def _copurchase_pairs(li: DataFrame) -> DataFrame:
         # (OPTIMIZATION_r14.md §8)
         .repartition(cpu_dense_partitions(li.sparkSession), "o")
         .groupBy("o").agg(F.array_sort(F.collect_set("p")).alias("ps"))
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) ->"
-            " transform(slice(ps, i + 2, size(ps) - i - 1),"
-            "           y -> named_struct('u', x, 'v', y))))")).alias("z"))
-        .select("z.u", "z.v")
+        .select("ps", F.posexplode("ps").alias("i", "u"))
+        .select("u", F.explode(F.expr("slice(ps, i + 2, size(ps) - i - 1)"))
+                .alias("v"))
     )
 
 

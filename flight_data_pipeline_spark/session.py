@@ -230,8 +230,10 @@ def checkpoint_observed(frame, metric, *cols):
     given) → (checkpointed frame, value of the aggregate ``metric``
     over the frame's rows). The metric rides the checkpoint's own job
     as a ``DataFrame.observe`` — the loop operators' convergence
-    signal costs no probe job of its own. ``metric`` may read columns
-    that ``cols`` drops."""
+    signal and the sinks' written-row counts cost no probe job of
+    their own. An empty frame still reports its metric (0 for a
+    count), so the call never waits on a missing observation.
+    ``metric`` may read columns that ``cols`` drops."""
     obs = Observation()
     seen = frame.observe(obs, metric.alias("m"))
     out = (seen.select(*cols) if cols else seen).localCheckpoint()

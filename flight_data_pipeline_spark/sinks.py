@@ -22,8 +22,9 @@ import pyspark.sql.types as T
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from flight_data_pipeline_spark.operators.dedup import dedup_against_sink
-from flight_data_pipeline_spark.session import local_frame
+from flight_data_pipeline_spark.operators.dedup import (
+    dedup_against_sink, first_per_bucket)
+from flight_data_pipeline_spark.session import checkpoint_observed, local_frame
 
 # grid_telemetry DDL analogue (etl_job.py:141-151). BIGSERIAL id is
 # omitted: Spark has no serial generator and the reference never
@@ -184,17 +185,22 @@ class TelemetrySink(ParquetSink):
 
     def append_dedup(self, df: DataFrame) -> int:
         """Append rows for not-yet-seen hours; returns rows written
-        (0 ⇒ the reference's 'skipped' status, etl_job.py:236-237)."""
-        fresh = dedup_against_sink(
-            df, self.read(), bucket=F.date_trunc("hour", F.col("timestamp"))
-        )
+        (0 ⇒ the reference's 'skipped' status, etl_job.py:236-237).
+
+        The sink read, the anti-join and the hour-window exchange run
+        once: one eager checkpoint job both materializes the fresh rows
+        and counts them, and the write reads the checkpoint, so ``n``
+        is exactly what is written. An empty batch writes no file."""
+        bucket = F.date_trunc("hour", F.col("timestamp"))
+        fresh = dedup_against_sink(df, self.read(), bucket=bucket)
         # also collapse duplicate hours *within* the batch — the
         # distributed generalization of the reference's 1-row runs
-        from flight_data_pipeline_spark.operators.dedup import first_per_bucket
-        fresh = first_per_bucket(
-            fresh, F.date_trunc("hour", F.col("timestamp")), ["timestamp"]
-        )
-        n = fresh.count()
+        fresh = first_per_bucket(fresh, bucket, ["timestamp"])
+        # localCheckpoint truncates lineage, so a lost block fails the
+        # write instead of recomputing it against a sink that may have
+        # changed since; run_pipeline audits that as a write failure
+        # and the next cron run retries
+        fresh, n = checkpoint_observed(fresh, F.count(F.lit(1)))
         if n:
             self.append(fresh)
         return n

@@ -30,7 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from flight_data_pipeline_spark.operators.quality import quality_gate
 from flight_data_pipeline_spark.pipeline import telemetry_checks
-from flight_data_pipeline_spark.session import local_frame
+from flight_data_pipeline_spark.session import checkpoint_observed, local_frame
 from flight_data_pipeline_spark.sinks import AuditSink, TelemetrySink
 from flight_data_pipeline_spark.sources.rest_json import parse_telemetry
 
@@ -100,13 +100,21 @@ def stream_telemetry(spark: SparkSession, landing_dir: str,
     the streaming form of EP1's write discipline (telemetry first,
     audit second; etl_job.py:239-267). At scale: checkpointed offsets
     + idempotent hour-dedup give effective exactly-once into the sink.
+
+    Each micro-batch's plan (its state-store stage included) runs
+    once: the batch is checkpointed with its row count observed in the
+    same job, and only a non-empty checkpoint is written. An empty
+    micro-batch writes no file and audits 'skipped'.
     """
     deduped = telemetry_stream(read_payload_stream(spark, landing_dir))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
         spark = batch_df.sparkSession
-        n = batch_df.count()
+        # localCheckpoint truncates lineage: a lost block fails this
+        # call, the micro-batch stays uncommitted, and the restarted
+        # query re-runs it from its offsets
+        batch_df, n = checkpoint_observed(batch_df, F.count(F.lit(1)))
         status = "success" if n else "skipped"
         if n:
             TelemetrySink(spark, telemetry_path).append(batch_df)

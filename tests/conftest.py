@@ -26,3 +26,30 @@ def duck():
         )
     yield con
     con.close()
+
+
+def run_observed(spark, fn):
+    """Call ``fn()`` under a fresh job group → (its result, the ids of
+    the Spark jobs it submitted, the physical plan text of each SQL
+    execution it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in executions()}
+    group = f"observed-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "run_observed")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() not in seen]
+    return out, list(sc.statusTracker().getJobIdsForGroup(group)), plans

@@ -668,6 +668,25 @@ ORDER BY 1 DESC;"""  # docs/GITHUB_ACTIONS_SETUP.md:97-105
         assert rc == 0
         assert "3" in capsys.readouterr().out
 
+    def test_statement_registers_the_fixture_it_names(self, spark, paths):
+        from flight_data_pipeline_spark.__main__ import sql_client
+        from flight_data_pipeline_spark.tables import load_table
+        from tests.conftest import SF_DIR
+
+        got = sql_client(spark, "SELECT COUNT(*) FROM lineitem", SF_DIR,
+                         *paths).first()[0]
+        assert got == load_table(spark, "lineitem", SF_DIR).count()
+
+    def test_sinks_only_statement_reads_no_fixture(self, spark, paths):
+        from flight_data_pipeline_spark.__main__ import sql_client
+        from tests.conftest import SF_DIR, run_observed
+
+        # a fixture view would cost a schema-inference job here; the
+        # never-written sinks are empty LocalRelations and cost none
+        _, jobs, _ = run_observed(
+            spark, lambda: sql_client(spark, self.SQL_TOTAL, SF_DIR, *paths))
+        assert jobs == []
+
     def test_name_and_sql_are_exclusive(self, capsys):
         from flight_data_pipeline_spark.__main__ import main
 
@@ -702,9 +721,8 @@ class TestSingleProbeAction:
         assert res.status == "success"
         assert calls["isEmpty"] == 0
         assert calls["first"] == 1
-        # (collect/count are not asserted: first() routes through
-        # collect() internally, and sinks.py legitimately counts
-        # appended rows — the reference's rows_inserted contract)
+        # (collect is not asserted: first() routes through it)
+        assert calls["count"] == 0
 
 
 class TestLocalRelationIngest:
@@ -733,7 +751,7 @@ class TestLocalRelationIngest:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert res.status == "success"
         assert before_write == []
-        # the tracker does see the run's jobs: the dedup count and writes
+        # the tracker does see the run's jobs: the dedup checkpoint and writes
         assert sc.statusTracker().getJobIdsForGroup(group)
 
     def test_batch_plans_as_local_table_scan(self, spark):
@@ -795,6 +813,65 @@ class TestLocalRelationIngest:
         audit.log_run("skipped", 0, 5)
         assert len(data_files()) == 2
         assert audit.read().count() == 2
+
+
+class TestAppendDedupWritesOnce:
+    """``append_dedup`` runs its plan once: one checkpoint job holds
+    the fresh rows and their count, and the write reads that
+    checkpoint, so ``n`` is what lands in the sink."""
+
+    @staticmethod
+    def _rows(spark, *hours):
+        import datetime as dt
+
+        from flight_data_pipeline_spark.session import local_frame
+        from flight_data_pipeline_spark.sinks import TELEMETRY_SCHEMA
+
+        return local_frame(
+            spark, [(dt.datetime(2025, 12, 9, h), 90.0, 45.5, 20.0, 25.3, 5.2)
+                    for h in hours], TELEMETRY_SCHEMA)
+
+    def test_sink_read_runs_once(self, spark, tmp_path):
+        from flight_data_pipeline_spark.operators.dedup import (
+            dedup_against_sink, first_per_bucket)
+        from tests.conftest import run_observed
+
+        sink = TelemetrySink(spark, str(tmp_path / "t"))
+        sink.append(self._rows(spark, 10))
+        batch = self._rows(spark, 10, 11, 12)
+        hour = F.date_trunc("hour", F.col("timestamp"))
+        plan = first_per_bucket(
+            dedup_against_sink(batch, sink.read(), bucket=hour),
+            hour, ["timestamp"])
+        _, plan_jobs, _ = run_observed(
+            spark, lambda: plan.write.format("noop").mode("overwrite").save())
+
+        n, jobs, plans = run_observed(spark, lambda: sink.append_dedup(batch))
+        assert n == 2 == sink.read().count() - 1
+        # the checkpoint scans the sink; the write scans the checkpoint
+        assert sum("Scan parquet" in p for p in plans) == 1
+        # the plan's jobs once, then the write's one job
+        assert len(jobs) == len(plan_jobs) + 1
+
+    @pytest.mark.parametrize("hours", [(), (10,)], ids=["empty", "all-seen"])
+    def test_nothing_fresh_returns_zero_and_writes_no_file(
+            self, spark, tmp_path, hours):
+        import threading
+
+        root = tmp_path / "t"
+        sink = TelemetrySink(spark, str(root))
+        sink.append(self._rows(spark, 10))
+        files = sorted(root.iterdir())
+        got = {}
+        t = threading.Thread(
+            target=lambda: got.update(
+                n=sink.append_dedup(self._rows(spark, *hours))),
+            daemon=True)
+        t.start()
+        t.join(120)
+        assert not t.is_alive(), "append_dedup blocked on its count"
+        assert got["n"] == 0
+        assert sorted(root.iterdir()) == files
 
 
 class TestJdbcSinkEmbeddedDerby:

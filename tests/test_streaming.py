@@ -66,6 +66,36 @@ def test_stream_dedups_within_hour_and_audits(spark, tmp_path):
     assert all(a.rows_inserted == 0 for a in audits if a.status == "skipped")
 
 
+def test_stream_runs_each_microbatch_plan_once(spark, tmp_path):
+    """A drain plans no count aggregate: each micro-batch's rows are
+    counted inside its checkpoint job. A micro-batch whose rows were
+    all seen audits 'skipped' and writes no data file."""
+    from tests.conftest import run_observed
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    tele, audit, ckpt = tmp_path / "t", tmp_path / "a", tmp_path / "c"
+
+    def drain():
+        _, _, plans = run_observed(
+            spark, lambda: run_stream(spark, landing, tele, audit, ckpt))
+        assert plans and not any("Aggregate" in p for p in plans)
+        return sorted(p.name for p in tele.iterdir()
+                      if not p.name.startswith((".", "_")))
+
+    (landing / "p1.json").write_text(payload(14, 0))
+    (landing / "p2.json").write_text(payload(15, 0))
+    files = drain()
+    n_audits = len(AuditSink(spark, str(audit)).read().collect())
+    (landing / "p3.json").write_text(payload(14, 30, actual=91))
+    assert drain() == files
+
+    audits = AuditSink(spark, str(audit)).read().collect()
+    assert len(audits) == n_audits + 1
+    got = sorted((a.status, a.rows_inserted) for a in audits)
+    assert got[-1] == ("success", 2) and set(got[:-1]) == {("skipped", 0)}
+
+
 def test_stream_flags_but_keeps_invalid_rows(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()

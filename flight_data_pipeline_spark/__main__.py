@@ -8,8 +8,9 @@ The reference runs as ``python etl_job.py`` under a cron workflow
 
 One invocation = one pipeline run (fetch → validate → dedup → load →
 audit), exiting non-zero on the failure status exactly as the workflow
-expects. Cadence stays external (cron / Airflow / the Structured
-Streaming trigger in streaming/pipeline_stream.py — SURVEY.md EP2).
+expects. Cadence stays external (cron / Airflow, which may also call
+the availableNow stream drain in streaming/pipeline_stream.py —
+SURVEY.md EP2).
 
 Also the ad-hoc query runner (EP3 parity — the reference's analytics
 surface is "any SQL client against the sink"; this is the engine's

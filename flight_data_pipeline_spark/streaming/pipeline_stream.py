@@ -15,18 +15,22 @@ streaming runtime:
   flag column, not a drop;
 - audit: per-micro-batch rows via foreachBatch — the etl_runs
   contract (etl_job.py:168-182) at micro-batch granularity;
-- cadence: trigger is configuration (availableNow for tests/backfill,
-  processingTime for the 30-min production cadence).
+- cadence: every stream is one ``availableNow`` drain (:func:`_drain`);
+  checkpointed offsets resume it, so the 30-min cadence is the
+  scheduler that calls it (etl.yml's cron), as for the batch run.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from flight_data_pipeline_spark.operators.quality import quality_gate
 from flight_data_pipeline_spark.pipeline import telemetry_checks
@@ -91,8 +95,7 @@ def telemetry_stream(raw: DataFrame) -> DataFrame:
 
 def stream_telemetry(spark: SparkSession, landing_dir: str,
                      telemetry_path: str, audit_path: str,
-                     checkpoint_dir: str,
-                     trigger_available_now: bool = True) -> StreamingQuery:
+                     checkpoint_dir: str) -> StreamingQuery:
     """End-to-end streaming pipeline: landing files → parse → validate
     (flag-don't-drop) → watermarked hour dedup → parquet sink + audit.
 
@@ -103,8 +106,11 @@ def stream_telemetry(spark: SparkSession, landing_dir: str,
 
     Each micro-batch's plan (its state-store stage included) runs
     once: the batch is checkpointed with its row count observed in the
-    same job, and only a non-empty checkpoint is written. An empty
-    micro-batch writes no file and audits 'skipped'.
+    same job, and only a non-empty checkpoint is written. A
+    micro-batch whose rows were all seen writes no file and audits
+    'skipped'. Every micro-batch reads input: the query runs no
+    watermark-only batch, which would audit a run that never happened
+    (the next input batch advances the dedup watermark instead).
     """
     deduped = telemetry_stream(read_payload_stream(spark, landing_dir))
 
@@ -121,13 +127,17 @@ def stream_telemetry(spark: SparkSession, landing_dir: str,
         AuditSink(spark, audit_path).log_run(
             status, n, int((time.time() - t0) * 1000))
 
-    writer = deduped.writeStream.foreachBatch(write_batch) \
-        .option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 minutes")  # etl.yml:5 cadence
-    return writer.start()
+    # the query reads this conf once, when it starts; the session's
+    # value comes back for every other query (the attribution join's
+    # outer modes need no-data batches to emit)
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prior = spark.conf.get(no_data)
+    spark.conf.set(no_data, "false")
+    try:
+        return _drain(deduped.writeStream.foreachBatch(write_batch),
+                      checkpoint_dir)
+    finally:
+        spark.conf.set(no_data, prior)
 
 
 def streaming_hourly_rollup(events: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -354,6 +364,12 @@ def stateful_user_stats_tws(events: DataFrame,
 _STATE_MARKER = "_applied_batch"
 
 
+def _live_dir(root: str) -> str:
+    """The live state of the store at ``root``: the dir readers load
+    and :func:`_swap_in_state` replaces."""
+    return os.path.join(root, "data")
+
+
 def _recover_state(root: str) -> None:
     """Crash recovery for the marker+swap discipline shared by the
     foreachBatch state sinks. The swap has one non-atomic window — a
@@ -365,12 +381,9 @@ def _recover_state(root: str) -> None:
     ``.old-*`` dirs are then removed. Without this, a crash in that
     window silently rebuilt state from empty, violating the
     replay-is-a-no-op contract."""
-    import os
-    import shutil
-
     if not os.path.isdir(root):
         return
-    data_dir = os.path.join(root, "data")
+    data_dir = _live_dir(root)
     olds = [e for e in os.listdir(root) if e.startswith(".old-")]
     if olds and not os.path.exists(data_dir):
         newest = max(olds, key=lambda e: int(e.rsplit("-", 1)[1]))
@@ -386,10 +399,8 @@ def _already_applied(root: str, batch_id: int) -> bool:
     travel in the same rename, so they can never disagree). Runs
     crash recovery first, so a replay after ANY crash point sees a
     consistent live dir."""
-    import os
-
     _recover_state(root)
-    marker = os.path.join(root, "data", _STATE_MARKER)
+    marker = os.path.join(_live_dir(root), _STATE_MARKER)
     if os.path.exists(marker):
         with open(marker) as fh:
             return batch_id <= int(fh.read().strip() or -1)
@@ -405,10 +416,7 @@ def _swap_in_state(root: str, batch_id: int, merged: DataFrame) -> None:
     free. At 100 TB this trio is a Delta/Iceberg ``MERGE INTO`` with a
     transaction log; the version-swap here is the minimal file-system
     twin with the same replay contract."""
-    import os
-    import shutil
-
-    data_dir = os.path.join(root, "data")
+    data_dir = _live_dir(root)
     tmp = os.path.join(root, f".tmp-{batch_id}")
     merged.write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, _STATE_MARKER), "w") as fh:
@@ -420,26 +428,74 @@ def _swap_in_state(root: str, batch_id: int, merged: DataFrame) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _fold_store(spark: SparkSession, root: str, batch_id: int,
+                step: Callable[[DataFrame | None], DataFrame]) -> bool:
+    """Fold one micro-batch into the state store at ``root`` — the
+    marker + atomic-swap + crash-recovery protocol every foreachBatch
+    store in this module goes through. Returns False, writing
+    nothing, when ``batch_id`` is already in the live state (a
+    foreachBatch replay after a crash). Otherwise publishes
+    ``step(prior)`` — ``prior`` is the live state, None before the
+    store's first batch — and returns True. ``step`` may first write
+    the batch's own side-store dir (overwrite, so a replay rewrites
+    identical bytes). A function keeping several stores folds each
+    through here, so a crash between two swaps replays exactly the
+    stores it missed."""
+    os.makedirs(root, exist_ok=True)
+    if _already_applied(root, batch_id):
+        return False
+    live = _live_dir(root)
+    prior = spark.read.parquet(live) if os.path.exists(live) else None
+    _swap_in_state(root, batch_id, step(prior))
+    return True
+
+
+def _append_step(delta: DataFrame) -> Callable[[DataFrame | None],
+                                                DataFrame]:
+    """Fold step of an append-only store: union the batch's rows in."""
+    return lambda base: delta if base is None else base.unionByName(delta)
+
+
+def _sum_step(delta: DataFrame, keys: tuple[str, ...],
+              cols: tuple[str, ...]) -> Callable[[DataFrame | None],
+                                                 DataFrame]:
+    """Fold step of a SUM-mergeable store: union the batch's partials
+    into the prior ones and re-sum ``cols`` per ``keys``."""
+    return lambda base: delta if base is None else (
+        base.unionByName(delta).groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in cols]))
+
+
+def _prior_batches(root: str, batch_id: int) -> list[str]:
+    """The ``batch=<id>`` side-store dirs under ``root`` written by
+    every batch but ``batch_id``: excluding the current batch's dir by
+    name means a replay after a crash between its side write and its
+    swap never joins the batch against itself."""
+    if not os.path.isdir(root):
+        return []
+    return [os.path.join(root, d) for d in sorted(os.listdir(root))
+            if d.startswith("batch=") and d != f"batch={batch_id}"]
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` as one availableNow drain: the query processes
+    every input present at start, then stops. Its checkpointed offsets
+    make the next drain resume where this one ended."""
+    return (writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
+
+
 def apply_rollup_delta(view_dir: str, batch_df: DataFrame,
                        batch_id: int) -> bool:
     """Idempotently MERGE one micro-batch's partial (day, event_type)
     rollup into the persistent view at ``view_dir``. Returns False
     when the batch was already applied (foreachBatch replay after a
     crash) — the merge is skipped, so partials never double-count.
-    Swap/recovery discipline: :func:`_already_applied` /
-    :func:`_swap_in_state`."""
-    import os
-
+    Store protocol: :func:`_fold_store`."""
     from flight_data_pipeline_spark.operators.relational import (
         combine_partial_aggs,
     )
 
-    os.makedirs(view_dir, exist_ok=True)
-    data_dir = os.path.join(view_dir, "data")
-    if _already_applied(view_dir, batch_id):
-        return False
-
-    spark = batch_df.sparkSession
     delta = (
         batch_df.groupBy(
             F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
@@ -448,15 +504,11 @@ def apply_rollup_delta(view_dir: str, batch_df: DataFrame,
         .agg(F.count("*").alias("n_events"),
              F.sum("value").alias("sum_value"))
     )
-    if os.path.exists(data_dir):
-        base = spark.read.parquet(data_dir)
-        merged = combine_partial_aggs(
+    return _fold_store(
+        batch_df.sparkSession, view_dir, batch_id,
+        lambda base: delta if base is None else combine_partial_aggs(
             base, delta, keys=("day", "event_type"),
-            agg_cols=("n_events", "sum_value"))
-    else:
-        merged = delta
-    _swap_in_state(view_dir, batch_id, merged)
-    return True
+            agg_cols=("n_events", "sum_value")))
 
 
 def stream_rollup_upsert(events: DataFrame, view_dir: str,
@@ -471,13 +523,9 @@ def stream_rollup_upsert(events: DataFrame, view_dir: str,
     foreachBatch + checkpointed offsets + the batch-id idempotence in
     :func:`apply_rollup_delta` give effective exactly-once on the
     view across restarts and replays."""
-    return (
-        events.writeStream
-        .foreachBatch(lambda df, bid: apply_rollup_delta(view_dir, df, bid))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events.writeStream.foreachBatch(
+        lambda df, bid: apply_rollup_delta(view_dir, df, bid)),
+        checkpoint_dir)
 
 
 def stream_enrich(events: DataFrame, dim_path: str, on: str,
@@ -501,12 +549,7 @@ def stream_enrich(events: DataFrame, dim_path: str, on: str,
             .write.mode("append").parquet(out_path)
         )
 
-    return (
-        events.writeStream.foreachBatch(enrich)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events.writeStream.foreachBatch(enrich), checkpoint_dir)
 
 
 def streaming_value_histogram(events: DataFrame, lo: float | None = None,
@@ -546,32 +589,19 @@ def apply_frequent_items_delta(summary_dir: str, batch_df: DataFrame,
     heavy-hitters summary: exact per-item batch counts Misra-Gries-
     merged (operators/sketches.mg_merge) into the stored ≤ k-counter
     state — unbounded stream, O(k) state, the item set never
-    re-scanned. Same marker + atomic-swap + crash-recovery replay
-    discipline as :func:`apply_rollup_delta` (shared
-    :func:`_already_applied` / :func:`_swap_in_state`), so a
-    foreachBatch replay after a crash at ANY point is a no-op."""
-    import os
-
+    re-scanned. Store protocol: :func:`_fold_store`."""
     from flight_data_pipeline_spark.operators.sketches import mg_merge
 
-    os.makedirs(summary_dir, exist_ok=True)
-    data_dir = os.path.join(summary_dir, "data")
-    if _already_applied(summary_dir, batch_id):
-        return False
-
-    spark = batch_df.sparkSession
     delta = (
         batch_df.select(F.col(item_col).cast("string").alias("item"))
         .groupBy("item").agg(F.count("*").alias("cnt"))
     )
-    if os.path.exists(data_dir):
-        base = spark.read.parquet(data_dir).select("item", "cnt")
-        merged = mg_merge(base, delta, k_counters)
-    else:
-        merged = mg_merge(
-            delta.limit(0), delta, k_counters)  # bound the first batch too
-    _swap_in_state(summary_dir, batch_id, merged)
-    return True
+    # an empty prior still bounds the first batch to k counters
+    return _fold_store(
+        batch_df.sparkSession, summary_dir, batch_id,
+        lambda base: mg_merge(
+            delta.limit(0) if base is None else base.select("item", "cnt"),
+            delta, k_counters))
 
 
 def stream_frequent_items(events: DataFrame, summary_dir: str,
@@ -584,14 +614,9 @@ def stream_frequent_items(events: DataFrame, summary_dir: str,
     composes across arbitrarily many batches. foreachBatch +
     checkpointed offsets + batch-id idempotence give effective
     exactly-once on the summary across restarts."""
-    return (
-        events.writeStream
-        .foreachBatch(lambda df, bid: apply_frequent_items_delta(
-            summary_dir, df, bid, item_col, k_counters))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events.writeStream.foreachBatch(
+        lambda df, bid: apply_frequent_items_delta(
+            summary_dir, df, bid, item_col, k_counters)), checkpoint_dir)
 
 
 def stream_attribution_matches(events: DataFrame,
@@ -666,15 +691,10 @@ def stream_attribution(events: DataFrame, match_dir: str,
     match log as parquet (append sink — the join is append-safe, so
     replayed batches never duplicate a match). Consumers assign
     credit over the landed log; see stream_attribution_matches."""
-    return (
+    return _drain(
         stream_attribution_matches(events, lookback_sec, watermark)
-        .writeStream
-        .format("parquet")
-        .option("path", match_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        .writeStream.format("parquet").option("path", match_dir),
+        checkpoint_dir)
 
 
 def apply_hll_delta(registers_dir: str, batch_df: DataFrame,
@@ -687,20 +707,11 @@ def apply_hll_delta(registers_dir: str, batch_df: DataFrame,
     the batch's (group, bucket, rho-max) registers merge into the
     stored table by MAX, which is associative, commutative, and
     idempotent — O(m) state per group forever, any replay shape
-    safe. Same marker + atomic-swap + crash-recovery discipline
-    (:func:`_already_applied` / :func:`_swap_in_state`)."""
-    import os
-
+    safe. Store protocol: :func:`_fold_store`."""
     from flight_data_pipeline_spark.operators.sketches import (
         _hll_bucket_rho,
     )
 
-    os.makedirs(registers_dir, exist_ok=True)
-    data_dir = os.path.join(registers_dir, "data")
-    if _already_applied(registers_dir, batch_id):
-        return False
-
-    spark = batch_df.sparkSession
     gcols = list(group_cols)
     bucket, rho = _hll_bucket_rho(F.col(item_col))
     delta = (
@@ -708,17 +719,12 @@ def apply_hll_delta(registers_dir: str, batch_df: DataFrame,
         .groupBy(*gcols, "b")
         .agg(F.max("rho").alias("r"))
     )
-    if os.path.exists(data_dir):
-        base = spark.read.parquet(data_dir).select(*gcols, "b", "r")
-        merged = (
-            base.unionByName(delta.withColumnRenamed("r", "r"))
+    return _fold_store(
+        batch_df.sparkSession, registers_dir, batch_id,
+        lambda base: delta if base is None else (
+            base.select(*gcols, "b", "r").unionByName(delta)
             .groupBy(*gcols, "b")
-            .agg(F.max("r").alias("r"))
-        )
-    else:
-        merged = delta
-    _swap_in_state(registers_dir, batch_id, merged)
-    return True
+            .agg(F.max("r").alias("r"))))
 
 
 def stream_distinct_registers(events: DataFrame, registers_dir: str,
@@ -733,14 +739,9 @@ def stream_distinct_registers(events: DataFrame, registers_dir: str,
     the shape a 100 TB dedupe/reach dashboard needs. foreachBatch +
     checkpointed offsets + batch-id idempotence give effective
     exactly-once on the registers across restarts."""
-    return (
-        events.writeStream
-        .foreachBatch(lambda df, bid: apply_hll_delta(
-            registers_dir, df, bid, item_col, group_cols))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events.writeStream.foreachBatch(
+        lambda df, bid: apply_hll_delta(
+            registers_dir, df, bid, item_col, group_cols)), checkpoint_dir)
 
 
 def apply_attribution_credits_delta(state_dir: str, batch_df: DataFrame,
@@ -755,61 +756,53 @@ def apply_attribution_credits_delta(state_dir: str, batch_df: DataFrame,
     Layout under ``state_dir``: ``matches/batch=<id>/`` holds each
     micro-batch's matches (mode=overwrite per batch dir, so a replay
     rewrites identical bytes — idempotent by construction), and
-    ``credits/`` is the per-(pid, day, touch_type) credit table under
-    the shared marker+swap+recovery discipline. Work per trigger is
+    ``credits/`` is the per-(pid, day, touch_type) credit table
+    (store protocol: :func:`_fold_store`). Work per trigger is
     O(affected purchases' matches + credit-table anti join), never a
     full recompute; consumers aggregate the table to the
     (day, touch_type) view, which equals the batch
     multi_touch_attribution on the same events (pinned in tests)."""
-    import os
-
-    credits_root = os.path.join(state_dir, "credits")
-    os.makedirs(credits_root, exist_ok=True)
-    if _already_applied(credits_root, batch_id):
-        return False
-
-    spark = batch_df.sparkSession
-    match_dir = os.path.join(state_dir, "matches", f"batch={batch_id}")
-    batch_df.write.mode("overwrite").parquet(match_dir)
-
-    log = spark.read.parquet(os.path.join(state_dir, "matches"))
-    affected = batch_df.select("pid").distinct()
-    aff = log.join(F.broadcast(affected), "pid", "left_semi")
-
     from pyspark.sql import Window
 
-    w = Window.partitionBy("pid")
-    rk = F.row_number().over(w.orderBy("vts", "vid"))
-    n = F.count("*").over(w)
-    ranked = aff.select("pid", "pts", "touch_type",
-                        rk.alias("rk"), n.alias("n"))
-    # exact integer micro-credits — the batch query's discipline
-    credit_e6 = (
-        F.when(F.col("n") == 1, F.lit(1_000_000))
-        .when(F.col("n") == 2, F.lit(500_000))
-        .when((F.col("rk") == 1) | (F.col("rk") == F.col("n")),
-              F.lit(400_000))
-        .otherwise(F.floor(F.lit(200000.0) / (F.col("n") - 2))
-                   .cast("long"))
-    )
-    fresh = (
-        ranked.groupBy(
-            "pid",
-            F.date_format(F.col("pts").cast("date"), "yyyy-MM-dd")
-            .alias("day"),
-            "touch_type")
-        .agg(F.sum(credit_e6).alias("credit_e6"),
-             F.count("*").alias("n_touches"))
-    )
-    data_dir = os.path.join(credits_root, "data")
-    if os.path.exists(data_dir):
-        base = spark.read.parquet(data_dir)
-        merged = base.join(F.broadcast(affected), "pid", "left_anti") \
+    spark = batch_df.sparkSession
+
+    def step(base: DataFrame | None) -> DataFrame:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(state_dir, "matches", f"batch={batch_id}"))
+        log = spark.read.parquet(os.path.join(state_dir, "matches"))
+        affected = batch_df.select("pid").distinct()
+        aff = log.join(F.broadcast(affected), "pid", "left_semi")
+
+        w = Window.partitionBy("pid")
+        rk = F.row_number().over(w.orderBy("vts", "vid"))
+        n = F.count("*").over(w)
+        ranked = aff.select("pid", "pts", "touch_type",
+                            rk.alias("rk"), n.alias("n"))
+        # exact integer micro-credits — the batch query's discipline
+        credit_e6 = (
+            F.when(F.col("n") == 1, F.lit(1_000_000))
+            .when(F.col("n") == 2, F.lit(500_000))
+            .when((F.col("rk") == 1) | (F.col("rk") == F.col("n")),
+                  F.lit(400_000))
+            .otherwise(F.floor(F.lit(200000.0) / (F.col("n") - 2))
+                       .cast("long"))
+        )
+        fresh = (
+            ranked.groupBy(
+                "pid",
+                F.date_format(F.col("pts").cast("date"), "yyyy-MM-dd")
+                .alias("day"),
+                "touch_type")
+            .agg(F.sum(credit_e6).alias("credit_e6"),
+                 F.count("*").alias("n_touches"))
+        )
+        if base is None:
+            return fresh
+        return base.join(F.broadcast(affected), "pid", "left_anti") \
             .unionByName(fresh)
-    else:
-        merged = fresh
-    _swap_in_state(credits_root, batch_id, merged)
-    return True
+
+    return _fold_store(spark, os.path.join(state_dir, "credits"),
+                       batch_id, step)
 
 
 def stream_attribution_credits(events: DataFrame, state_dir: str,
@@ -823,15 +816,12 @@ def stream_attribution_credits(events: DataFrame, state_dir: str,
     exactly-once; credits converge to the batch answer as each
     purchase's window fills — the streaming twin of
     multi_touch_attribution with replay-safe state."""
-    return (
+    return _drain(
         stream_attribution_matches(events, lookback_sec, watermark)
-        .writeStream
-        .foreachBatch(lambda df, bid: apply_attribution_credits_delta(
-            state_dir, df, bid))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        .writeStream.foreachBatch(
+            lambda df, bid: apply_attribution_credits_delta(
+                state_dir, df, bid)),
+        checkpoint_dir)
 
 
 def apply_lsh_dedup_delta(state_dir: str, batch_df: DataFrame,
@@ -851,73 +841,62 @@ def apply_lsh_dedup_delta(state_dir: str, batch_df: DataFrame,
     bytes; probes exclude the current batch's dir, so a replay after
     a crash between bucket write and flag swap never self-matches)
     and ``flags/`` — the cumulative (doc, n_candidates, is_near_dup)
-    table under the shared marker+swap+recovery discipline.
+    table (store protocol: :func:`_fold_store`).
 
     Scale: per trigger the probe joins batch keys against the store
     on band key — collision-bounded like the batch LSH (never
     pairs²); the store grows by one bounded relation per batch and
     its dirs compact like any append table."""
-    import os
-
     from flight_data_pipeline_spark.operators.dedup import (
         lsh_band_keys,
         minhash_signatures,
     )
 
-    flags_root = os.path.join(state_dir, "flags")
-    os.makedirs(flags_root, exist_ok=True)
-    if _already_applied(flags_root, batch_id):
-        return False
-
     spark = batch_df.sparkSession
-    sigs = minhash_signatures(batch_df, id_col, text_col,
-                              num_hashes=num_hashes,
-                              shingle_size=shingle_size)
-    keys = sigs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(lsh_band_keys(F.col("sig"), bands,
-                                num_hashes // bands)).alias("bk"),
-    ).distinct()
 
-    bucket_root = os.path.join(state_dir, "buckets")
-    os.makedirs(bucket_root, exist_ok=True)
-    prior_dirs = [
-        os.path.join(bucket_root, d) for d in sorted(os.listdir(bucket_root))
-        if d.startswith("batch=") and d != f"batch={batch_id}"
-    ]
-    cross = (
-        keys.join(spark.read.parquet(*prior_dirs)
-                  .select(F.col("doc").alias("__prior"), "bk"), "bk")
-        .select("doc", F.col("__prior").alias("partner"))
-        if prior_dirs else keys.limit(0).select(
-            "doc", F.col("doc").alias("partner"))
-    )
-    intra = (
-        keys.join(keys.select(F.col("doc").alias("__other"), "bk"), "bk")
-        .where(F.col("__other") < F.col("doc"))
-        .select("doc", F.col("__other").alias("partner"))
-    )
-    cands = cross.unionByName(intra).distinct()
-    fresh = (
-        batch_df.select(F.col(id_col).alias("doc"))
-        .join(cands.groupBy("doc")
-              .agg(F.count("*").alias("n_candidates")), "doc", "left")
-        .select(
-            "doc",
-            F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
-            (F.coalesce("n_candidates", F.lit(0)) > 0)
-            .alias("is_near_dup"),
+    def step(base: DataFrame | None) -> DataFrame:
+        sigs = minhash_signatures(batch_df, id_col, text_col,
+                                  num_hashes=num_hashes,
+                                  shingle_size=shingle_size)
+        keys = sigs.select(
+            F.col(id_col).alias("doc"),
+            F.explode(lsh_band_keys(F.col("sig"), bands,
+                                    num_hashes // bands)).alias("bk"),
+        ).distinct()
+
+        bucket_root = os.path.join(state_dir, "buckets")
+        prior_dirs = _prior_batches(bucket_root, batch_id)
+        cross = (
+            keys.join(spark.read.parquet(*prior_dirs)
+                      .select(F.col("doc").alias("__prior"), "bk"), "bk")
+            .select("doc", F.col("__prior").alias("partner"))
+            if prior_dirs else keys.limit(0).select(
+                "doc", F.col("doc").alias("partner"))
         )
-    )
-    keys.write.mode("overwrite").parquet(
-        os.path.join(bucket_root, f"batch={batch_id}"))
-    data_dir = os.path.join(flags_root, "data")
-    if os.path.exists(data_dir):
-        merged = spark.read.parquet(data_dir).unionByName(fresh)
-    else:
-        merged = fresh
-    _swap_in_state(flags_root, batch_id, merged)
-    return True
+        intra = (
+            keys.join(keys.select(F.col("doc").alias("__other"), "bk"),
+                      "bk")
+            .where(F.col("__other") < F.col("doc"))
+            .select("doc", F.col("__other").alias("partner"))
+        )
+        cands = cross.unionByName(intra).distinct()
+        fresh = (
+            batch_df.select(F.col(id_col).alias("doc"))
+            .join(cands.groupBy("doc")
+                  .agg(F.count("*").alias("n_candidates")), "doc", "left")
+            .select(
+                "doc",
+                F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
+                (F.coalesce("n_candidates", F.lit(0)) > 0)
+                .alias("is_near_dup"),
+            )
+        )
+        keys.write.mode("overwrite").parquet(
+            os.path.join(bucket_root, f"batch={batch_id}"))
+        return fresh if base is None else base.unionByName(fresh)
+
+    return _fold_store(spark, os.path.join(state_dir, "flags"), batch_id,
+                       step)
 
 
 def stream_near_dup_flags(docs: DataFrame, state_dir: str,
@@ -927,14 +906,9 @@ def stream_near_dup_flags(docs: DataFrame, state_dir: str,
     (see apply_lsh_dedup_delta). foreachBatch + checkpointed offsets
     + batch-id idempotence: every doc is flagged exactly once against
     the corpus that preceded it."""
-    return (
-        docs.writeStream
-        .foreachBatch(lambda df, bid: apply_lsh_dedup_delta(
-            state_dir, df, bid, **lsh_kwargs))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs.writeStream.foreachBatch(
+        lambda df, bid: apply_lsh_dedup_delta(
+            state_dir, df, bid, **lsh_kwargs)), checkpoint_dir)
 
 
 def apply_corpus_intake_delta(state_dir: str, batch_df: DataFrame,
@@ -949,37 +923,32 @@ def apply_corpus_intake_delta(state_dir: str, batch_df: DataFrame,
     -gated (operators/text.quality_band — flag-don't-drop), and
     (3) folded into two stores: the cumulative per-doc DECISION table
     and the per-source funnel COUNTS (SUM-mergeable, so the funnel
-    is a partial-aggregate merge, never a rescan). Everything rides
-    the shared marker+swap+recovery discipline; a doc admitted once
-    can never be retro-rejected by later arrivals (arrival order IS
-    the keep-min rule — the first copy wins, its later near-dups are
-    rejected, exactly the batch keep-min convention under
-    arrival-ordered ids)."""
-    import os
-
+    is a partial-aggregate merge, never a rescan). Each of the three
+    stores folds through :func:`_fold_store`, so a replay after a crash
+    between two swaps completes the stores the crash left behind; a
+    doc admitted once can never be retro-rejected by later arrivals
+    (arrival order IS the keep-min rule — the first copy wins, its
+    later near-dups are rejected, exactly the batch keep-min
+    convention under arrival-ordered ids). Returns True when any
+    store took the batch."""
     from flight_data_pipeline_spark.operators.text import quality_band
 
-    decisions_root = os.path.join(state_dir, "decisions")
-    os.makedirs(decisions_root, exist_ok=True)
-    if _already_applied(decisions_root, batch_id):
-        return False
-
     spark = batch_df.sparkSession
-    flagged = batch_df.select(
-        F.col(id_col).alias("doc"),
-        F.col(source_col).alias("source"),
-        (quality_band(F.col(text_col)) == "good").alias("quality_ok"),
-    )
     # near-dup flags vs corpus-so-far: reuse the LSH delta's bucket
     # store + probe by running it against a sibling root (it swaps its
-    # own flags table; we join it for this batch's docs)
+    # own flags table, which then holds this batch's docs)
     lsh_state = os.path.join(state_dir, "lsh")
     applied = apply_lsh_dedup_delta(lsh_state, batch_df, batch_id,
                                     id_col=id_col, text_col=text_col)
     lsh_flags = spark.read.parquet(
-        os.path.join(lsh_state, "flags", "data"))
+        _live_dir(os.path.join(lsh_state, "flags")))
     fresh = (
-        flagged.join(lsh_flags.select("doc", "is_near_dup"), "doc")
+        batch_df.select(
+            F.col(id_col).alias("doc"),
+            F.col(source_col).alias("source"),
+            (quality_band(F.col(text_col)) == "good").alias("quality_ok"),
+        )
+        .join(lsh_flags.select("doc", "is_near_dup"), "doc")
         .select(
             "doc", "source", "quality_ok",
             F.col("is_near_dup").alias("dup"),
@@ -987,41 +956,24 @@ def apply_corpus_intake_delta(state_dir: str, batch_df: DataFrame,
             .alias("accepted"),
         )
     )
-    data_dir = os.path.join(decisions_root, "data")
-    if os.path.exists(data_dir):
-        merged = spark.read.parquet(data_dir).unionByName(fresh)
-    else:
-        merged = fresh
-    _swap_in_state(decisions_root, batch_id, merged)
+    applied |= _fold_store(spark, os.path.join(state_dir, "decisions"),
+                           batch_id, _append_step(fresh))
 
     # per-source funnel counts: SUM-mergeable partials
-    funnel_root = os.path.join(state_dir, "funnel")
-    os.makedirs(funnel_root, exist_ok=True)
-    if not _already_applied(funnel_root, batch_id):
-        delta = (
-            fresh.groupBy("source")
-            .agg(F.count("*").alias("n_docs"),
-                 F.sum(F.when(F.col("dup"), 1).otherwise(0))
-                 .alias("n_dups"),
-                 F.sum(F.when(~F.col("quality_ok"), 1).otherwise(0))
-                 .alias("n_low_quality"),
-                 F.sum(F.when(F.col("accepted"), 1).otherwise(0))
-                 .alias("n_accepted"))
-        )
-        fdata = os.path.join(funnel_root, "data")
-        if os.path.exists(fdata):
-            base = spark.read.parquet(fdata)
-            fmerged = (
-                base.unionByName(delta)
-                .groupBy("source")
-                .agg(F.sum("n_docs").alias("n_docs"),
-                     F.sum("n_dups").alias("n_dups"),
-                     F.sum("n_low_quality").alias("n_low_quality"),
-                     F.sum("n_accepted").alias("n_accepted"))
-            )
-        else:
-            fmerged = delta
-        _swap_in_state(funnel_root, batch_id, fmerged)
+    delta = (
+        fresh.groupBy("source")
+        .agg(F.count("*").alias("n_docs"),
+             F.sum(F.when(F.col("dup"), 1).otherwise(0))
+             .alias("n_dups"),
+             F.sum(F.when(~F.col("quality_ok"), 1).otherwise(0))
+             .alias("n_low_quality"),
+             F.sum(F.when(F.col("accepted"), 1).otherwise(0))
+             .alias("n_accepted"))
+    )
+    applied |= _fold_store(
+        spark, os.path.join(state_dir, "funnel"), batch_id,
+        _sum_step(delta, ("source",),
+                  ("n_docs", "n_dups", "n_low_quality", "n_accepted")))
     return applied
 
 
@@ -1032,14 +984,9 @@ def stream_corpus_intake(docs: DataFrame, state_dir: str,
     batch curated_training_mix flagship: decisions and funnel counts
     stay current per micro-batch at delta cost, never a corpus
     rescan."""
-    return (
-        docs.writeStream
-        .foreachBatch(lambda df, bid: apply_corpus_intake_delta(
-            state_dir, df, bid))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs.writeStream.foreachBatch(
+        lambda df, bid: apply_corpus_intake_delta(state_dir, df, bid)),
+        checkpoint_dir)
 
 
 
@@ -1058,9 +1005,6 @@ def quarantine_malformed(spark: SparkSession, landing_dir: str,
     Plan: the probe is the same projection the stream parses with,
     evaluated distributively; only the quarantine-sized FILE LIST
     reaches the driver for the copies."""
-    import os
-    import shutil
-
     raw = (
         spark.read.format("text").option("wholetext", True)
         .load(landing_dir)
@@ -1100,8 +1044,6 @@ def reprocess_dead_letters(spark: SparkSession, dlq_dir: str,
     still-unparseable files stay quarantined. One audit row records
     the attempt. Returns {"recovered_rows", "recovered_files",
     "still_dead"}."""
-    import os
-
     files = [f for f in sorted(os.listdir(dlq_dir))
              if not f.endswith(".reason")]
     if not files:
@@ -1171,8 +1113,8 @@ def apply_join_ivm_delta(state_dir: str, batch_df: DataFrame,
     ``dims/batch=<id>/`` side stores (overwrite per batch dir —
     replay rewrites identical bytes; the three delta terms read only
     PRIOR batch dirs, so a crash-then-replay never double-joins), and
-    ``view/`` — the (segment, n_orders, cents) aggregate under the
-    shared marker+swap+recovery discipline.
+    ``view/`` — the (segment, n_orders, cents) aggregate (store
+    protocol: :func:`_fold_store`).
 
     Scale: per trigger the three terms shuffle only ``|ΔF| + |ΔD| +
     matched-prior rows`` on the join key (the stores are key-stored
@@ -1180,16 +1122,9 @@ def apply_join_ivm_delta(state_dir: str, batch_df: DataFrame,
     prior-side probes partition-local); the view merge is
     summary-sized. The full-history F ⋈ D is never recomputed — that
     is the point of IVM."""
-    import os
-
     from flight_data_pipeline_spark.operators.relational import (
         combine_partial_aggs,
     )
-
-    view_root = os.path.join(state_dir, "view")
-    os.makedirs(view_root, exist_ok=True)
-    if _already_applied(view_root, batch_id):
-        return False
 
     spark = batch_df.sparkSession
     d_facts = (batch_df.where(F.col("side") == "fact")
@@ -1198,40 +1133,34 @@ def apply_join_ivm_delta(state_dir: str, batch_df: DataFrame,
               .select("k", "segment"))
 
     def prior(kind: str, cols: str) -> DataFrame:
-        root = os.path.join(state_dir, kind)
-        os.makedirs(root, exist_ok=True)
-        dirs = [os.path.join(root, d) for d in sorted(os.listdir(root))
-                if d.startswith("batch=") and d != f"batch={batch_id}"]
+        dirs = _prior_batches(os.path.join(state_dir, kind), batch_id)
         if dirs:
             return spark.read.parquet(*dirs)
         return local_frame(spark, [], cols)
 
-    f_old = prior("facts", "k long, cents long")
-    d_old = prior("dims", "k long, segment string")
+    def step(base: DataFrame | None) -> DataFrame:
+        f_old = prior("facts", "k long, cents long")
+        d_old = prior("dims", "k long, segment string")
+        delta_join = (
+            d_facts.join(d_old, "k")                  # ΔF ⋈ D_old
+            .unionByName(f_old.join(d_dims, "k"))     # F_old ⋈ ΔD
+            .unionByName(d_facts.join(d_dims, "k"))   # ΔF ⋈ ΔD
+        )
+        delta = (delta_join.groupBy("segment")
+                 .agg(F.count("*").alias("n_orders"),
+                      F.sum("cents").alias("cents")))
 
-    delta_join = (
-        d_facts.join(d_old, "k")                  # ΔF ⋈ D_old
-        .unionByName(f_old.join(d_dims, "k"))     # F_old ⋈ ΔD
-        .unionByName(d_facts.join(d_dims, "k"))   # ΔF ⋈ ΔD
-    )
-    delta = (delta_join.groupBy("segment")
-             .agg(F.count("*").alias("n_orders"),
-                  F.sum("cents").alias("cents")))
+        d_facts.write.mode("overwrite").parquet(
+            os.path.join(state_dir, "facts", f"batch={batch_id}"))
+        d_dims.write.mode("overwrite").parquet(
+            os.path.join(state_dir, "dims", f"batch={batch_id}"))
+        if base is None:
+            return delta
+        return combine_partial_aggs(base, delta, keys=("segment",),
+                                    agg_cols=("n_orders", "cents"))
 
-    d_facts.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "facts", f"batch={batch_id}"))
-    d_dims.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "dims", f"batch={batch_id}"))
-
-    data_dir = os.path.join(view_root, "data")
-    if os.path.exists(data_dir):
-        merged = combine_partial_aggs(
-            spark.read.parquet(data_dir), delta,
-            keys=("segment",), agg_cols=("n_orders", "cents"))
-    else:
-        merged = delta
-    _swap_in_state(view_root, batch_id, merged)
-    return True
+    return _fold_store(spark, os.path.join(state_dir, "view"), batch_id,
+                       step)
 
 
 def stream_join_ivm(feed: DataFrame, state_dir: str,
@@ -1241,14 +1170,9 @@ def stream_join_ivm(feed: DataFrame, state_dir: str,
     batch-id idempotence: the maintained per-segment aggregate equals
     a full recompute over every fact/dim row delivered so far, with
     late-arriving dimension rows healing their waiting facts."""
-    return (
-        feed.writeStream
-        .foreachBatch(lambda df, bid: apply_join_ivm_delta(
-            state_dir, df, bid))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(feed.writeStream.foreachBatch(
+        lambda df, bid: apply_join_ivm_delta(state_dir, df, bid)),
+        checkpoint_dir)
 
 
 def apply_day_user_delta(state_dir: str, batch_df: DataFrame,
@@ -1265,20 +1189,11 @@ def apply_day_user_delta(state_dir: str, batch_df: DataFrame,
     big). State grows with |days| × |active users/day| — the same
     grain the batch query (sliding_7d_distinct_users) reduces to
     before ITS window, so the stream holds nothing the batch plan
-    wouldn't materialize anyway. Same marker + atomic-swap +
-    crash-recovery discipline as every store in this module."""
-    import os
-
+    wouldn't materialize anyway. Store protocol: :func:`_fold_store`."""
     from flight_data_pipeline_spark.functions.scalars import (
         to_epoch_seconds,
     )
 
-    os.makedirs(state_dir, exist_ok=True)
-    data_dir = os.path.join(state_dir, "data")
-    if _already_applied(state_dir, batch_id):
-        return False
-
-    spark = batch_df.sparkSession
     delta = (
         batch_df.select(
             F.expr(f"CAST({ts_col} AS TIMESTAMP)").alias("__ts"),
@@ -1287,13 +1202,10 @@ def apply_day_user_delta(state_dir: str, batch_df: DataFrame,
         .select(F.expr("__es div 86400").alias("d"), "user_id")
         .distinct()
     )
-    if os.path.exists(data_dir):
-        base = spark.read.parquet(data_dir).select("d", "user_id")
-        merged = base.unionByName(delta).distinct()
-    else:
-        merged = delta
-    _swap_in_state(state_dir, batch_id, merged)
-    return True
+    return _fold_store(
+        batch_df.sparkSession, state_dir, batch_id,
+        lambda base: delta if base is None else
+        base.select("d", "user_id").unionByName(delta).distinct())
 
 
 def sliding_distinct_users_view(spark: SparkSession, state_dir: str,
@@ -1305,7 +1217,7 @@ def sliding_distinct_users_view(spark: SparkSession, state_dir: str,
     distinct aggregate), so stream-maintained state and batch
     recompute are pinned equal by construction, reading day-grain
     state instead of raw events."""
-    du = spark.read.parquet(state_dir + "/data")
+    du = spark.read.parquet(_live_dir(state_dir))
     days = du.select("d").distinct()
     contrib = du.select(
         F.explode(F.sequence(F.col("d"),
@@ -1328,14 +1240,9 @@ def stream_sliding_distinct(events: DataFrame, state_dir: str,
     persistent store; consumers call sliding_distinct_users_view at
     any time. foreachBatch + checkpointed offsets + batch-id
     idempotence give effective exactly-once across restarts."""
-    return (
-        events.writeStream
-        .foreachBatch(lambda df, bid: apply_day_user_delta(
-            state_dir, df, bid, ts_col, user_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(events.writeStream.foreachBatch(
+        lambda df, bid: apply_day_user_delta(
+            state_dir, df, bid, ts_col, user_col)), checkpoint_dir)
 
 
 def apply_posting_delta(index_dir: str, batch_df: DataFrame,
@@ -1344,8 +1251,8 @@ def apply_posting_delta(index_dir: str, batch_df: DataFrame,
     """Idempotently fold one micro-batch of (immutable, append-only)
     documents into a persistent BM25 POSTING-LIST INDEX: two stores
     under ``index_dir`` — ``postings`` (term, doc_id, tf) and
-    ``doclen`` (doc_id, dl) — each with its own marker + atomic-swap
-    + crash-recovery state. A crash between the two swaps leaves one
+    ``doclen`` (doc_id, dl) — each its own store
+    (:func:`_fold_store`). A crash between the two swaps leaves one
     store applied; on replay, its batch-id marker makes its re-apply
     a no-op while the other catches up — the pair converges under any
     replay shape because documents are append-only (new doc_ids
@@ -1354,8 +1261,6 @@ def apply_posting_delta(index_dir: str, batch_df: DataFrame,
     This is incremental SEARCH-INDEX maintenance: the corpus is read
     once as it arrives, and query-time work touches only the queried
     terms' posting lists — never the corpus."""
-    import os
-
     from flight_data_pipeline_spark.operators.text import tokens
 
     applied = False
@@ -1369,18 +1274,9 @@ def apply_posting_delta(index_dir: str, batch_df: DataFrame,
         ("doclen",
          toks.groupBy("doc_id").agg(F.count("*").alias("dl"))),
     ):
-        root = os.path.join(index_dir, sub)
-        os.makedirs(root, exist_ok=True)
-        if _already_applied(root, batch_id):
-            continue
-        data_dir = os.path.join(root, "data")
-        if os.path.exists(data_dir):
-            base = batch_df.sparkSession.read.parquet(data_dir)
-            merged = base.unionByName(delta)
-        else:
-            merged = delta
-        _swap_in_state(root, batch_id, merged)
-        applied = True
+        applied |= _fold_store(batch_df.sparkSession,
+                               os.path.join(index_dir, sub), batch_id,
+                               _append_step(delta))
     return applied
 
 
@@ -1399,8 +1295,8 @@ def bm25_topk_from_index(spark: SparkSession, index_dir: str,
         bm25_term_score_micro,
     )
 
-    postings = spark.read.parquet(index_dir + "/postings/data")
-    dl = spark.read.parquet(index_dir + "/doclen/data")
+    postings = spark.read.parquet(_live_dir(index_dir + "/postings"))
+    dl = spark.read.parquet(_live_dir(index_dir + "/doclen"))
     corpus = dl.agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
     tf = postings.where(F.col("term").isin(*terms))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -1429,14 +1325,9 @@ def stream_bm25_index(docs: DataFrame, index_dir: str,
     stream: foreachBatch + checkpointed offsets + per-store batch-id
     idempotence give effective exactly-once on both index tables
     across restarts."""
-    return (
-        docs.writeStream
-        .foreachBatch(lambda df, bid: apply_posting_delta(
-            index_dir, df, bid, id_col, text_col))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(docs.writeStream.foreachBatch(
+        lambda df, bid: apply_posting_delta(
+            index_dir, df, bid, id_col, text_col)), checkpoint_dir)
 
 
 def apply_rank_delta(state_dir: str, batch_df: DataFrame,
@@ -1447,9 +1338,9 @@ def apply_rank_delta(state_dir: str, batch_df: DataFrame,
     other extension tier already has one: rollups, heavy hitters,
     HLL, BM25 index, LSH dedup, attribution, join-IVM).
 
-    Two stores under ``state_dir``, each with its own marker +
-    atomic-swap + crash-recovery state (the apply_posting_delta
-    two-store shape): ``edges`` (s, d, w — weights summed per edge as
+    Two stores under ``state_dir``, each its own
+    :func:`_fold_store` (the apply_posting_delta two-store shape):
+    ``edges`` (s, d, w — weights summed per edge as
     deltas fold in) and ``ranks`` (v, rank — the maintained
     snapshot). Per batch: merge the edge delta, then re-run the float
     :func:`~flight_data_pipeline_spark.operators.graph.pagerank`
@@ -1466,8 +1357,6 @@ def apply_rank_delta(state_dir: str, batch_df: DataFrame,
     skips the recompute — fully idempotent. A crash between the two
     swaps replays safely: edges skip, ranks re-converge over the
     already-merged edge set (same fixed point)."""
-    import os
-
     from flight_data_pipeline_spark.operators.graph import pagerank
 
     spark = batch_df.sparkSession
@@ -1476,42 +1365,22 @@ def apply_rank_delta(state_dir: str, batch_df: DataFrame,
                         F.col("w").cast("double").alias("w"))
         .groupBy("s", "d").agg(F.sum("w").alias("w"))
     )
-    applied = False
-
     eroot = os.path.join(state_dir, "edges")
-    os.makedirs(eroot, exist_ok=True)
-    if not _already_applied(eroot, batch_id):
-        edata = os.path.join(eroot, "data")
-        if os.path.exists(edata):
-            merged = (
-                spark.read.parquet(edata).unionByName(delta)
-                .groupBy("s", "d").agg(F.sum("w").alias("w"))
-            )
-        else:
-            merged = delta
-        _swap_in_state(eroot, batch_id, merged)
-        applied = True
-
-    rroot = os.path.join(state_dir, "ranks")
-    os.makedirs(rroot, exist_ok=True)
-    if not _already_applied(rroot, batch_id):
-        edges = spark.read.parquet(os.path.join(eroot, "data"))
-        rdata = os.path.join(rroot, "data")
-        prev = spark.read.parquet(rdata) if os.path.exists(rdata) else None
-        ranks = pagerank(edges, src="s", dst="d", weight="w",
-                         damping=damping, max_iter=max_rounds, tol=tol,
-                         init_ranks=prev)
-        _swap_in_state(rroot, batch_id, ranks)
-        applied = True
+    applied = _fold_store(spark, eroot, batch_id,
+                          _sum_step(delta, ("s", "d"), ("w",)))
+    applied |= _fold_store(
+        spark, os.path.join(state_dir, "ranks"), batch_id,
+        lambda prev: pagerank(
+            spark.read.parquet(_live_dir(eroot)), src="s", dst="d",
+            weight="w", damping=damping, max_iter=max_rounds, tol=tol,
+            init_ranks=prev))
     return applied
 
 
 def rank_snapshot(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the maintained (v, rank) PageRank snapshot — query cost is
     node-sized, never touching the edge store."""
-    import os
-
-    return spark.read.parquet(os.path.join(state_dir, "ranks", "data"))
+    return spark.read.parquet(_live_dir(os.path.join(state_dir, "ranks")))
 
 
 def stream_rank_maintenance(edge_deltas: DataFrame, state_dir: str,
@@ -1521,14 +1390,9 @@ def stream_rank_maintenance(edge_deltas: DataFrame, state_dir: str,
     stream: foreachBatch + checkpointed offsets + per-store batch-id
     idempotence give effective exactly-once on the rank snapshot
     across restarts and replays."""
-    return (
-        edge_deltas.writeStream
-        .foreachBatch(lambda df, bid: apply_rank_delta(
-            state_dir, df, bid, damping))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(edge_deltas.writeStream.foreachBatch(
+        lambda df, bid: apply_rank_delta(state_dir, df, bid, damping)),
+        checkpoint_dir)
 
 
 def apply_cluster_map_delta(state_dir: str, batch_df: DataFrame,
@@ -1559,69 +1423,63 @@ def apply_cluster_map_delta(state_dir: str, batch_df: DataFrame,
     The maintained map is the same (doc, cluster) table
     `leakage_safe_split_materialized` reads, so the leakage-safe
     split's input stays fresh without ever re-running CC over the
-    corpus. Marker + atomic-swap + batch-id idempotence as all the
-    sibling stores; converge-to-batch and replay no-op are pinned in
-    tests/test_streaming.py."""
-    import os
-
+    corpus (store protocol: :func:`_fold_store`); converge-to-batch
+    and replay no-op are pinned in tests/test_streaming.py."""
     from flight_data_pipeline_spark.operators.dedup import (
         connected_components,
     )
 
     spark = batch_df.sparkSession
-    root = os.path.join(state_dir, "clusters")
-    os.makedirs(root, exist_ok=True)
-    if _already_applied(root, batch_id):
-        return False
-
     delta = (batch_df.select(F.col(src).alias("a"), F.col(dst).alias("b"))
              .where(F.col("a") != F.col("b")).distinct())
-    data = os.path.join(root, "data")
-    cmap = (spark.read.parquet(data) if os.path.exists(data)
-            else local_frame(spark, [], "doc long, cluster long"))
 
-    # contract: endpoint → current cluster (self if unmapped)
-    contracted = (
-        delta
-        .join(cmap.select(F.col("doc").alias("a"),
-                          F.col("cluster").alias("ca")), "a", "left")
-        .join(cmap.select(F.col("doc").alias("b"),
-                          F.col("cluster").alias("cb")), "b", "left")
-        .select(F.coalesce("ca", F.col("a")).alias("s"),
-                F.coalesce("cb", F.col("b")).alias("d"))
-        .where(F.col("s") != F.col("d"))
-    )
-    # merge mapping over the contracted (delta-sized) graph
-    mapping = (connected_components(contracted, src="s", dst="d")
-               .select(F.col("v").alias("old_label"),
-                       F.col("label").alias("new_label")))
+    def step(cmap: DataFrame | None) -> DataFrame:
+        if cmap is None:
+            cmap = local_frame(spark, [], "doc long, cluster long")
+        # contract: endpoint → current cluster (self if unmapped)
+        contracted = (
+            delta
+            .join(cmap.select(F.col("doc").alias("a"),
+                              F.col("cluster").alias("ca")), "a", "left")
+            .join(cmap.select(F.col("doc").alias("b"),
+                              F.col("cluster").alias("cb")), "b", "left")
+            .select(F.coalesce("ca", F.col("a")).alias("s"),
+                    F.coalesce("cb", F.col("b")).alias("d"))
+            .where(F.col("s") != F.col("d"))
+        )
+        # merge mapping over the contracted (delta-sized) graph
+        mapping = (connected_components(contracted, src="s", dst="d")
+                   .select(F.col("v").alias("old_label"),
+                           F.col("label").alias("new_label")))
 
-    relabeled = (
-        cmap.join(F.broadcast(mapping),
-                  cmap.cluster == mapping.old_label, "left")
-        .select("doc", F.coalesce("new_label", "cluster").alias("cluster"))
-    )
-    new_docs = (
-        delta.select(F.col("a").alias("doc"))
-        .unionByName(delta.select(F.col("b").alias("doc")))
-        .distinct()
-        .join(cmap.select("doc"), "doc", "left_anti")
-        .join(F.broadcast(mapping),
-              F.col("doc") == F.col("old_label"), "left")
-        .select("doc", F.coalesce("new_label", F.col("doc"))
-                .alias("cluster"))
-    )
-    _swap_in_state(root, batch_id, relabeled.unionByName(new_docs))
-    return True
+        relabeled = (
+            cmap.join(F.broadcast(mapping),
+                      cmap.cluster == mapping.old_label, "left")
+            .select("doc",
+                    F.coalesce("new_label", "cluster").alias("cluster"))
+        )
+        new_docs = (
+            delta.select(F.col("a").alias("doc"))
+            .unionByName(delta.select(F.col("b").alias("doc")))
+            .distinct()
+            .join(cmap.select("doc"), "doc", "left_anti")
+            .join(F.broadcast(mapping),
+                  F.col("doc") == F.col("old_label"), "left")
+            .select("doc", F.coalesce("new_label", F.col("doc"))
+                    .alias("cluster"))
+        )
+        return relabeled.unionByName(new_docs)
+
+    return _fold_store(spark, os.path.join(state_dir, "clusters"),
+                       batch_id, step)
 
 
 def cluster_map_snapshot(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained (doc, cluster) map — cluster = component min doc
     id, identical to the batch connected-components labels over every
     pair folded so far."""
-    import os
-
-    return spark.read.parquet(os.path.join(state_dir, "clusters", "data"))
+    return spark.read.parquet(
+        _live_dir(os.path.join(state_dir, "clusters")))
 
 
 def stream_cluster_map(pairs: DataFrame, state_dir: str,
@@ -1630,14 +1488,9 @@ def stream_cluster_map(pairs: DataFrame, state_dir: str,
     """Streaming union-find: maintain the near-dup cluster map over a
     (doc_a, doc_b) pair-delta stream (the LSH prober's output) with
     effective exactly-once across restarts and replays."""
-    return (
-        pairs.writeStream
-        .foreachBatch(lambda df, bid: apply_cluster_map_delta(
-            state_dir, df, bid, src=src, dst=dst))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(pairs.writeStream.foreachBatch(
+        lambda df, bid: apply_cluster_map_delta(
+            state_dir, df, bid, src=src, dst=dst)), checkpoint_dir)
 
 
 def apply_centroid_stats_delta(state_dir: str, batch_df: DataFrame,
@@ -1663,10 +1516,8 @@ def apply_centroid_stats_delta(state_dir: str, batch_df: DataFrame,
     à la Sculley, with the stats exact rather than decayed). Because
     everything is integer and SUM-mergeable, the maintained state
     equals the batch recompute over all folded vectors bit-for-bit
-    (pinned in tests/test_streaming.py). Marker + swap + batch-id
-    idempotence as all sibling stores."""
-    import os
-
+    (pinned in tests/test_streaming.py). Each store folds through
+    :func:`_fold_store`."""
     from flight_data_pipeline_spark.operators.vectors import (
         md5_seed_centroids,
         quantized_lloyd_assignment,
@@ -1675,34 +1526,17 @@ def apply_centroid_stats_delta(state_dir: str, batch_df: DataFrame,
     spark = batch_df.sparkSession
     cents = md5_seed_centroids(spark, k, dim)
     assigned = quantized_lloyd_assignment(batch_df, cents)
-    applied = False
-
-    croot = os.path.join(state_dir, "counts")
-    os.makedirs(croot, exist_ok=True)
-    if not _already_applied(croot, batch_id):
-        delta = assigned.groupBy("k").agg(
-            F.count("*").alias("n"), F.sum("d2").alias("inertia"))
-        cdata = os.path.join(croot, "data")
-        if os.path.exists(cdata):
-            delta = (spark.read.parquet(cdata).unionByName(delta)
-                     .groupBy("k").agg(F.sum("n").alias("n"),
-                                       F.sum("inertia").alias("inertia")))
-        _swap_in_state(croot, batch_id, delta)
-        applied = True
-
-    droot = os.path.join(state_dir, "dims")
-    os.makedirs(droot, exist_ok=True)
-    if not _already_applied(droot, batch_id):
-        ddelta = (
-            assigned.select("k", F.posexplode("q").alias("pos", "v"))
-            .groupBy("k", "pos").agg(F.sum("v").alias("s"))
-        )
-        ddata = os.path.join(droot, "data")
-        if os.path.exists(ddata):
-            ddelta = (spark.read.parquet(ddata).unionByName(ddelta)
-                      .groupBy("k", "pos").agg(F.sum("s").alias("s")))
-        _swap_in_state(droot, batch_id, ddelta)
-        applied = True
+    counts = assigned.groupBy("k").agg(
+        F.count("*").alias("n"), F.sum("d2").alias("inertia"))
+    dims = (
+        assigned.select("k", F.posexplode("q").alias("pos", "v"))
+        .groupBy("k", "pos").agg(F.sum("v").alias("s"))
+    )
+    applied = _fold_store(spark, os.path.join(state_dir, "counts"),
+                          batch_id,
+                          _sum_step(counts, ("k",), ("n", "inertia")))
+    applied |= _fold_store(spark, os.path.join(state_dir, "dims"),
+                           batch_id, _sum_step(dims, ("k", "pos"), ("s",)))
     return applied
 
 
@@ -1710,11 +1544,9 @@ def centroid_stats_snapshot(spark: SparkSession,
                             state_dir: str) -> tuple[DataFrame, DataFrame]:
     """(counts, dims) — the maintained per-centroid sufficient stats;
     counts = (k, n, inertia), dims = (k, pos, s)."""
-    import os
-
     return (
-        spark.read.parquet(os.path.join(state_dir, "counts", "data")),
-        spark.read.parquet(os.path.join(state_dir, "dims", "data")),
+        spark.read.parquet(_live_dir(os.path.join(state_dir, "counts"))),
+        spark.read.parquet(_live_dir(os.path.join(state_dir, "dims"))),
     )
 
 
@@ -1723,11 +1555,6 @@ def stream_centroid_stats(vectors: DataFrame, state_dir: str,
                           dim: int = 64) -> StreamingQuery:
     """Streaming k-means sufficient-stats maintenance over a
     (vec_id, embedding) stream with effective exactly-once."""
-    return (
-        vectors.writeStream
-        .foreachBatch(lambda df, bid: apply_centroid_stats_delta(
-            state_dir, df, bid, k=k, dim=dim))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain(vectors.writeStream.foreachBatch(
+        lambda df, bid: apply_centroid_stats_delta(
+            state_dir, df, bid, k=k, dim=dim)), checkpoint_dir)

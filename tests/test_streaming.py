@@ -96,6 +96,39 @@ def test_stream_runs_each_microbatch_plan_once(spark, tmp_path):
     assert got[-1] == ("success", 2) and set(got[:-1]) == {("skipped", 0)}
 
 
+def test_stream_audits_only_microbatches_that_read_input(spark, tmp_path):
+    """A drain runs no watermark-only micro-batch, so each drain audits
+    exactly the runs that read payloads: two fresh payloads give one
+    'success' row, an all-seen payload one 'skipped' row. The session's
+    no-data-batch setting is back once the query has started."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    tele, audit, ckpt = tmp_path / "t", tmp_path / "a", tmp_path / "c"
+
+    def drain():
+        q = stream_telemetry(spark, str(landing), str(tele), str(audit),
+                             str(ckpt))
+        assert spark.conf.get(key) == before
+        q.awaitTermination(120)
+        assert not q.isActive
+        return [p["numInputRows"] for p in q.recentProgress]
+
+    def audits():
+        return sorted((a.status, a.rows_inserted) for a in
+                      AuditSink(spark, str(audit)).read().collect())
+
+    (landing / "p1.json").write_text(payload(14, 0))
+    (landing / "p2.json").write_text(payload(15, 0))
+    assert drain() == [2]
+    assert audits() == [("success", 2)]
+
+    (landing / "p3.json").write_text(payload(14, 30, actual=91))
+    assert drain() == [1]
+    assert audits() == [("skipped", 0), ("success", 2)]
+
+
 def test_stream_flags_but_keeps_invalid_rows(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -1434,6 +1467,89 @@ def test_stream_corpus_intake_incremental_funnel(spark, tmp_path):
     assert {r.doc for r in
             spark.read.parquet(state + "/decisions/data").collect()
             } == {1, 2, 3, 4, 5}
+
+
+def test_corpus_intake_replay_completes_funnel_after_crash(spark, tmp_path):
+    """A crash after the decisions swap but before the funnel swap
+    leaves batch 1 in the decisions table only. Its replay must fold
+    batch 1 into the funnel, leave the decisions alone, and report
+    that a store took the batch: the funnel again equals a recount of
+    the decisions."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from flight_data_pipeline_spark.streaming.pipeline_stream import (
+        apply_corpus_intake_delta,
+    )
+
+    good = ("the quick brown fox jumps over the lazy dog while the "
+            "green forest waits in the quiet morning light today")
+    state = str(tmp_path / "intake")
+    funnel = state + "/funnel"
+    saved = str(tmp_path / "funnel-after-batch-0")
+
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "doc_id long, text string, source string")
+
+    b1 = batch([(3, ("a wholly distinct passage where different animals "
+                     "wander through another valley beneath a red "
+                     "evening sky and nothing repeats the first text"),
+                 "books"),
+                (4, good + " again", "web")])
+    assert apply_corpus_intake_delta(
+        state, batch([(1, good, "web"), (2, "too short", "web")]), 0)
+    shutil.copytree(funnel, saved)
+    assert apply_corpus_intake_delta(state, b1, 1)
+    # the crash: batch 1's funnel swap never happened
+    shutil.rmtree(funnel)
+    shutil.copytree(saved, funnel)
+
+    assert apply_corpus_intake_delta(state, b1, 1) is True
+    decisions = spark.read.parquet(state + "/decisions/data")
+    assert sorted(r.doc for r in decisions.collect()) == [1, 2, 3, 4]
+    recount = {
+        r.source: (r.n, r.d, r.q, r.a)
+        for r in decisions.groupBy("source")
+        .agg(F.count("*").alias("n"),
+             F.sum(F.when(F.col("dup"), 1).otherwise(0)).alias("d"),
+             F.sum(F.when(~F.col("quality_ok"), 1).otherwise(0)).alias("q"),
+             F.sum(F.when(F.col("accepted"), 1).otherwise(0)).alias("a"))
+        .collect()
+    }
+    assert {r.source: (r.n_docs, r.n_dups, r.n_low_quality, r.n_accepted)
+            for r in spark.read.parquet(funnel + "/data").collect()
+            } == recount
+    assert recount == {"web": (3, 1, 1, 1), "books": (1, 0, 0, 1)}
+    assert apply_corpus_intake_delta(state, b1, 1) is False
+
+
+def test_store_swap_and_stream_trigger_only_inside_helpers():
+    # one copy of the store protocol and of the drain: every state
+    # store publishes through _fold_store, every stream starts through
+    # _drain, so no store or stream can drift from the others
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).parent.parent / "flight_data_pipeline_spark"
+    mod = pkg / "streaming" / "pipeline_stream.py"
+    helpers = {
+        n.name: range(n.lineno, n.end_lineno + 1)
+        for n in ast.parse(mod.read_text()).body
+        if isinstance(n, ast.FunctionDef)
+        and n.name in ("_fold_store", "_drain")
+    }
+    offenders = []
+    for py in pkg.rglob("*.py"):
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            for pattern, helper in (("_swap_in_state(", "_fold_store"),
+                                    (".trigger(", "_drain")):
+                if pattern in line and not (py == mod and (
+                        i in helpers.get(helper, ())
+                        or line.startswith("def _swap_in_state("))):
+                    offenders.append(f"{py.relative_to(pkg)}:{i}")
+    assert offenders == []
 
 
 def test_dead_letter_capture_and_reprocess(spark, tmp_path):
